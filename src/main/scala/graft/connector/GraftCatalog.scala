@@ -454,16 +454,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
                 val lag = t.latestOffsets.map { case (b, hi) =>
                   math.max(0L, hi - pinned.getOrElse(b, 0L))
                 }.sum
-                val latestId = p.format match {
-                  case "iceberg" => graft.core.IcebergExport
-                    .currentVersion(p.dir).map(v => s"v$v")
-                  case "delta" => graft.core.DeltaExport
-                    .currentVersion(p.dir).map(_.toString)
-                  case "paimon" => graft.core.PaimonExport
-                    .currentSnapshotId(p.dir).map(_.toString)
-                  case _ => graft.core.HudiExport.currentInstant(p.dir)
-                }
-                Row(true, p.dir, p.format, latestId.orNull,
+                Row(true, p.dir, p.format, fmt.latestVersion(p.dir).orNull,
                   pinnedJson.orNull, Long.box(lag),
                   Long.box(fmt.liveFiles(spark, p.dir).size.toLong),
                   graft.core.LakeMaintenance.exportedAtMillis(p.dir)

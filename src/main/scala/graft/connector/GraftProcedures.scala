@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{AutoPartitionPolicy, AutoPartitionUnit, GraftTable}
+import graft.core.{AutoPartitionPolicy, AutoPartitionUnit, GraftTable, LakeFormatOps}
 
 /** SQL stored procedures for table maintenance (Spark 4 DSv2
   * ProcedureCatalog — the iceberg `CALL catalog.system.…` surface; the
@@ -29,11 +29,9 @@ object GraftProcedures {
 
   val Namespace: Array[String] = Array("system")
 
-  def names: Seq[String] = Seq(
-    "compact", "vacuum_log", "export_snapshot", "export_snapshot_iceberg",
-    "tier_snapshot_iceberg", "export_snapshot_delta", "tier_snapshot_delta",
-    "export_snapshot_paimon", "tier_snapshot_paimon",
-    "export_snapshot_hudi", "tier_snapshot_hudi",
+  def names: Seq[String] = Seq("compact", "vacuum_log", "export_snapshot") ++
+    LakeFormatOps.all.flatMap(f =>
+      Seq(s"export_snapshot_${f.name}", s"tier_snapshot_${f.name}")) ++ Seq(
     "expire_lake_snapshots", "rollback_to_version",
     "rewrite_files", "expire_partitions",
     "maintain_partitions", "maintain_indexes", "maintain_lake", "expire_log",
@@ -47,6 +45,16 @@ object GraftProcedures {
     "register_producer_offsets", "get_producer_offsets",
     "delete_producer_offsets", "recover_producer",
     "rebucket", "suggest_rebucket")
+
+  /** `<prefix><format>` procedure names → the lake format they target:
+    * one export and one tier procedure per [[LakeFormatOps]] face.
+    */
+  private final class LakeProc(prefix: String) {
+    def unapply(name: String): Option[LakeFormatOps] =
+      LakeFormatOps.all.find(f => name == prefix + f.name)
+  }
+  private val ExportLake = new LakeProc("export_snapshot_")
+  private val TierLake = new LakeProc("tier_snapshot_")
 
   /** `'k1=v1;k2=v2'` → pairs (the reference passes variadic
     * 'key','value' pairs; Spark procedure parameters are fixed-arity, so
@@ -181,87 +189,24 @@ object GraftProcedures {
         t.exportSnapshot(dir)
         s"exported current state to $dir (open parquet + _export_manifest.json)"
       })
-      case "export_snapshot_iceberg" => Some(proc(catalog,
-        "export_snapshot_iceberg",
+      case ExportLake(fmt) => Some(proc(catalog, name,
         Seq(in("table", StringType), in("dir", StringType)),
         out("result", StringType)) { (t, row) =>
         // same egress gate as export_snapshot
         val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
         catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
         val dir = row.getUTF8String(1).toString
-        t.exportSnapshot(dir, icebergMetadata = true)
-        s"exported current state to $dir as an Iceberg v2 table " +
-          "(parquet + metadata/v1.metadata.json + Avro manifests)"
+        t.exportSnapshot(dir, Some(fmt.name))
+        s"exported current state to $dir ${fmt.exportShape}"
       })
-      case "tier_snapshot_iceberg" => Some(proc(catalog,
-        "tier_snapshot_iceberg",
+      case TierLake(fmt) => Some(proc(catalog, name,
         Seq(in("table", StringType), in("dir", StringType)),
         out("result", StringType)) { (t, row) =>
         // same egress gate as export_snapshot; repeated calls move only
         // the delta since the last one (incremental lake tiering)
         val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
         catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        t.tierSnapshot(row.getUTF8String(1).toString)
-      })
-      case "export_snapshot_delta" => Some(proc(catalog,
-        "export_snapshot_delta",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        // same egress gate as export_snapshot
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        val dir = row.getUTF8String(1).toString
-        t.exportSnapshot(dir, deltaMetadata = true)
-        s"exported current state to $dir as a Delta table " +
-          "(parquet + _delta_log JSON commits)"
-      })
-      case "tier_snapshot_delta" => Some(proc(catalog,
-        "tier_snapshot_delta",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        t.tierSnapshot(row.getUTF8String(1).toString, format = "delta")
-      })
-      case "export_snapshot_paimon" => Some(proc(catalog,
-        "export_snapshot_paimon",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        // same egress gate as export_snapshot
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        val dir = row.getUTF8String(1).toString
-        t.exportSnapshot(dir, paimonMetadata = true)
-        s"exported current state to $dir as a Paimon table " +
-          "(parquet + snapshot/ JSON + manifest/ Avro)"
-      })
-      case "tier_snapshot_paimon" => Some(proc(catalog,
-        "tier_snapshot_paimon",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        t.tierSnapshot(row.getUTF8String(1).toString, format = "paimon")
-      })
-      case "export_snapshot_hudi" => Some(proc(catalog,
-        "export_snapshot_hudi",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        // same egress gate as export_snapshot
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        val dir = row.getUTF8String(1).toString
-        t.exportSnapshot(dir, hudiMetadata = true)
-        s"exported current state to $dir as a Hudi COW table " +
-          "(parquet + .hoodie/ timeline)"
-      })
-      case "tier_snapshot_hudi" => Some(proc(catalog,
-        "tier_snapshot_hudi",
-        Seq(in("table", StringType), in("dir", StringType)),
-        out("result", StringType)) { (t, row) =>
-        val (tdb, tname) = splitTableName(row.getUTF8String(0).toString)
-        catalog.coreCatalog.authorize("READ", Seq(tdb, tname))
-        t.tierSnapshot(row.getUTF8String(1).toString, format = "hudi")
+        t.tierSnapshot(row.getUTF8String(1).toString, fmt.name)
       })
       case "expire_lake_snapshots" => Some(localProc(catalog,
         "expire_lake_snapshots",
@@ -273,25 +218,11 @@ object GraftProcedures {
         // set_cluster_configs posture
         catalog.coreCatalog.authorize("ALTER", Nil)
         val dir = row.getUTF8String(0).toString
-        val fmt = graft.core.LakeFormatOps.of(row.getUTF8String(2).toString)
+        val fmt = LakeFormatOps.of(row.getUTF8String(2).toString)
         val deleted = fmt.expireHistory(
           org.apache.spark.sql.SparkSession.active, dir, row.getInt(1))
-        val retained = fmt.name match {
-          case "iceberg" => "snapshot(s) " +
-            graft.core.IcebergExport.snapshotIds(dir).mkString(", ")
-          case "delta" => "version(s) " +
-            (graft.core.DeltaExport.earliestVersion(dir).get to
-              graft.core.DeltaExport.currentVersion(dir).get).mkString(", ")
-          case "hudi" => "instant(s) " +
-            graft.core.HudiExport.completedInstants(dir).map(_._1)
-              .mkString(", ")
-          case _ => "snapshot(s) " +
-            (graft.core.PaimonExport.earliestSnapshotId(dir).get to
-              graft.core.PaimonExport.currentSnapshotId(dir).get)
-              .mkString(", ")
-        }
-        Seq(utf8Row(
-          s"expired ${deleted.size} file(s); retained $retained"))
+        Seq(utf8Row(s"expired ${deleted.size} file(s); retained " +
+          s"${fmt.historyNoun}(s) ${fmt.retainedVersions(dir).mkString(", ")}"))
       })
       case "maintain_indexes" => Some(proc(catalog, "maintain_indexes",
         Seq(in("table", StringType)),

@@ -69,10 +69,6 @@ object CommitCoordinators {
     */
   def markNonAtomic(scheme: String): Unit = { extraNonAtomic.add(scheme); () }
 
-  def unmarkNonAtomic(scheme: String): Unit = {
-    extraNonAtomic.remove(scheme); ()
-  }
-
   def isAtomic(scheme: String): Boolean =
     !builtinNonAtomic.contains(scheme) && !extraNonAtomic.contains(scheme)
 }

@@ -11,8 +11,8 @@ import org.json4s.jackson.JsonMethods
   * same way [[IcebergExport]] is built against the Iceberg v2 spec. The
   * reference ships one lake module per format
   * (fluss-lake/fluss-lake-{paimon,iceberg,lance,hudi}) behind a common
-  * tiering service; this engine mirrors that shape with
-  * [[LakeFormatOps]] dispatching between Iceberg and Delta.
+  * tiering service; this engine mirrors that shape with one
+  * [[LakeFormatOps]] face per format.
   *
   * Log layout: `_delta_log/%020d.json`, one JSON action per line.
   * Version 0 carries `protocol` + `metaData` + the initial `add`s; each
@@ -26,7 +26,12 @@ import org.json4s.jackson.JsonMethods
   * serialization format), `partitionValues` are the hive-unescaped
   * string values, and `path` is percent-encoded as a relative URI.
   */
-object DeltaExport {
+object DeltaExport extends LakeFormatOps {
+
+  val name = "delta"
+  val historyNoun = "version"
+  val firstVersionLabel = "log version 0"
+  val exportShape = "as a Delta table (parquet + _delta_log JSON commits)"
 
   private def logDir(dir: String): String = s"$dir/_delta_log"
 
@@ -43,7 +48,7 @@ object DeltaExport {
     */
   private val CheckpointInterval = 10L
 
-  private[core] def withDeltaLock[T](dir: String)(body: => T): T =
+  def withLock[T](dir: String)(body: => T): T =
     LakeLock.withLock(s"${logDir(dir)}/_graft.lock")(body)
 
   private def jsonVersions(dir: String): Seq[Long] = {
@@ -60,7 +65,13 @@ object DeltaExport {
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  /** Earliest JSON commit still present — 0 until [[expireVersions]]
+  def latestVersion(dir: String): Option[String] =
+    currentVersion(dir).map(_.toString)
+
+  def retainedVersions(dir: String): Seq[String] =
+    (earliestVersion(dir).get to currentVersion(dir).get).map(_.toString)
+
+  /** Earliest JSON commit still present — 0 until [[expireHistory]]
     * truncates history, the expiry cutoff afterwards.
     */
   def earliestVersion(dir: String): Option[Long] = {
@@ -70,7 +81,7 @@ object DeltaExport {
 
   /** Checkpoint versions present on disk, ascending (from filenames, not
     * `_last_checkpoint` — replay selection must see mid-history
-    * checkpoints [[expireVersions]] leaves behind).
+    * checkpoints [[expireHistory]] leaves behind).
     */
   private def checkpointVersions(dir: String): Seq[Long] = {
     val ld = logDir(dir)
@@ -87,7 +98,7 @@ object DeltaExport {
     */
   def write(dir: String, schema: StructType, partitionKeys: Seq[String],
       files: Seq[(String, Long)], sourcePath: String,
-      tags: Map[String, String] = Map.empty): Long = withDeltaLock(dir) {
+      tags: Map[String, String] = Map.empty): Long = withLock(dir) {
     require(currentVersion(dir).isEmpty,
       s"$dir already has a Delta log; use commit() to append a version")
     val now = System.currentTimeMillis()
@@ -120,7 +131,7 @@ object DeltaExport {
       sourcePath: String, tags: Map[String, String] = Map.empty,
       checkpointWith: Option[SparkSession] = None,
       knownLive: Option[Set[String]] = None): Long =
-      withDeltaLock(dir) {
+      withLock(dir) {
     currentVersion(dir) match {
       case None =>
         require(removedRels.isEmpty,
@@ -155,6 +166,18 @@ object DeltaExport {
     }
   }
 
+  /** The trait face of [[commit]]: checkpoints at the cadence, and
+    * validates removals against the caller's `priorLive`.
+    */
+  def commit(spark: SparkSession, dir: String, schema: StructType,
+      partitionKeys: Seq[String], added: Seq[(String, Long)],
+      removed: Set[String], sourcePath: String,
+      tags: Map[String, String], priorLive: Seq[String]): Unit = {
+    commit(dir, schema, partitionKeys, added, removed, sourcePath, tags,
+      checkpointWith = Some(spark), knownLive = Some(priorLive.toSet))
+    ()
+  }
+
   /** Dir-relative live data files of the CURRENT version, resolved by
     * log replay the way a Delta reader would (last checkpoint + JSON
     * tail when a session is supplied; full JSON replay otherwise) —
@@ -162,25 +185,15 @@ object DeltaExport {
     */
   def liveFiles(dir: String): Seq[String] = liveFiles(dir, None)
 
+  override def liveFiles(spark: SparkSession, dir: String): Seq[String] =
+    liveFiles(dir, Some(spark))
+
   def liveFiles(dir: String, spark: Option[SparkSession]): Seq[String] =
     replay(dir, spark).live.keys.toSeq.sorted
 
-  /** The current version's data as a DataFrame: live files from the log,
-    * hive partition columns re-attached via basePath — the "Delta reader
-    * lite" that proves the log is self-consistent.
-    */
-  def readLive(spark: SparkSession, dir: String): DataFrame = {
-    val files = liveFiles(dir, Some(spark))
-      .map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    if (files.isEmpty)
-      return LakeFormatOps.emptyRead(spark, dir, "delta")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
-
   /** Dir-relative live files AT a specific version — Delta time travel
     * (`VERSION AS OF`) by replaying the log up to `v`. On an intact log
-    * this is a pure JSON replay; once [[expireVersions]] has truncated
+    * this is a pure JSON replay; once [[expireHistory]] has truncated
     * history, versions at or after the cutoff replay from the cutoff
     * checkpoint (pass a session via the 3-arg overload) and expired
     * versions fail loudly.
@@ -193,43 +206,29 @@ object DeltaExport {
     replayTo(dir, v, spark).live.keys.toSeq.sorted
 
   /** A specific version's data as a DataFrame — tombstoned files stay on
-    * disk until [[expireVersions]] reclaims them, so any RETAINED version
+    * disk until [[expireHistory]] reclaims them, so any RETAINED version
     * reads back exactly; an expired one fails with a clear error.
     */
-  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
-    val files = liveFilesAt(dir, v, Some(spark))
-      .map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
+  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame =
+    readFiles(spark, dir, liveFilesAt(dir, v, Some(spark)))
 
-  /** Expire all but the last `keepLast` versions and DELETE every data
-    * file unreachable from the retained ones — parity with
-    * [[IcebergExport.expireSnapshots]], closing the only unbounded-growth
-    * path a freshness-scheduled Delta tiering loop had (each re-tier of a
-    * PK table tombstones its prior files; without this they live
-    * forever).
+  /** [[expireHistory]] for Delta, closing the only unbounded-growth path
+    * a freshness-scheduled Delta tiering loop had (each re-tier of a PK
+    * table tombstones its prior files; without this they live forever).
     *
     * Protocol shape (delta-io PROTOCOL.md "Checkpoints" + the reference
     * VACUUM posture): a checkpoint is written AT the cutoff version
     * carrying the full replay state (protocol + metaData + live adds), so
     * every retained version remains reconstructible as checkpoint + JSON
     * tail; then JSON commits and checkpoints strictly below the cutoff
-    * are deleted, and finally an idempotent orphan sweep removes data
-    * files no retained version reaches. Metadata-first ordering: a crash
-    * after the checkpoint but before the deletes just leaves extra
-    * history a re-run (any keepLast) cleans; replay never depends on
-    * anything the sweep deletes.
-    *
-    * Returns the dir-relative data files actually deleted. Serialized
-    * against [[commit]] by the Delta lock; O(metadata + one directory
-    * walk), data files never read.
+    * are deleted, and the sweep removes data files no retained version
+    * reaches. Metadata-first ordering: a crash after the checkpoint but
+    * before the deletes just leaves extra history a re-run (any
+    * keepLast) cleans; replay never depends on anything the sweep
+    * deletes.
     */
-  def expireVersions(spark: SparkSession, dir: String,
-      keepLast: Int): Seq[String] = withDeltaLock(dir) {
-    require(keepLast >= 1,
-      s"keepLast must be >= 1 (the current version cannot be expired), " +
-        s"got $keepLast")
+  protected def expireMetadata(spark: SparkSession, dir: String,
+      keepLast: Int): collection.Set[String] = {
     val v = currentVersion(dir).getOrElse(throw new IllegalArgumentException(
       s"$dir has no Delta log (_delta_log/ missing or empty)"))
     val e = earliestVersion(dir).get
@@ -252,11 +251,9 @@ object DeltaExport {
               .count()): JValue))))))
       }
     }
-    // ---- 2. idempotent orphan sweep: a data file is reachable iff it is
-    // live at the earliest retained version or added by a later retained
-    // commit (removes only shrink reachability going forward, so this
-    // union is exact). Dot-prefixed dirs (in-flight staging) and
-    // everything under _delta_log/ are never candidates.
+    // ---- 2. a data file is reachable iff it is live at the earliest
+    // retained version or added by a later retained commit (removes only
+    // shrink reachability going forward, so this union is exact)
     val base = earliestVersion(dir).get
     val reach = collection.mutable.Set[String]()
     reach ++= replayTo(dir, base, Some(spark)).live.keys
@@ -271,23 +268,18 @@ object DeltaExport {
         case _ => ()
       }
     }
-    val toDelete = WarehouseIO.walkFiles(dir)
-      .filter(!_.isDir)
-      .map(en => WarehouseIO.relativize(dir, en.path))
-      .filterNot(r => r.split('/').exists(_.startsWith(".")))
-      .filterNot(r => r.startsWith("_delta_log/"))
-      .filter(_.endsWith(".parquet"))
-      .filterNot(reach.contains)
-      .sorted
-    toDelete.foreach(r => WarehouseIO.deleteIfExists(s"$dir/$r"))
-    toDelete
+    reach
   }
+
+  /** Everything under _delta_log/ is metadata, never a candidate. */
+  protected def sweepable(rel: String): Boolean =
+    !rel.startsWith("_delta_log/") && rel.endsWith(".parquet")
 
   /** `commitInfo.tags` of the LATEST version (the Iceberg snapshot-
     * summary analog — [[GraftTable.tierSnapshot]] pins its offset window
     * here). Empty when the dir has no Delta log.
     */
-  def lastCommitTags(dir: String): Map[String, String] =
+  def committedTierTags(dir: String): Map[String, String] =
     currentVersion(dir).map { v =>
       actionsOf(dir, v).flatMap {
         case JObject(fields) => fields.toMap.get("commitInfo")
@@ -320,7 +312,7 @@ object DeltaExport {
 
   /** Replay up to (and including) version `upTo`. On an intact log
     * (earliest JSON = 0) a checkpoint is a perf shortcut taken only when
-    * a session can read it; on a truncated log ([[expireVersions]] ran)
+    * a session can read it; on a truncated log ([[expireHistory]] ran)
     * the cutoff checkpoint is REQUIRED — replay of an expired version,
     * or a checkpoint replay without a session, fails loudly.
     */
@@ -339,11 +331,11 @@ object DeltaExport {
       if (earliest == 0) { if (spark.isDefined) usable.lastOption else None }
       else {
         if (usable.isEmpty) throw new IllegalArgumentException(
-          s"version $upTo of $dir has been expired by expireVersions " +
+          s"version $upTo of $dir has been expired by expireHistory " +
             s"(earliest readable version is ${checkpointVersions(dir)
               .filter(_ + 1 >= earliest).headOption.getOrElse(earliest)})")
         if (spark.isEmpty) throw new IllegalStateException(
-          s"$dir's Delta log was truncated by expireVersions; replaying " +
+          s"$dir's Delta log was truncated by expireHistory; replaying " +
             s"version $upTo needs the checkpoint at version ${usable.last} " +
             "— pass a SparkSession")
         Some(usable.last)
@@ -484,7 +476,7 @@ object DeltaExport {
     WarehouseIO.moveFile(part.head.path, checkpointFile(dir, v))
     WarehouseIO.deleteRecursively(tmpDir)
     // _last_checkpoint names the NEWEST checkpoint; a cutoff checkpoint
-    // written mid-history by expireVersions must not regress it past a
+    // written mid-history by expireHistory must not regress it past a
     // later cadence checkpoint
     if (lastCheckpointVersion(dir).forall(_ <= v))
       CatalogJson.atomicWrite(s"${logDir(dir)}/_last_checkpoint",
@@ -529,31 +521,14 @@ object DeltaExport {
        else List("tags" -> (JObject(tags.toList.sortBy(_._1)
          .map { case (k, s) => k -> (JString(s): JValue) }): JValue))))))
 
-  /** Publish version `v` with put-if-absent semantics: write a unique
-    * temp, then a no-overwrite move — two writers racing the same
-    * version surface as a loud conflict, per the protocol's atomicity
+  /** Publish version `v` put-if-absent, the protocol's atomicity
     * requirement.
     */
-  private def publish(dir: String, v: Long, actions: Seq[JValue]): Unit = {
-    val target = versionFile(dir, v)
-    val tmp = s"$target.tmp-${java.util.UUID.randomUUID()}"
-    WarehouseIO.mkdirs(logDir(dir))
-    WarehouseIO.rawPutBytes(tmp, actions
-      .map(a => JsonMethods.compact(JsonMethods.render(a)))
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // local path throws FileAlreadyExistsException; the Hadoop path's
-    // failed no-overwrite rename surfaces as a generic IOException — in
-    // either case an existing target means a concurrent writer won
-    try WarehouseIO.moveFile(tmp, target)
-    catch {
-      case e: java.io.IOException => // FileAlreadyExistsException included
-        WarehouseIO.deleteIfExists(tmp)
-        if (WarehouseIO.exists(target))
-          throw new java.util.ConcurrentModificationException(
-            s"Delta version $v already committed at $dir (concurrent writer)", e)
-        throw e
-    }
-  }
+  private def publish(dir: String, v: Long, actions: Seq[JValue]): Unit =
+    LakeFormatOps.publishIfAbsent(versionFile(dir, v),
+      actions.map(a => JsonMethods.compact(JsonMethods.render(a)))
+        .mkString("\n"),
+      s"Delta version $v already committed at $dir")
 
   /** Percent-encode a dir-relative path as the protocol requires;
     * hive-escaped segments ('%XX') round-trip because '%' encodes to

@@ -128,8 +128,6 @@ final case class TableDescriptor(
     if (bucketKeys.nonEmpty) bucketKeys
     else primaryKey.filterNot(partitionKeys.contains)
 
-  def dataColumns: Seq[String] = schema.fieldNames.toSeq
-
   require(primaryKey.forall(schema.fieldNames.contains),
     s"primary key $primaryKey not in schema")
   require(partitionKeys.forall(schema.fieldNames.contains),

@@ -1646,14 +1646,16 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * One distributed write, partitioned like the table; per-partition
     * parallelism is the table's own layout, nothing lands on the driver
     * but the file listing.
+    *
+    * `lake` optionally names a lake format ("iceberg", "delta", "paimon"
+    * or "hudi", [[LakeFormatOps]]) whose metadata is written over the
+    * export, so it is a TABLE to any engine reading that format. Opt-in
+    * because the extra metadata makes the export no longer readable as a
+    * bare parquet directory (Spark's parquet source trips over the
+    * non-parquet files).
     */
-  def exportSnapshot(dir: String, icebergMetadata: Boolean = false,
-      deltaMetadata: Boolean = false,
-      paimonMetadata: Boolean = false,
-      hudiMetadata: Boolean = false): Unit = {
-    require(Seq(icebergMetadata, deltaMetadata, paimonMetadata,
-      hudiMetadata).count(identity) <= 1,
-      "pick ONE lake metadata format per export directory")
+  def exportSnapshot(dir: String, lake: Option[String] = None): Unit = {
+    val fmt = lake.map(LakeFormatOps.of)
     // Layout choice, pinned here for the export's LIFETIME (tiers read it
     // back from the manifest): bucket-aligned keeps the table's own
     // `__bucket=N/` dirs — incremental PK tiers then rewrite only changed
@@ -1739,47 +1741,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val files = WarehouseIO.walkFiles(dir)
       .filter(e => !e.isDir && e.name.endsWith(".parquet"))
       .sortBy(_.path)
-    writeExportManifest(dir, pinnedOffsets, version,
-      files.map(e => WarehouseIO.relativize(dir, e.path) -> e.len),
-      bucketAligned)
-    // Optional Iceberg-spec metadata (metadata/v1.metadata.json + Avro
-    // manifests + version-hint) so the export is a TABLE to any
-    // Iceberg-reading engine. Opt-in because the extra metadata/ dir
-    // makes the export no longer readable as a bare parquet directory
-    // (Spark's parquet source trips over the non-parquet files).
-    if (icebergMetadata) {
-      IcebergExport.write(spark, dir, tierSchema, tierKeys,
-        files.map(e => WarehouseIO.relativize(dir, e.path) -> e.len),
-        path, summaryExtra = tierSummary(pinnedOffsets, version))
-      ()
-    }
-    // Delta-protocol alternative: _delta_log JSON commits instead of
-    // Iceberg Avro manifests — the export is then a Delta TABLE to any
-    // Delta-reading engine (PROTOCOL.md; see DeltaExport)
-    if (deltaMetadata) {
-      DeltaExport.write(dir, tierSchema, tierKeys,
-        files.map(e => WarehouseIO.relativize(dir, e.path) -> e.len),
-        path, tags = tierSummary(pinnedOffsets, version))
-      ()
-    }
-    // Paimon-spec alternative: snapshot/ JSON + manifest/ Avro + schema/
-    // — the reference's primary lake format (fluss-lake-paimon; see
-    // PaimonExport)
-    if (paimonMetadata) {
-      PaimonExport.write(dir, tierSchema, tierKeys,
-        files.map(e => WarehouseIO.relativize(dir, e.path) -> e.len),
-        path, tags = tierSummary(pinnedOffsets, version))
-      ()
-    }
-    // Hudi COW alternative: a .hoodie/ timeline instead of Iceberg Avro
-    // manifests — the export is then a Hudi TABLE shape (fluss-lake/
-    // fluss-lake-hudi; see HudiExport)
-    if (hudiMetadata) {
-      HudiExport.write(dir, tierSchema, tierKeys,
-        files.map(e => WarehouseIO.relativize(dir, e.path) -> e.len),
-        path, tags = tierSummary(pinnedOffsets, version))
-      ()
-    }
+      .map(e => WarehouseIO.relativize(dir, e.path) -> e.len)
+    writeExportManifest(dir, pinnedOffsets, version, files, bucketAligned)
+    fmt.foreach(_.commit(spark, dir, tierSchema, tierKeys, files, Set.empty,
+      path, tierSummary(pinnedOffsets, version), priorLive = Nil))
     GraftMetrics.inc(path, GraftMetrics.Exports)
   }
 
@@ -1881,11 +1846,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * readable (expire/vacuum of the lake history is the lake catalog's
     * job, as in Iceberg itself); a tiered directory is a LAKE surface —
     * readers must resolve files through the metadata, never by listing
-    * (`IcebergExport.readLive` / `DeltaExport.readLive` are the built-in
-    * readers).
+    * ([[LakeFormatOps.readLive]] is the built-in reader).
     *
-    * `format` picks the metadata layout — "iceberg" (default), "delta"
-    * or "paimon" ([[LakeFormatOps]]; the reference ships one
+    * `format` picks the metadata layout — "iceberg" (default), "delta",
+    * "paimon" or "hudi" ([[LakeFormatOps]]; the reference ships one
     * fluss-lake-* module per format behind the same tiering service).
     * Everything below the commit call is format-independent.
     *
@@ -1898,22 +1862,11 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val fmt = LakeFormatOps.of(format)
     val emPath = s"$dir/_export_manifest.json"
     if (!WarehouseIO.exists(emPath)) {
-      exportSnapshot(dir, icebergMetadata = fmt.name == "iceberg",
-        deltaMetadata = fmt.name == "delta",
-        paimonMetadata = fmt.name == "paimon",
-        hudiMetadata = fmt.name == "hudi")
+      exportSnapshot(dir, Some(fmt.name))
       val n = WarehouseIO.walkFiles(dir)
         .count(e => !e.isDir && e.name.endsWith(".parquet"))
-      // iceberg's first metadata file is v1; delta's first log version
-      // is 0; paimon's first snapshot is 1; hudi's is its first
-      // timeline instant
-      val v = fmt.name match {
-        case "delta" => "log version 0"
-        case "paimon" => "snapshot 1"
-        case "hudi" => "timeline instant 1"
-        case _ => "metadata v1"
-      }
-      return s"initial full export: $n data files, ${fmt.name} $v"
+      return s"initial full export: $n data files, ${fmt.name} " +
+        fmt.firstVersionLabel
     }
     require(fmt.hasMetadata(dir),
       s"$dir has an export manifest but no ${fmt.name} metadata; " +

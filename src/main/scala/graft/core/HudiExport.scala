@@ -30,7 +30,7 @@ import org.json4s.jackson.JsonMethods
   *     action's legacy extension-less inflight), and
   *     `<instant>.replacecommit.{requested,inflight}`.
   *   - `.hoodie/archived/` — instants moved out of the active timeline
-  *     by [[expireInstants]], plus the compacted replay base
+  *     by [[expireHistory]], plus the compacted replay base
   *     (`state.json`).
   *
   * Live-set resolution replays the ACTIVE timeline in instant order
@@ -49,7 +49,12 @@ import org.json4s.jackson.JsonMethods
   * base rather than Hudi's Avro archive logs. Both are loud in the
   * metadata, not silent drift.
   */
-object HudiExport {
+object HudiExport extends LakeFormatOps {
+
+  val name = "hudi"
+  val historyNoun = "instant"
+  val firstVersionLabel = "timeline instant 1"
+  val exportShape = "as a Hudi COW table (parquet + .hoodie/ timeline)"
 
   private val CommitUser = "graft-tiering"
 
@@ -62,7 +67,7 @@ object HudiExport {
   private def archivedDir(dir: String) = s"${hoodieDir(dir)}/archived"
   private def stateFile(dir: String) = s"${archivedDir(dir)}/state.json"
 
-  private[core] def withHudiLock[T](dir: String)(body: => T): T =
+  def withLock[T](dir: String)(body: => T): T =
     LakeLock.withLock(s"${hoodieDir(dir)}/_graft.lock")(body)
 
   private val InstantFmt =
@@ -82,6 +87,11 @@ object HudiExport {
   def currentInstant(dir: String): Option[String] =
     completedInstants(dir).lastOption.map(_._1)
 
+  def latestVersion(dir: String): Option[String] = currentInstant(dir)
+
+  def retainedVersions(dir: String): Seq[String] =
+    completedInstants(dir).map(_._1)
+
   /** Earliest instant still in the active timeline (time-travel floor). */
   def earliestInstant(dir: String): Option[String] =
     completedInstants(dir).headOption.map(_._1)
@@ -91,7 +101,7 @@ object HudiExport {
     */
   def write(dir: String, schema: StructType, partitionKeys: Seq[String],
       files: Seq[(String, Long)], sourcePath: String,
-      tags: Map[String, String] = Map.empty): String = withHudiLock(dir) {
+      tags: Map[String, String] = Map.empty): String = withLock(dir) {
     require(currentInstant(dir).isEmpty,
       s"$dir already has Hudi metadata; use commit() to append an instant")
     writeTableProperties(dir, schema, partitionKeys, sourcePath)
@@ -109,7 +119,7 @@ object HudiExport {
   def commit(dir: String, schema: StructType, partitionKeys: Seq[String],
       added: Seq[(String, Long)], removed: Set[String],
       sourcePath: String, tags: Map[String, String] = Map.empty): String =
-      withHudiLock(dir) {
+      withLock(dir) {
     currentInstant(dir) match {
       case None =>
         require(removed.isEmpty,
@@ -129,6 +139,19 @@ object HudiExport {
         commitInstant(dir, added, replaced,
           tags + (SourceProp -> sourcePath))
     }
+  }
+
+  /** The trait face of [[commit]]. `priorLive` carries paths but the
+    * replacecommit needs the replaced file groups' fileIds; the
+    * re-resolution inside is one timeline replay under the same
+    * re-entrant lock.
+    */
+  def commit(spark: SparkSession, dir: String, schema: StructType,
+      partitionKeys: Seq[String], added: Seq[(String, Long)],
+      removed: Set[String], sourcePath: String,
+      tags: Map[String, String], priorLive: Seq[String]): Unit = {
+    commit(dir, schema, partitionKeys, added, removed, sourcePath, tags)
+    ()
   }
 
   /** Dir-relative live data files of the CURRENT instant, resolved by
@@ -156,7 +179,7 @@ object HudiExport {
     requireMetadata(dir)
     // an instant strictly below the compacted base's asOf is rejected
     // even when its file still sits in the ACTIVE timeline (the
-    // expireInstants crash window between the base publish and the
+    // expireHistory crash window between the base publish and the
     // archive moves): liveEntries applies no instants when
     // upTo <= asOf, so replay would silently return the base's NEWER
     // live set for it. AT asOf the base IS the state as of that
@@ -165,19 +188,19 @@ object HudiExport {
     if (baseAsOf(dir).contains(instant)) {
       // AT the base's asOf the base IS that instant's exact state — but
       // it is only READABLE while the instant still sits in the ACTIVE
-      // timeline (the expireInstants crash window between the base
+      // timeline (the expireHistory crash window between the base
       // publish and the archive moves: the orphan sweep runs after the
       // moves, so the base's files are still on disk). After a
       // COMPLETED expiry the sweep may have deleted files only the base
       // references (the retained replay chain removes them) — refuse.
       if (active.contains(instant)) return
       throw new IllegalArgumentException(
-        s"instant $instant of $dir has been archived by expireInstants " +
+        s"instant $instant of $dir has been archived by expireHistory " +
           s"(compacted base covers through ${baseAsOf(dir).get})")
     }
     if (baseAsOf(dir).exists(instant < _))
       throw new IllegalArgumentException(
-        s"instant $instant of $dir has been archived by expireInstants " +
+        s"instant $instant of $dir has been archived by expireHistory " +
           s"(compacted base covers through ${baseAsOf(dir).get})")
     if (!active.contains(instant))
       throw new IllegalArgumentException(
@@ -185,55 +208,36 @@ object HudiExport {
           s"(latest is ${active.last})")
   }
 
-  /** The current state as a DataFrame, files from the timeline, hive
-    * partition columns re-attached via basePath.
-    */
-  def readLive(spark: SparkSession, dir: String): DataFrame = {
-    val files = liveFiles(dir).map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    if (files.isEmpty)
-      return LakeFormatOps.emptyRead(spark, dir, "hudi")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
-
   /** A specific retained instant's state — the time-travel counterpart
     * of [[readLive]].
     */
   def readInstant(spark: SparkSession, dir: String,
-      instant: String): DataFrame = {
-    val files = liveFilesAt(dir, instant)
-      .map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
+      instant: String): DataFrame =
+    readFiles(spark, dir, liveFilesAt(dir, instant))
 
   /** The LATEST completed instant's `extraMetadata` — where tier
     * bookkeeping rides (the reference's HudiLakeCommitter.java:114
     * attaches snapshotProperties the same way and reads them back at
     * :210). Empty when the dir has no Hudi metadata.
     */
-  def lastCommitExtraMetadata(dir: String): Map[String, String] =
+  def committedTierTags(dir: String): Map[String, String] =
     completedInstants(dir).lastOption.map { case (ts, action) =>
       parseInstant(dir, ts, action)._3
     }.getOrElse(Map.empty)
 
-  /** Archive all but the last `keepLast` completed instants and DELETE
-    * every data file unreachable from the retained ones — the same
-    * bounded-history contract as the other three formats' expiry.
-    * Archived instants compact into ONE replay base
-    * (`archived/state.json`, the live set as of the newest archived
+  /** [[expireHistory]] for Hudi: all but the last `keepLast` completed
+    * instants are archived; every data file unreachable from the
+    * retained ones is swept. Archived instants compact into ONE replay
+    * base (`archived/state.json`, the live set as of the newest archived
     * instant) so active-timeline replay stays bounded no matter how many
     * tiers have run; the instant files themselves move under
     * `archived/` for audit. Write order is crash-safe: the new base is
     * published FIRST, and replay only applies active instants NEWER than
     * the base's asOf — a crash between the base write and the moves
-    * double-counts nothing. Returns the dir-relative data files deleted.
+    * double-counts nothing.
     */
-  def expireInstants(dir: String, keepLast: Int): Seq[String] =
-      withHudiLock(dir) {
-    require(keepLast >= 1,
-      s"keepLast must be >= 1 (the current instant cannot be expired), " +
-        s"got $keepLast")
+  protected def expireMetadata(spark: SparkSession, dir: String,
+      keepLast: Int): collection.Set[String] = {
     requireMetadata(dir)
     val active = completedInstants(dir)
     val toArchive = active.dropRight(keepLast)
@@ -261,22 +265,12 @@ object HudiExport {
         }
       }
     }
-    // idempotent orphan sweep: every data file some retained instant
-    // reaches stays; every other *.parquet goes. Dot-prefixed dirs
-    // (.hoodie, in-flight tier staging) are never candidates.
-    val retained = completedInstants(dir)
-    val keep = retained.map(_._1)
+    // every data file some retained instant reaches stays
+    completedInstants(dir).map(_._1)
       .flatMap(ts => liveEntries(dir, Some(ts)).values.map(_._1)).toSet
-    val toDelete = WarehouseIO.walkFiles(dir)
-      .filter(!_.isDir)
-      .map(e => WarehouseIO.relativize(dir, e.path))
-      .filterNot(r => r.split('/').exists(_.startsWith(".")))
-      .filter(_.endsWith(".parquet"))
-      .filterNot(keep.contains)
-      .sorted
-    toDelete.foreach(r => WarehouseIO.deleteIfExists(s"$dir/$r"))
-    toDelete
   }
+
+  protected def sweepable(rel: String): Boolean = rel.endsWith(".parquet")
 
   // -------------------------------------------------------------------
   // timeline replay
@@ -421,31 +415,11 @@ object HudiExport {
       if (action == "commit") s"$ts.inflight" else s"$ts.$action.inflight"
     WarehouseIO.rawPutBytes(
       s"${hoodieDir(dir)}/$inflight", Array.emptyByteArray)
-    publishInstant(dir, s"$ts.$action",
-      JsonMethods.pretty(JsonMethods.render(body)))
+    // completed timeline files are immutable in Hudi: put-if-absent
+    LakeFormatOps.publishIfAbsent(s"${hoodieDir(dir)}/$ts.$action",
+      JsonMethods.pretty(JsonMethods.render(body)),
+      s"Hudi instant $ts.$action already committed at $dir")
     ts
-  }
-
-  /** Publish a completed instant with put-if-absent semantics (unique
-    * temp + no-overwrite move) — completed timeline files are immutable
-    * in Hudi; a concurrent writer racing the same instant loses loudly.
-    */
-  private def publishInstant(dir: String, name: String,
-      content: String): Unit = {
-    val target = s"${hoodieDir(dir)}/$name"
-    val tmp = s"$target.tmp-${java.util.UUID.randomUUID()}"
-    WarehouseIO.rawPutBytes(tmp,
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try WarehouseIO.moveFile(tmp, target)
-    catch {
-      case e: java.io.IOException =>
-        WarehouseIO.deleteIfExists(tmp)
-        if (WarehouseIO.exists(target))
-          throw new java.util.ConcurrentModificationException(
-            s"Hudi instant $name already committed at $dir " +
-              s"(concurrent writer)", e)
-        throw e
-    }
   }
 
   // -------------------------------------------------------------------

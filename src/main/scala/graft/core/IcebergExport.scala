@@ -1,12 +1,10 @@
 package graft.core
 
-import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayInput}
+import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -44,11 +42,13 @@ import org.json4s.jackson.JsonMethods
   *    replaced files, and ADDED entries (MergeAppend). Old snapshots
   *    keep their own manifest lists, so time travel stays intact.
   */
-object IcebergExport {
+object IcebergExport extends LakeFormatOps {
 
-  /** Result of one metadata commit. */
-  final case class SnapshotResult(snapshotId: Long, sequenceNumber: Long,
-      metadataVersion: Int)
+  val name = "iceberg"
+  val historyNoun = "snapshot"
+  val firstVersionLabel = "metadata v1"
+  val exportShape = "as an Iceberg v2 table " +
+    "(parquet + metadata/v1.metadata.json + Avro manifests)"
 
   private val EntryAdded = 1
   private val EntryExisting = 0
@@ -58,32 +58,21 @@ object IcebergExport {
   // public API
   // ---------------------------------------------------------------------
 
-  /** Initial export: write Iceberg metadata v1 for `files` (path → size)
-    * under `dir`. Partition values are recovered from the hive-style
-    * directory names [[GraftTable.exportSnapshot]] produced; per-file
-    * record counts and column bounds come from the parquet footers
-    * (metadata-sized IO — no data read).
-    */
-  def write(spark: SparkSession, dir: String, schema: StructType,
-      partitionKeys: Seq[String], files: Seq[(String, Long)],
-      sourcePath: String,
-      summaryExtra: Map[String, String] = Map.empty): SnapshotResult = {
-    require(currentVersion(dir).isEmpty,
-      s"$dir already has Iceberg metadata; use commit() to append a snapshot")
-    commit(spark, dir, schema, partitionKeys, files, Set.empty, sourcePath,
-      summaryExtra)
-  }
-
   /** Append one snapshot to `dir`'s Iceberg table: `addedFiles`
     * (dir-relative path → size) become ADDED entries, `removedRels`
     * become DELETED tombstones, every other previously-live file stays
-    * EXISTING. First call on a fresh dir writes metadata v1.
+    * EXISTING; `summaryExtra` lands in the snapshot summary. First call
+    * on a fresh dir writes metadata v1. Partition values are recovered
+    * from the hive-style directory names [[GraftTable.exportSnapshot]]
+    * produced; per-file record counts and column bounds come from the
+    * parquet footers (metadata-sized IO — no data read). The live set is
+    * re-resolved from the metadata, so `priorLive` is unused.
     */
   def commit(spark: SparkSession, dir: String, schema: StructType,
       partitionKeys: Seq[String], addedFiles: Seq[(String, Long)],
       removedRels: Set[String], sourcePath: String,
-      summaryExtra: Map[String, String] = Map.empty): SnapshotResult =
-      withLakeLock(dir) {
+      summaryExtra: Map[String, String], priorLive: Seq[String]): Unit =
+      withLock(dir) {
     val now = System.currentTimeMillis()
     // & MaxValue, not math.abs: abs(Long.MinValue) is negative
     val snapshotId = (java.util.UUID.randomUUID()
@@ -324,8 +313,8 @@ object IcebergExport {
           removed.map(rekey(_, EntryDeleted, Some(snapshotId))) ++
           addedEntries
         val rel = s"metadata/$commitUuid-m0.avro"
-        val len = writeAvro(s"$dir/$rel", manifestEntrySchema, manifestMeta,
-          entries)
+        val len = LakeFormatOps.writeAvro(s"$dir/$rel", manifestEntrySchema,
+          entries, manifestMeta)
         Seq(manifestFileRecord(s"$qualifiedDir/$rel", len, snapshotId, seq,
           minSeq = 1L,
           added = addedEntries.size, existing = kept.size,
@@ -337,12 +326,11 @@ object IcebergExport {
         // pure append: carry the previous manifests forward untouched and
         // add ONE manifest with the new entries — O(delta) metadata work
         val carried = prev.toSeq.flatMap { case (_, p) =>
-          readAvroRecords(stripToIo(p.manifestListPath))._1
-            .map(reManifestFile(_))
+          LakeFormatOps.readAvro(p.manifestListPath).map(reManifestFile(_))
         }
         val rel = s"metadata/$commitUuid-m0.avro"
-        val len = writeAvro(s"$dir/$rel", manifestEntrySchema, manifestMeta,
-          addedEntries)
+        val len = LakeFormatOps.writeAvro(s"$dir/$rel", manifestEntrySchema,
+          addedEntries, manifestMeta)
         manifestFileRecord(s"$qualifiedDir/$rel", len, snapshotId, seq,
           minSeq = 1L, added = addedEntries.size, existing = 0, deleted = 0,
           addedRows = addedRows, existingRows = 0L, deletedRows = 0L) +:
@@ -350,12 +338,12 @@ object IcebergExport {
     }
 
     val listRel = s"metadata/snap-$snapshotId-1-$commitUuid.avro"
-    writeAvro(s"$dir/$listRel", manifestFileSchema,
+    LakeFormatOps.writeAvro(s"$dir/$listRel", manifestFileSchema,
+      manifestFileRecords,
       Seq("format-version" -> "2", "snapshot-id" -> snapshotId.toString,
         "sequence-number" -> seq.toString,
         "parent-snapshot-id" -> prev.map(_._2.currentSnapshotId.toString)
-          .getOrElse("null")),
-      manifestFileRecords)
+          .getOrElse("null")))
 
     // ---- table metadata vN + version hint ----
     val operation = if (removedRels.nonEmpty) "overwrite" else "append"
@@ -413,11 +401,10 @@ object IcebergExport {
       JsonMethods.pretty(JsonMethods.render(metadata)))
     CatalogJson.atomicWrite(s"$dir/metadata/version-hint.text",
       metadataVersion.toString)
-    SnapshotResult(snapshotId, seq, metadataVersion)
   }
 
   /** Serialize the lake dir's metadata read-modify-write cycles
-    * ([[commit]] vs [[expireSnapshots]] — both read version-hint and
+    * ([[commit]] vs [[expireHistory]] — both read version-hint and
     * write v+1): without this, an expire racing a slow tier commit can
     * resurrect expired snapshots whose files are already deleted, or
     * silently drop the tier's snapshot. Same posture as the table-level
@@ -430,7 +417,7 @@ object IcebergExport {
     * yet-committed files). Mechanics (heartbeat, stale-breaking,
     * re-entrancy) live in the format-shared [[LakeLock]].
     */
-  private[core] def withLakeLock[T](dir: String)(body: => T): T =
+  def withLock[T](dir: String)(body: => T): T =
     LakeLock.withLock(s"$dir/metadata/_lake.lock")(body)
 
   /** Dir-relative live data files of `dir`'s CURRENT Iceberg snapshot,
@@ -446,26 +433,13 @@ object IcebergExport {
     priorLiveEntries(p).map(relOf(_, WarehouseIO.qualify(dir))).sorted
   }
 
-  /** The current snapshot's data as a DataFrame: live files from the
-    * metadata, hive partition columns re-attached via basePath. The
-    * "Iceberg reader lite" that proves the metadata is self-consistent
-    * (and what [[graft.SparkEntry]]'s tiering oracle reads through).
-    */
-  def readLive(spark: SparkSession, dir: String): DataFrame = {
-    val files = liveFiles(dir).map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    if (files.isEmpty)
-      return LakeFormatOps.emptyRead(spark, dir, "iceberg")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
-
   /** The CURRENT snapshot's summary map (operation, counters, and any
     * `summaryExtra` the committer recorded — [[GraftTable.tierSnapshot]]
     * pins its offset window here so a crash between the Iceberg commit
     * and the export-manifest update is detectable and rolled forward).
     * Empty when the dir has no Iceberg metadata.
     */
-  def currentSnapshotSummary(dir: String): Map[String, String] =
+  def committedTierTags(dir: String): Map[String, String] =
     currentVersion(dir).map { v =>
       val p = parseMetadata(dir, v)
       p.snapshotsJson.map(_.asInstanceOf[JObject].obj.toMap)
@@ -475,6 +449,12 @@ object IcebergExport {
           o.obj.collect { case (k, JString(s)) => k -> s }.toMap
         }.getOrElse(Map.empty)
     }.getOrElse(Map.empty)
+
+  def latestVersion(dir: String): Option[String] =
+    currentVersion(dir).map(v => s"v$v")
+
+  def retainedVersions(dir: String): Seq[String] =
+    snapshotIds(dir).map(_.toString)
 
   /** Snapshot ids still present in the table metadata, oldest first. */
   def snapshotIds(dir: String): Seq[Long] =
@@ -505,35 +485,18 @@ object IcebergExport {
     * counterpart of [[readLive]].
     */
   def readSnapshot(spark: SparkSession, dir: String,
-      snapshotId: Long): DataFrame = {
-    val files = liveFilesAt(dir, snapshotId)
-      .map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
+      snapshotId: Long): DataFrame =
+    readFiles(spark, dir, liveFilesAt(dir, snapshotId))
 
-  /** Expire all but the last `keepLast` snapshots from `dir`'s Iceberg
-    * table and DELETE every data file, manifest, and manifest list
-    * unreachable from the retained ones — the engine is the lake catalog
-    * for its own exports, so without this a freshness-scheduled tiering
-    * loop grows the lake monotonically (Iceberg's `expireSnapshots`
-    * posture: history is bounded by policy, the current snapshot is
-    * never expirable). Metadata advances one version with only the
-    * retained snapshots; reading an expired snapshot id afterwards
-    * fails loudly ([[liveFilesAt]]).
-    *
-    * Returns the dir-relative paths actually deleted. Metadata advances
-    * FIRST, then an idempotent orphan sweep deletes whatever the current
-    * metadata no longer reaches — so a crash anywhere leaves either the
-    * old metadata (nothing lost) or the new one plus orphans a RE-RUN
-    * (any keepLast) fully cleans. Serialized against [[commit]] by the
-    * lake lock; O(metadata + one directory walk), data files never read.
+  /** Iceberg's `expireSnapshots` posture ([[expireHistory]]): history is
+    * bounded by policy, the current snapshot is never expirable.
+    * Metadata advances one version with only the retained snapshots;
+    * reading an expired snapshot id afterwards fails loudly
+    * ([[liveFilesAt]]). Every data file, manifest and manifest list
+    * unreachable from the retained snapshots is swept.
     */
-  def expireSnapshots(dir: String, keepLast: Int): Seq[String] =
-      withLakeLock(dir) {
-    require(keepLast >= 1,
-      s"keepLast must be >= 1 (the current snapshot cannot be expired), " +
-        s"got $keepLast")
+  protected def expireMetadata(spark: SparkSession, dir: String,
+      keepLast: Int): collection.Set[String] = {
     val v = currentVersion(dir).getOrElse(throw new IllegalArgumentException(
       s"$dir has no Iceberg metadata (metadata/version-hint.text missing)"))
     val md = JsonMethods.parse(WarehouseIO.readString(
@@ -576,18 +539,14 @@ object IcebergExport {
           (v + 1).toString)
         kept
       }
-    // ---- 2. idempotent orphan sweep against the (new) current metadata:
-    // every manifest list, manifest, and data file the retained snapshots
-    // reach stays; every other metadata/*.avro and *.parquet data file
-    // goes (incl. residue of a crashed earlier expire or a tier that died
-    // between publish and commit). Shared manifests are read once
-    // (memoized) — linear in distinct files, not snapshots × manifests.
-    // Dot-prefixed dirs (in-flight tier staging) and non-Avro metadata
-    // (metadata.json versions, version-hint, the lock) are never
-    // candidates.
+    // ---- 2. what the retained snapshots reach: every manifest list,
+    // manifest, and live data file (the sweep then takes the residue of
+    // a crashed earlier expire or a tier that died between publish and
+    // commit too). Shared manifests are read once (memoized) — linear
+    // in distinct files, not snapshots × manifests.
     val manifestCache = collection.mutable.Map[String, Seq[GenericRecord]]()
     def manifests(path: String): Seq[GenericRecord] =
-      manifestCache.getOrElseUpdate(path, readAvroRecords(stripToIo(path))._1)
+      manifestCache.getOrElseUpdate(path, LakeFormatOps.readAvro(path))
     val keep = collection.mutable.Set[String]()
     retained.foreach { s =>
       val listPath = s.asInstanceOf[JObject].obj.toMap
@@ -601,17 +560,15 @@ object IcebergExport {
           .foreach(e => keep += relOf(e, qualifiedDir))
       }
     }
-    val toDelete = WarehouseIO.walkFiles(dir)
-      .filter(!_.isDir)
-      .map(e => WarehouseIO.relativize(dir, e.path))
-      .filterNot(r => r.split('/').exists(_.startsWith(".")))
-      .filter(r => r.endsWith(".parquet") ||
-        (r.startsWith("metadata/") && r.endsWith(".avro")))
-      .filterNot(keep.contains)
-      .sorted
-    toDelete.foreach(r => WarehouseIO.deleteIfExists(s"$dir/$r"))
-    toDelete
+    keep
   }
+
+  /** Non-Avro metadata (metadata.json versions, version-hint, the lock)
+    * is never a candidate.
+    */
+  protected def sweepable(rel: String): Boolean =
+    rel.endsWith(".parquet") ||
+      (rel.startsWith("metadata/") && rel.endsWith(".avro"))
 
   // ---------------------------------------------------------------------
   // internals
@@ -675,8 +632,8 @@ object IcebergExport {
     * [[priorLiveEntries]], [[liveFilesAt]] and [[liveFiles]] share.
     */
   private def liveEntriesOf(manifestListPath: String): Seq[GenericRecord] =
-    readAvroRecords(stripToIo(manifestListPath))._1.flatMap { mf =>
-      readAvroRecords(stripToIo(mf.get("manifest_path").toString))._1
+    LakeFormatOps.readAvro(manifestListPath).flatMap { mf =>
+      LakeFormatOps.readAvro(mf.get("manifest_path").toString)
     }.filter(_.get("status").asInstanceOf[Int] != EntryDeleted)
 
   private def relOf(entry: GenericRecord, qualifiedDir: String): String = {
@@ -691,41 +648,10 @@ object IcebergExport {
     entry.get("data_file").asInstanceOf[GenericRecord]
       .get("record_count").asInstanceOf[Long]
 
-  /** Absolute metadata paths are written qualified; WarehouseIO reads
-    * them as-is.
-    */
-  private def stripToIo(p: String): String = p
-
   private def nonNull(s: Schema): Schema =
     if (s.getType == Schema.Type.UNION)
       s.getTypes.stream.filter(_.getType != Schema.Type.NULL).findFirst.get
     else s
-
-  private def readAvroRecords(path: String)
-      : (Seq[GenericRecord], Map[String, String]) = {
-    val in = new SeekableByteArrayInput(WarehouseIO.readBytes(path))
-    val r = new DataFileReader[GenericRecord](in,
-      new GenericDatumReader[GenericRecord]())
-    try {
-      import scala.jdk.CollectionConverters._
-      val meta = r.getMetaKeys.asScala.toSeq.filterNot(_.startsWith("avro."))
-        .map(k => k -> r.getMetaString(k)).toMap
-      (r.iterator().asScala.toVector, meta)
-    } finally r.close()
-  }
-
-  private def writeAvro(path: String, sch: Schema,
-      meta: Seq[(String, String)], records: Seq[GenericRecord]): Long = {
-    val baos = new ByteArrayOutputStream()
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sch))
-    meta.foreach { case (k, v) => w.setMeta(k, v) }
-    w.create(sch, baos)
-    records.foreach(w.append)
-    w.close()
-    val bytes = baos.toByteArray
-    WarehouseIO.rawPutBytes(path, bytes)
-    bytes.length.toLong
-  }
 
   // ---- avro schemas (field-id props are what make them Iceberg) ----
 

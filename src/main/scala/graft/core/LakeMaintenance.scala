@@ -31,8 +31,7 @@ import org.json4s.jackson.JsonMethods
   *
   * The tick composes the two primitives that already exist — incremental
   * [[GraftTable.tierSnapshot]] (O(changed data)) and the format's
-  * [[LakeFormatOps.expireHistory]] ([[IcebergExport.expireSnapshots]] /
-  * [[DeltaExport.expireVersions]], O(metadata + one walk)) — so a
+  * [[LakeFormatOps.expireHistory]] (O(metadata + one walk)) — so a
   * freshness-scheduled tiering loop no longer grows the lake
   * monotonically: history beyond keep-last is reclaimed in the same tick
   * that produced it.

@@ -1,10 +1,7 @@
 package graft.core
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter, SeekableByteArrayInput}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.generic.{GenericData, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -40,7 +37,13 @@ import org.json4s.jackson.JsonMethods
   * the utf8 hive path prefix (`dt=a`) rather than a serialized
   * BinaryRow. Both are loud in the metadata, not silent drift.
   */
-object PaimonExport {
+object PaimonExport extends LakeFormatOps {
+
+  val name = "paimon"
+  val historyNoun = "snapshot"
+  val firstVersionLabel = "snapshot 1"
+  val exportShape =
+    "as a Paimon table (parquet + snapshot/ JSON + manifest/ Avro)"
 
   private val CommitUser = "graft-tiering"
 
@@ -57,7 +60,7 @@ object PaimonExport {
   private def snapshotFile(dir: String, id: Long) =
     s"${snapshotDir(dir)}/snapshot-$id"
 
-  private[core] def withPaimonLock[T](dir: String)(body: => T): T =
+  def withLock[T](dir: String)(body: => T): T =
     LakeLock.withLock(s"${snapshotDir(dir)}/_graft.lock")(body)
 
   /** Latest committed snapshot id (ids start at 1), None when `dir` has
@@ -67,7 +70,13 @@ object PaimonExport {
     WarehouseIO.readStringIfExists(s"${snapshotDir(dir)}/LATEST")
       .map(_.trim.toLong)
 
-  /** Earliest retained snapshot id — 1 until [[expireSnapshots]] raises
+  def latestVersion(dir: String): Option[String] =
+    currentSnapshotId(dir).map(_.toString)
+
+  def retainedVersions(dir: String): Seq[String] =
+    (earliestSnapshotId(dir).get to currentSnapshotId(dir).get).map(_.toString)
+
+  /** Earliest retained snapshot id — 1 until [[expireHistory]] raises
     * it.
     */
   def earliestSnapshotId(dir: String): Option[Long] =
@@ -80,7 +89,7 @@ object PaimonExport {
     */
   def write(dir: String, schema: StructType, partitionKeys: Seq[String],
       files: Seq[(String, Long)], sourcePath: String,
-      tags: Map[String, String] = Map.empty): Long = withPaimonLock(dir) {
+      tags: Map[String, String] = Map.empty): Long = withLock(dir) {
     require(currentSnapshotId(dir).isEmpty,
       s"$dir already has Paimon metadata; use commit() to append a snapshot")
     writeSchemaFile(dir, schema, partitionKeys)
@@ -94,14 +103,12 @@ object PaimonExport {
   /** Append one snapshot: `added` become ADD entries, `removed` DELETE
     * entries (validated against the live set) in the delta manifest
     * list; the prior full state becomes the base. First call on a fresh
-    * dir delegates to [[write]]. `knownLive` lets a caller that just
-    * resolved the live set under THIS lock skip a second resolution.
+    * dir delegates to [[write]].
     */
   def commit(dir: String, schema: StructType, partitionKeys: Seq[String],
       added: Seq[(String, Long)], removed: Set[String],
-      sourcePath: String, tags: Map[String, String] = Map.empty,
-      knownLive: Option[Map[String, Long]] = None): Long =
-      withPaimonLock(dir) {
+      sourcePath: String, tags: Map[String, String] = Map.empty): Long =
+      withLock(dir) {
     currentSnapshotId(dir) match {
       case None =>
         require(removed.isEmpty,
@@ -109,7 +116,7 @@ object PaimonExport {
             s"to remove them from (asked to remove ${removed.size} file(s))")
         write(dir, schema, partitionKeys, added, sourcePath, tags)
       case Some(n) =>
-        val live = knownLive.getOrElse(entriesAt(dir, n))
+        val live = entriesAt(dir, n)
         val missing = removed.filterNot(live.contains)
         require(missing.isEmpty,
           s"cannot remove file(s) not live in $dir's current snapshot: " +
@@ -118,6 +125,18 @@ object PaimonExport {
           tags + (SourceProp -> sourcePath))
         n + 1
     }
+  }
+
+  /** The trait face of [[commit]]. `priorLive` carries no sizes and the
+    * base manifest needs them; the re-resolution inside is one Avro read
+    * under the same re-entrant lock.
+    */
+  def commit(spark: SparkSession, dir: String, schema: StructType,
+      partitionKeys: Seq[String], added: Seq[(String, Long)],
+      removed: Set[String], sourcePath: String,
+      tags: Map[String, String], priorLive: Seq[String]): Unit = {
+    commit(dir, schema, partitionKeys, added, removed, sourcePath, tags)
+    ()
   }
 
   /** Dir-relative live data files of the CURRENT snapshot, resolved
@@ -144,67 +163,45 @@ object PaimonExport {
     require(id <= latest,
       s"snapshot $id does not exist at $dir (latest is $latest)")
     require(id >= earliest,
-      s"snapshot $id of $dir has been expired by expireSnapshots " +
+      s"snapshot $id of $dir has been expired by expireHistory " +
         s"(earliest retained snapshot is $earliest)")
     id
-  }
-
-  /** The current snapshot's data as a DataFrame, files from the
-    * metadata, hive partition columns re-attached via basePath.
-    */
-  def readLive(spark: SparkSession, dir: String): DataFrame = {
-    val files = liveFiles(dir).map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    if (files.isEmpty)
-      return LakeFormatOps.emptyRead(spark, dir, "paimon")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
   }
 
   /** A specific retained snapshot's data — the time-travel counterpart
     * of [[readLive]].
     */
-  def readSnapshot(spark: SparkSession, dir: String, id: Long): DataFrame = {
-    val files = liveFilesAt(dir, id)
-      .map(r => s"${WarehouseIO.qualify(dir)}/$r")
-    spark.read.option("basePath", WarehouseIO.qualify(dir))
-      .parquet(files: _*)
-  }
+  def readSnapshot(spark: SparkSession, dir: String, id: Long): DataFrame =
+    readFiles(spark, dir, liveFilesAt(dir, id))
 
   /** The LATEST snapshot's `properties` map — where tier bookkeeping
     * rides (the reference's PaimonLakeCommitter.commit adds its
     * snapshotProperties through ManifestCommittable the same way).
     * Empty when the dir has no Paimon metadata.
     */
-  def lastSnapshotProperties(dir: String): Map[String, String] =
+  def committedTierTags(dir: String): Map[String, String] =
     currentSnapshotId(dir).map { id =>
       parseSnapshot(dir, id)._4
     }.getOrElse(Map.empty)
 
   /** Dir-relative manifest lists + manifests snapshot `id` references —
-    * the metadata reachability set [[expireSnapshots]] retains.
+    * the metadata reachability set [[expireHistory]] retains.
     */
   private[core] def manifestFilesAt(dir: String, id: Long): Seq[String] = {
     val (base, delta, _, _) = parseSnapshot(dir, id)
     Seq(base, delta).flatMap { listName =>
       s"manifest/$listName" +:
-        readAvroRecords(s"${manifestDir(dir)}/$listName")
+        LakeFormatOps.readAvro(s"${manifestDir(dir)}/$listName")
           .map(mf => s"manifest/${mf.get("_FILE_NAME")}")
     }.distinct
   }
 
-  /** Expire all but the last `keepLast` snapshots and DELETE every data
-    * file and manifest unreachable from the retained ones — the same
-    * bounded-history contract as [[IcebergExport.expireSnapshots]] /
-    * [[DeltaExport.expireVersions]]. Metadata advances FIRST (EARLIEST
-    * hint, then snapshot files), then an idempotent orphan sweep; a
-    * crash leaves extra history a re-run cleans. Returns the
-    * dir-relative files deleted.
+  /** [[expireHistory]] for Paimon: the EARLIEST hint advances, then the
+    * expired snapshot files go; every data file and manifest unreachable
+    * from the retained snapshots is swept.
     */
-  def expireSnapshots(dir: String, keepLast: Int): Seq[String] =
-      withPaimonLock(dir) {
-    require(keepLast >= 1,
-      s"keepLast must be >= 1 (the current snapshot cannot be expired), " +
-        s"got $keepLast")
+  protected def expireMetadata(spark: SparkSession, dir: String,
+      keepLast: Int): collection.Set[String] = {
     val latest = currentSnapshotId(dir).getOrElse(
       throw new IllegalArgumentException(
         s"$dir has no Paimon metadata (snapshot/LATEST missing)"))
@@ -226,11 +223,8 @@ object PaimonExport {
         case _ => ()
       }
     }
-    // idempotent orphan sweep: every manifest list, manifest, and data
-    // file a retained snapshot reaches stays; every other manifest/
-    // entry and *.parquet data file goes. Dot-prefixed dirs (in-flight
-    // tier staging) and snapshot/ + schema/ metadata are never
-    // candidates. Shared manifests are read once.
+    // every manifest list, manifest, and data file a retained snapshot
+    // reaches stays. Shared manifests are read once.
     val manifestCache = collection.mutable.Map[String, Seq[GenericRecord]]()
     val keep = collection.mutable.Set[String]()
     (cutoff to latest).foreach { id =>
@@ -242,12 +236,12 @@ object PaimonExport {
       Seq(base, delta).foreach { listName =>
         keep += s"manifest/$listName"
         manifestCache.getOrElseUpdate(listName,
-          readAvroRecords(s"${manifestDir(dir)}/$listName"))
+          LakeFormatOps.readAvro(s"${manifestDir(dir)}/$listName"))
           .foreach { mf =>
             val mName = mf.get("_FILE_NAME").toString
             keep += s"manifest/$mName"
             manifestCache.getOrElseUpdate(mName,
-              readAvroRecords(s"${manifestDir(dir)}/$mName"))
+              LakeFormatOps.readAvro(s"${manifestDir(dir)}/$mName"))
               .foreach { e =>
                 val rel = e.get("_FILE").asInstanceOf[GenericRecord]
                   .get("_FILE_NAME").toString
@@ -258,17 +252,13 @@ object PaimonExport {
       }
       keep ++= live
     }
-    val toDelete = WarehouseIO.walkFiles(dir)
-      .filter(!_.isDir)
-      .map(e => WarehouseIO.relativize(dir, e.path))
-      .filterNot(r => r.split('/').exists(_.startsWith(".")))
-      .filterNot(r => r.startsWith("snapshot/") || r.startsWith("schema/"))
-      .filter(r => r.endsWith(".parquet") || r.startsWith("manifest/"))
-      .filterNot(keep.contains)
-      .sorted
-    toDelete.foreach(r => WarehouseIO.deleteIfExists(s"$dir/$r"))
-    toDelete
+    keep
   }
+
+  /** snapshot/ + schema/ metadata is never a candidate. */
+  protected def sweepable(rel: String): Boolean =
+    !rel.startsWith("snapshot/") && !rel.startsWith("schema/") &&
+      (rel.endsWith(".parquet") || rel.startsWith("manifest/"))
 
   // -------------------------------------------------------------------
   // snapshot JSON
@@ -296,8 +286,8 @@ object PaimonExport {
     val (base, delta, _, _) = parseSnapshot(dir, id)
     val live = collection.mutable.LinkedHashMap[String, Long]()
     Seq(base, delta).foreach { listName =>
-      readAvroRecords(s"${manifestDir(dir)}/$listName").foreach { mf =>
-        readAvroRecords(
+      LakeFormatOps.readAvro(s"${manifestDir(dir)}/$listName").foreach { mf =>
+        LakeFormatOps.readAvro(
             s"${manifestDir(dir)}/${mf.get("_FILE_NAME")}").foreach { e =>
           val file = e.get("_FILE").asInstanceOf[GenericRecord]
           val rel = file.get("_FILE_NAME").toString
@@ -364,32 +354,12 @@ object PaimonExport {
       (if (tags.isEmpty) Nil
        else List("properties" -> (JObject(tags.toList.sortBy(_._1)
          .map { case (k, v) => k -> (JString(v): JValue) }): JValue))))
-    publishSnapshot(dir, id, JsonMethods.pretty(JsonMethods.render(snap)))
+    // put-if-absent: the atomicity Paimon requires of snapshot files
+    LakeFormatOps.publishIfAbsent(snapshotFile(dir, id),
+      JsonMethods.pretty(JsonMethods.render(snap)),
+      s"Paimon snapshot $id already committed at $dir")
     WarehouseIO.atomicWriteString(
       s"${snapshotDir(dir)}/LATEST", id.toString)
-  }
-
-  /** Publish `snapshot-<id>` with put-if-absent semantics (unique temp +
-    * no-overwrite move) — the atomicity Paimon requires of snapshot
-    * files; a concurrent writer racing the same id loses loudly.
-    */
-  private def publishSnapshot(dir: String, id: Long,
-      content: String): Unit = {
-    val target = snapshotFile(dir, id)
-    val tmp = s"$target.tmp-${java.util.UUID.randomUUID()}"
-    WarehouseIO.mkdirs(snapshotDir(dir))
-    WarehouseIO.rawPutBytes(tmp,
-      content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try WarehouseIO.moveFile(tmp, target)
-    catch {
-      case e: java.io.IOException =>
-        WarehouseIO.deleteIfExists(tmp)
-        if (WarehouseIO.exists(target))
-          throw new java.util.ConcurrentModificationException(
-            s"Paimon snapshot $id already committed at $dir " +
-              s"(concurrent writer)", e)
-        throw e
-    }
   }
 
   // -------------------------------------------------------------------
@@ -433,7 +403,8 @@ object PaimonExport {
   private def writeManifest(dir: String, name: String,
       entries: Seq[(Int, String, Long)]): Long = {
     val fileSchema = ManifestEntrySchema.getField("_FILE").schema()
-    writeAvro(s"${manifestDir(dir)}/$name", ManifestEntrySchema,
+    LakeFormatOps.writeAvro(s"${manifestDir(dir)}/$name",
+      ManifestEntrySchema,
       entries.map { case (kind, rel, size) =>
         val file = new GenericData.Record(fileSchema)
         file.put("_FILE_NAME", rel)
@@ -454,7 +425,8 @@ object PaimonExport {
 
   private def writeManifestList(dir: String, name: String,
       manifests: Seq[(String, Long, Long, Long)]): Unit = {
-    writeAvro(s"${manifestDir(dir)}/$name", ManifestFileMetaSchema,
+    LakeFormatOps.writeAvro(s"${manifestDir(dir)}/$name",
+      ManifestFileMetaSchema,
       manifests.map { case (mName, mLen, nAdded, nDeleted) =>
         val r = new GenericData.Record(ManifestFileMetaSchema)
         r.put("_FILE_NAME", mName)
@@ -466,28 +438,6 @@ object PaimonExport {
         r
       })
     ()
-  }
-
-  private def writeAvro(path: String, sch: Schema,
-      records: Seq[GenericRecord]): Long = {
-    val baos = new ByteArrayOutputStream()
-    val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sch))
-    w.create(sch, baos)
-    records.foreach(w.append)
-    w.close()
-    val bytes = baos.toByteArray
-    WarehouseIO.rawPutBytes(path, bytes)
-    bytes.length.toLong
-  }
-
-  private def readAvroRecords(path: String): Seq[GenericRecord] = {
-    val in = new SeekableByteArrayInput(WarehouseIO.readBytes(path))
-    val r = new DataFileReader[GenericRecord](in,
-      new GenericDatumReader[GenericRecord]())
-    try {
-      import scala.jdk.CollectionConverters._
-      r.iterator().asScala.toVector
-    } finally r.close()
   }
 
   // -------------------------------------------------------------------

@@ -34,13 +34,6 @@ final class SecondaryIndex private[core] (val table: GraftTable,
   /** Base-table version the index reflects (0 = nothing applied). */
   def appliedVersion: Long = readApplied()._1
 
-  /** Base-table [[GraftTable.rollbackEpoch]] the index was built
-    * against: version numbers are REUSED after an in-place restore, so
-    * the version alone cannot prove the index reflects the current
-    * timeline.
-    */
-  def appliedEpoch: Long = readApplied()._2
-
   /** (appliedVersion, epoch) in ONE meta-file read — the guard sits on
     * the latency-sensitive point-lookup path.
     */

@@ -220,7 +220,8 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * allocation churn on the LSH prescreen's candidate stream. Identical
   * semantics for the signature tables (equal-length non-null arrays);
   * for unequal lengths both forms count agreements up to the shorter
-  * array (zip_with pads with null, null === x is null, filter drops it).
+  * array (zip_with pads with null, null === x is null, filter drops it),
+  * and a position where either element is null never counts.
   */
 case class SigAgreeCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -234,7 +235,8 @@ case class SigAgreeCount(left: Expression, right: Expression)
     val n = math.min(x.numElements(), y.numElements())
     var i = 0; var c = 0
     while (i < n) {
-      if (x.getLong(i) == y.getLong(i)) c += 1
+      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i))
+        c += 1
       i += 1
     }
     c
@@ -248,7 +250,8 @@ case class SigAgreeCount(left: Expression, right: Expression)
         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
         |int $i = 0; int $c = 0;
         |while ($i < $n) {
-        |  if ($a.getLong($i) == $b.getLong($i)) { $c++; }
+        |  if (!$a.isNullAt($i) && !$b.isNullAt($i) &&
+        |      $a.getLong($i) == $b.getLong($i)) { $c++; }
         |  $i++;
         |}
         |${ev.value} = $c;
@@ -284,6 +287,11 @@ case class SigAgreeCount(left: Expression, right: Expression)
   */
 case class JaccardGeCoeff(left: Expression, right: Expression,
     threshold: Double) extends BinaryExpression {
+
+  // the threshold is spliced into generated Java as a literal: NaN or
+  // Infinity would print as an identifier that does not compile
+  require(!threshold.isNaN && !threshold.isInfinite,
+    s"graft_jaccard_ge threshold must be finite, got $threshold")
 
   override def dataType: DataType = org.apache.spark.sql.types.DoubleType
   override def prettyName: String = "graft_jaccard_ge"

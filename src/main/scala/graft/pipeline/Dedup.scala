@@ -327,15 +327,9 @@ object Dedup {
     * `(a_i * h + b_i) mod p` over xxhash64 shingle hashes (the standard
     * universal-hash construction). Deterministic seed.
     *
-    * Returns (id, sig array<long>[numHashes]).
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      n: Int, numHashes: Int, seed: Long = 42L): DataFrame =
-    minhashSignaturesFromDocs(hashedShingleDocs(df, idCol, textCol, n),
-      numHashes, seed)
-
-  /** Same, over a pre-built [[hashedShingleDocs]] table (the xxhash64
-    * shingle hash doubles as the universal-hash input).
+    * Returns (id, sig array<long>[numHashes]), over a pre-built
+    * [[hashedShingleDocs]] table (the xxhash64 shingle hash doubles as
+    * the universal-hash input).
     *
     * One codegen'd pass per document ([[graft.functions.MinHashSig]]):
     * the explode → k-column min-aggregate formulation walks every

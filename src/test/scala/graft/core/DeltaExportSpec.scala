@@ -91,13 +91,13 @@ class DeltaExportSpec extends SparkTestBase {
     assert(got == Seq(("a", 1L, 2), ("b", 1L, 10)))
 
     // tier offsets ride commitInfo.tags (crash roll-forward bookkeeping)
-    val tags = DeltaExport.lastCommitTags(out)
+    val tags = DeltaExport.committedTierTags(out)
     assert(tags.contains(GraftTable.TierOffsetsKey))
-    t.requireTierBase(LakeFormatOps.Delta, out, JsonMethods
+    t.requireTierBase(DeltaExport, out, JsonMethods
       .parse(tags(GraftTable.TierOffsetsKey)).asInstanceOf[JObject].obj
       .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap)
     intercept[java.util.ConcurrentModificationException](
-      t.requireTierBase(LakeFormatOps.Delta, out, Map(0 -> 0L)))
+      t.requireTierBase(DeltaExport, out, Map(0 -> 0L)))
 
     // idle tier is a no-op; offsets unchanged
     assert(t.tierSnapshot(out, format = "delta").contains("already current"))
@@ -127,7 +127,7 @@ class DeltaExportSpec extends SparkTestBase {
       StructType(Seq(StructField("k", LongType),
         StructField("ord", LongType)))), orderBy = Seq(col("ord")))
     val out = Files.createTempDirectory("graft-delta2-out").toString
-    t.exportSnapshot(out, deltaMetadata = true)
+    t.exportSnapshot(out, lake = Some("delta"))
     // a concurrent lake-metadata holder makes the commit fail loudly
     // (the lock is the primary serialization; the no-overwrite version
     // publish is the backstop beneath it)
@@ -198,7 +198,7 @@ class DeltaExportSpec extends SparkTestBase {
     assert(dataOnDisk().size > DeltaExport.liveFiles(out, Some(spark)).size,
       "precondition: tombstoned files from v0/v1 on disk")
 
-    val deleted = DeltaExport.expireVersions(spark, out, keepLast = 1)
+    val deleted = DeltaExport.expireHistory(spark, out, keepLast = 1)
     assert(deleted.nonEmpty)
     // all tombstoned files reclaimed; the live set reads back exactly
     assert(dataOnDisk() == DeltaExport.liveFiles(out, Some(spark)).toSet)
@@ -225,7 +225,7 @@ class DeltaExportSpec extends SparkTestBase {
     val ns = intercept[IllegalStateException](DeltaExport.liveFiles(out))
     assert(ns.getMessage.contains("pass a SparkSession"), ns.getMessage)
     // expiry is idempotent and the table still tiers afterwards
-    assert(DeltaExport.expireVersions(spark, out, keepLast = 1).isEmpty)
+    assert(DeltaExport.expireHistory(spark, out, keepLast = 1).isEmpty)
     rows(t, 30L, ("b", 1L, 40))
     assert(t.tierSnapshot(out, format = "delta")
       .contains("tiered overwrite snapshot"))
@@ -249,7 +249,7 @@ class DeltaExportSpec extends SparkTestBase {
     }
     // keep 3 -> cutoff 10, exactly the cadence checkpoint: no new
     // checkpoint needed, JSON 0..9 go, f0..f9 reclaimed
-    val del1 = DeltaExport.expireVersions(spark, dir, keepLast = 3)
+    val del1 = DeltaExport.expireHistory(spark, dir, keepLast = 3)
     assert(del1 == (0 to 9).map(i => s"f$i.parquet"))
     assert(DeltaExport.earliestVersion(dir).contains(10L))
     assert(DeltaExport.liveFilesAt(dir, 10L, Some(spark)) ==
@@ -257,7 +257,7 @@ class DeltaExportSpec extends SparkTestBase {
     assert(DeltaExport.liveFiles(dir, Some(spark)) == Seq("f12.parquet"))
     // keep 2 -> cutoff 11: a NEW checkpoint at 11 is written, the v10
     // one is deleted, _last_checkpoint advances to 11
-    val del2 = DeltaExport.expireVersions(spark, dir, keepLast = 2)
+    val del2 = DeltaExport.expireHistory(spark, dir, keepLast = 2)
     assert(del2 == Seq("f10.parquet"))
     assert(!WarehouseIO.exists(
       f"$dir/_delta_log/${10L}%020d.checkpoint.parquet"))
@@ -269,8 +269,8 @@ class DeltaExportSpec extends SparkTestBase {
       Seq("f11.parquet"))
     assert(DeltaExport.liveFiles(dir, Some(spark)) == Seq("f12.parquet"))
     // keeping more than history is a no-op
-    assert(DeltaExport.expireVersions(spark, dir, keepLast = 99).isEmpty)
+    assert(DeltaExport.expireHistory(spark, dir, keepLast = 99).isEmpty)
     intercept[IllegalArgumentException](
-      DeltaExport.expireVersions(spark, dir, keepLast = 0))
+      DeltaExport.expireHistory(spark, dir, keepLast = 0))
   }
 }

@@ -58,7 +58,7 @@ class HudiExportSpec extends SparkTestBase {
     assert(props.contains("hoodie.table.partition.fields=dt"), props)
     // tier offsets ride extraMetadata (the reference's
     // HudiLakeCommitter.java:114 posture), with provenance
-    val tags = HudiExport.lastCommitExtraMetadata(out)
+    val tags = HudiExport.committedTierTags(out)
     assert(tags.contains(GraftTable.TierOffsetsKey), tags)
     assert(tags.get(HudiExport.SourceProp).contains(t.path), tags)
     assert(tags.get("commit-user").contains("graft-tiering"), tags)
@@ -88,12 +88,12 @@ class HudiExportSpec extends SparkTestBase {
     assert(got == Seq(("a", 1L, 2), ("b", 1L, 10)))
 
     // crash roll-forward bookkeeping round-trips through extraMetadata
-    t.requireTierBase(LakeFormatOps.Hudi, out, JsonMethods
-      .parse(HudiExport.lastCommitExtraMetadata(out)(
+    t.requireTierBase(HudiExport, out, JsonMethods
+      .parse(HudiExport.committedTierTags(out)(
         GraftTable.TierOffsetsKey)).asInstanceOf[JObject].obj
       .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap)
     intercept[java.util.ConcurrentModificationException](
-      t.requireTierBase(LakeFormatOps.Hudi, out, Map(0 -> 0L)))
+      t.requireTierBase(HudiExport, out, Map(0 -> 0L)))
 
     // idle tier is a no-op
     assert(t.tierSnapshot(out, format = "hudi").contains("already current"))
@@ -158,7 +158,7 @@ class HudiExportSpec extends SparkTestBase {
     assert(HudiExport.completedInstants(dir).size == 5)
     // keep 2 -> last two instants retained; f0..f2 unreachable (f3 is
     // live at the 4th instant, f4 at the 5th)
-    val deleted = HudiExport.expireInstants(dir, keepLast = 2)
+    val deleted = HudiExport.expireHistory(spark, dir, keepLast = 2)
     assert(deleted == Seq("f0.parquet", "f1.parquet", "f2.parquet"), deleted)
     val retained = HudiExport.completedInstants(dir)
     assert(retained.size == 2)
@@ -171,10 +171,10 @@ class HudiExportSpec extends SparkTestBase {
       HudiExport.liveFilesAt(dir, all.head))
     assert(exp.getMessage.contains("archived"), exp.getMessage)
     // idempotent; keeping more than history is a no-op
-    assert(HudiExport.expireInstants(dir, keepLast = 2).isEmpty)
-    assert(HudiExport.expireInstants(dir, keepLast = 99).isEmpty)
+    assert(HudiExport.expireHistory(spark, dir, keepLast = 2).isEmpty)
+    assert(HudiExport.expireHistory(spark, dir, keepLast = 99).isEmpty)
     intercept[IllegalArgumentException](
-      HudiExport.expireInstants(dir, keepLast = 0))
+      HudiExport.expireHistory(spark, dir, keepLast = 0))
     // history continues past an expiry: replay = compacted base + the
     // active tail, so a new commit still resolves correctly
     touchData(5)

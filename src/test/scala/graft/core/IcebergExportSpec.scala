@@ -62,7 +62,7 @@ class IcebergExportSpec extends SparkTestBase {
       orderBy = Seq(col("ord")))
 
     val out = Files.createTempDirectory("graft-iceberg-out").toString
-    t.exportSnapshot(out, icebergMetadata = true)
+    t.exportSnapshot(out, lake = Some("iceberg"))
 
     // version hint + table metadata
     assert(WarehouseIO.readString(s"$out/metadata/version-hint.text") == "1")
@@ -150,7 +150,7 @@ class IcebergExportSpec extends SparkTestBase {
       StructType(schema.fields :+ StructField("ord", LongType))),
       orderBy = Seq(col("ord")))
     val out = Files.createTempDirectory("graft-iceberg-bounds").toString
-    t.exportSnapshot(out, icebergMetadata = true)
+    t.exportSnapshot(out, lake = Some("iceberg"))
     val md = JsonMethods.parse(
       WarehouseIO.readString(s"$out/metadata/v1.metadata.json"))
       .asInstanceOf[JObject].obj.toMap
@@ -197,7 +197,7 @@ class IcebergExportSpec extends SparkTestBase {
       StructType(schema.fields :+ StructField("ord", LongType))),
       orderBy = Seq(col("ord")))
     val out = Files.createTempDirectory("graft-iceberg-plus").toString
-    t.exportSnapshot(out, icebergMetadata = true)
+    t.exportSnapshot(out, lake = Some("iceberg"))
     val md = JsonMethods.parse(
       WarehouseIO.readString(s"$out/metadata/v1.metadata.json"))
       .asInstanceOf[JObject].obj.toMap
@@ -353,7 +353,7 @@ class IcebergExportSpec extends SparkTestBase {
         "table.datalake.layout.min-bucket-bytes" -> "0")))
     pinned.upsert(rows(0L), orderBy = Seq(col("ord")))
     val outPin = Files.createTempDirectory("graft-layout-p").toString
-    pinned.exportSnapshot(outPin, icebergMetadata = true)
+    pinned.exportSnapshot(outPin, lake = Some("iceberg"))
     assert(IcebergExport.liveFiles(outPin).forall(!_.contains("__bucket=")))
   }
 
@@ -460,7 +460,7 @@ class IcebergExportSpec extends SparkTestBase {
     assert(WarehouseIO.createExclusive(s"$out/metadata/_lake.lock"))
     try {
       intercept[java.util.ConcurrentModificationException](
-        IcebergExport.expireSnapshots(out, 1))
+        IcebergExport.expireHistory(spark, out, 1))
       t.append(spark.createDataFrame(
         Seq(Row(2L, Int.box(2), 1L)).asJava,
         StructType(schema.fields :+ StructField("ord", LongType))),
@@ -469,7 +469,7 @@ class IcebergExportSpec extends SparkTestBase {
     } finally WarehouseIO.deleteIfExists(s"$out/metadata/_lake.lock")
     // released → both proceed
     assert(t.tierSnapshot(out).contains("tiered append snapshot"))
-    assert(IcebergExport.expireSnapshots(out, 1).nonEmpty)
+    assert(IcebergExport.expireHistory(spark, out, 1).nonEmpty)
     assert(IcebergExport.readLive(spark, out).count() == 2)
   }
 
@@ -487,22 +487,22 @@ class IcebergExportSpec extends SparkTestBase {
     val out = Files.createTempDirectory("graft-reent-out").toString
     // nested acquisition on the same thread runs the body (tierSnapshot
     // wraps publish -> commit in one lock; commit re-acquires inside)
-    assert(IcebergExport.withLakeLock(out + "-probe") {
-      IcebergExport.withLakeLock(out + "-probe") { 42 }
+    assert(IcebergExport.withLock(out + "-probe") {
+      IcebergExport.withLock(out + "-probe") { 42 }
     } == 42)
     assert(!WarehouseIO.exists(s"$out-probe/metadata/_lake.lock"))
     t.tierSnapshot(out)
     // the committed summary offsets ARE the valid base; any other base
     // means a concurrent tier advanced the lake first -> loud abort
-    val committed = IcebergExport.currentSnapshotSummary(out)(
+    val committed = IcebergExport.committedTierTags(out)(
       GraftTable.TierOffsetsKey)
-    t.requireTierBase(LakeFormatOps.Iceberg, out,
+    t.requireTierBase(IcebergExport, out,
       org.json4s.jackson.JsonMethods.parse(committed)
         .asInstanceOf[org.json4s.JObject].obj
         .map { case (k, v) =>
           k.toInt -> v.asInstanceOf[org.json4s.JInt].num.toLong }.toMap)
     intercept[java.util.ConcurrentModificationException](
-      t.requireTierBase(LakeFormatOps.Iceberg, out, Map(0 -> 0L, 1 -> 0L)))
+      t.requireTierBase(IcebergExport, out, Map(0 -> 0L, 1 -> 0L)))
     // heartbeat plumbing: touch moves the lock's mtime forward
     val probe = s"$out/touch-probe"
     assert(WarehouseIO.createExclusive(probe))
@@ -544,9 +544,9 @@ class IcebergExportSpec extends SparkTestBase {
     assert(replaced.nonEmpty, "expected replaced files before expiry")
     // keepLast must be >= 1 (the current snapshot is never expirable)
     val e0 = intercept[IllegalArgumentException](
-      IcebergExport.expireSnapshots(out, 0))
+      IcebergExport.expireHistory(spark, out, 0))
     assert(e0.getMessage.contains("keepLast"))
-    val deleted = IcebergExport.expireSnapshots(out, keepLast = 1)
+    val deleted = IcebergExport.expireHistory(spark, out, keepLast = 1)
     assert(replaced.forall(deleted.contains(_)), s"$replaced vs $deleted")
     replaced.foreach(r => assert(!WarehouseIO.exists(s"$out/$r"), r))
     live.foreach(r => assert(WarehouseIO.exists(s"$out/$r"), r))
@@ -565,7 +565,7 @@ class IcebergExportSpec extends SparkTestBase {
     assert(IcebergExport.readSnapshot(spark, out, idsBefore.last)
       .count() == 2)
     // a no-op expire returns nothing and leaves metadata untouched
-    assert(IcebergExport.expireSnapshots(out, 1).isEmpty)
+    assert(IcebergExport.expireHistory(spark, out, 1).isEmpty)
     assert(WarehouseIO.readString(s"$out/metadata/version-hint.text") == "4")
     // tiering keeps working on the expired table
     t.upsert(rows(("b", 2L, 20))(30L), orderBy = Seq(col("ord")))
@@ -615,7 +615,8 @@ class IcebergExportSpec extends SparkTestBase {
     val fresh = Files.createTempDirectory("graft-iceberg-fresh").toString
     val e = intercept[IllegalArgumentException](
       IcebergExport.commit(spark, fresh, schema, Nil, Nil,
-        removedRels = Set("data-0.parquet"), sourcePath = "src"))
+        removedRels = Set("data-0.parquet"), sourcePath = "src",
+        summaryExtra = Map.empty, priorLive = Nil))
     assert(e.getMessage.contains("no prior Iceberg snapshot"))
   }
 

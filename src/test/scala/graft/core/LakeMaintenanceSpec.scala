@@ -80,6 +80,34 @@ class LakeMaintenanceSpec extends SparkTestBase {
     assert(rearmed.startsWith("lake fresh"), rearmed)
   }
 
+  test("an empty lake snapshot reads back empty through readLive and " +
+      "time travel in every format") {
+    val cat = new Catalog(
+      Files.createTempDirectory("graft-lm-empty-wh").toString, spark)
+    val sch = StructType(Seq(StructField("dt", StringType),
+      StructField("k", LongType), StructField("v", IntegerType)))
+    for (fmt <- LakeFormatOps.all) {
+      val t = cat.createTable("db", s"empty_${fmt.name}", TableDescriptor(sch,
+        primaryKey = Seq("dt", "k"), partitionKeys = Seq("dt"),
+        numBuckets = 2))
+      val lake = t.path + "_lake"
+      // tiered before the table's first commit: no data file at all
+      t.tierSnapshot(lake, fmt.name)
+      val first = fmt match {
+        case IcebergExport => IcebergExport.readSnapshot(
+          spark, lake, IcebergExport.snapshotIds(lake).head)
+        case DeltaExport => DeltaExport.readVersion(spark, lake, 0L)
+        case PaimonExport => PaimonExport.readSnapshot(spark, lake, 1L)
+        case HudiExport => HudiExport.readInstant(
+          spark, lake, HudiExport.earliestInstant(lake).get)
+      }
+      for (df <- Seq(fmt.readLive(spark, lake), first)) {
+        assert(df.schema.fieldNames.toSeq == Seq("dt", "k", "v"), fmt.name)
+        assert(df.count() == 0, fmt.name)
+      }
+    }
+  }
+
   test("policyOf: defaults mirror the reference; keep-last validated") {
     val p = LakeMaintenance.policyOf(Map(
       "table.datalake.enabled" -> "true",

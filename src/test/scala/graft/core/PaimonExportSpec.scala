@@ -67,7 +67,7 @@ class PaimonExportSpec extends SparkTestBase {
       fieldTypes("dt") == "STRING")
     // tier offsets ride the snapshot's logOffsets (spec-native) AND the
     // properties map (the reference's PaimonLakeCommitter posture)
-    val tags = PaimonExport.lastSnapshotProperties(out)
+    val tags = PaimonExport.committedTierTags(out)
     assert(tags.contains(GraftTable.TierOffsetsKey))
     assert(s1("logOffsets").asInstanceOf[JObject].obj.nonEmpty)
     // provenance: the source table path is stamped like Iceberg's
@@ -95,12 +95,12 @@ class PaimonExportSpec extends SparkTestBase {
     assert(got == Seq(("a", 1L, 2), ("b", 1L, 10)))
 
     // crash roll-forward bookkeeping round-trips through the properties
-    t.requireTierBase(LakeFormatOps.Paimon, out, JsonMethods
-      .parse(PaimonExport.lastSnapshotProperties(out)(
+    t.requireTierBase(PaimonExport, out, JsonMethods
+      .parse(PaimonExport.committedTierTags(out)(
         GraftTable.TierOffsetsKey)).asInstanceOf[JObject].obj
       .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap)
     intercept[java.util.ConcurrentModificationException](
-      t.requireTierBase(LakeFormatOps.Paimon, out, Map(0 -> 0L)))
+      t.requireTierBase(PaimonExport, out, Map(0 -> 0L)))
 
     // idle tier is a no-op
     assert(t.tierSnapshot(out, format = "paimon").contains("already current"))
@@ -154,7 +154,7 @@ class PaimonExportSpec extends SparkTestBase {
     assert(PaimonExport.currentSnapshotId(dir).contains(5L))
     // keep 2 -> snapshots 4,5 retained; f0..f2 unreachable (f3 is live
     // at snapshot 4, f4 at 5)
-    val deleted = PaimonExport.expireSnapshots(dir, keepLast = 2)
+    val deleted = PaimonExport.expireHistory(spark, dir, keepLast = 2)
     assert(deleted.filter(_.endsWith(".parquet")).filterNot(
       _.startsWith("manifest/")) == Seq("f0.parquet", "f1.parquet",
       "f2.parquet"), deleted)
@@ -178,10 +178,10 @@ class PaimonExportSpec extends SparkTestBase {
     assert(exp.getMessage.contains("earliest retained snapshot is 4"),
       exp.getMessage)
     // idempotent; keeping more than history is a no-op
-    assert(PaimonExport.expireSnapshots(dir, keepLast = 2).isEmpty)
-    assert(PaimonExport.expireSnapshots(dir, keepLast = 99).isEmpty)
+    assert(PaimonExport.expireHistory(spark, dir, keepLast = 2).isEmpty)
+    assert(PaimonExport.expireHistory(spark, dir, keepLast = 99).isEmpty)
     intercept[IllegalArgumentException](
-      PaimonExport.expireSnapshots(dir, keepLast = 0))
+      PaimonExport.expireHistory(spark, dir, keepLast = 0))
     // history continues past an expiry
     touchData(5)
     PaimonExport.commit(dir, sch, Nil,
@@ -193,7 +193,7 @@ class PaimonExportSpec extends SparkTestBase {
     // even though cutoff == earliest (no hint advance this time)
     WarehouseIO.atomicWriteString(s"$dir/snapshot/EARLIEST", "6")
     assert(WarehouseIO.exists(s"$dir/snapshot/snapshot-4"))
-    PaimonExport.expireSnapshots(dir, keepLast = 99)
+    PaimonExport.expireHistory(spark, dir, keepLast = 99)
     assert(!WarehouseIO.exists(s"$dir/snapshot/snapshot-4"))
     assert(!WarehouseIO.exists(s"$dir/snapshot/snapshot-5"))
     assert(WarehouseIO.exists(s"$dir/snapshot/snapshot-6"))

@@ -236,6 +236,18 @@ class VectorExprsSpec extends SparkTestBase {
           m => m)).as("ref"))
       .collect()
     got.foreach(r => assert(r.getInt(1) == r.getInt(2), r.toString))
+    // null slots never count (zip_with: null === x is null, dropped);
+    // the local relation folds through eval, the repartitioned copy runs
+    // the generated code
+    val nulls = Seq((Seq(Some(1L), None, Some(3L), None, Some(5L)),
+        Seq(Some(1L), Some(2L), None, None, Some(5L))))
+      .toDF("a", "b")
+    Seq(nulls, nulls.repartition(1)).foreach { d =>
+      val r = d.select(VectorExprs.sigAgreeCount(col("a"), col("b")),
+        size(filter(zip_with(col("a"), col("b"), (x, y) => x === y),
+          m => m))).head
+      assert(r.getInt(0) == 2 && r.getInt(1) == 2, r.toString)
+    }
   }
 
   test("JaccardGeCoeff: exact for kept rows, admissible early exit below") {
@@ -283,6 +295,12 @@ class VectorExprsSpec extends SparkTestBase {
       .select(VectorExprs.jaccardGe(col("a"), col("b"), 0.5))
       .head.getDouble(0)
     assert(empty.isNaN)
+    // a non-finite threshold is refused before it reaches generated code
+    Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      .foreach { t =>
+        intercept[IllegalArgumentException](
+          VectorExprs.jaccardGe(col("a"), col("b"), t))
+      }
   }
 
   test("IvfArgmax matches greatest(struct(score, i)) incl. zero vectors and ties") {

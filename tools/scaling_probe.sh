@@ -38,15 +38,18 @@ def parse(p):
         if m: out[m.group(1)] = float(m.group(2))
     return out
 a, b = parse(f"/tmp/scaling_probe_c{lo}.txt"), parse(f"/tmp/scaling_probe_c{hi}.txt")
-rows = sorted(((k, a.get(k), b.get(k)) for k in b), key=lambda r: -(r[2] or 0))
+rows = sorted(((k, a.get(k), b.get(k)) for k in a.keys() | b.keys()),
+              key=lambda r: -(r[2] or 0))
 with open("plans/r17/scaling_probe.md", "w") as f:
     f.write(f"# Scaling probe: per-query min-of-reps seconds at {lo} vs {hi} cores (sf0.1)\n\n")
     f.write("Generated by tools/scaling_probe.sh via graft.ops.Profile "
             "(Bench-identical session, per-rep cold caches).\n\n")
     f.write(f"| query | {lo} cores (s) | {hi} cores (s) | ratio {lo}c/{hi}c |\n|---|---|---|---|\n")
     for k, va, vb in rows:
-        r = (va / vb) if (va and vb) else float('nan')
-        f.write(f"| {k} | {va:.3f} | {vb:.3f} | {r:.2f} |\n")
+        def cell(v):
+            return "n/a" if v is None else f"{v:.3f}"
+        r = f"{va / vb:.2f}" if va is not None and vb else "n/a"
+        f.write(f"| {k} | {cell(va)} | {cell(vb)} | {r} |\n")
     f.write("\nratio > 1: the operator parallelizes (compute-bound at this SF);\n")
     f.write("ratio ~ 1: per-query fixed overhead dominates at this SF;\n")
     f.write("ratio < 1: 32-way task scheduling + GC overhead costs more than\n")
