@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout. `noop` write forces full evaluation of every
   * column (a bare count() would let Catalyst prune the whole plan to a
@@ -8,55 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the PK collapse is a TypedImperativeAggregate (LatestRow) whose
-      // buffer is ONE row - the default 128-entry ObjectHashAggregate
-      // fallback would sort anyway; at ~128B/key 1M buffered keys is
-      // ~128MB/partition, well within executor memory at this scale
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // CBO on: the scans report fresh per-manifest-state row counts,
-      // sizes AND column min/max/NDV (FooterStats), so selectivity
-      // estimation runs on live numbers - the staleness that keeps
-      // Spark's default off does not apply here
-      .config("spark.sql.cbo.enabled", "true")
-      // join reorder too: with measured per-column NDV free at plan
-      // time (manifest HLL sketches), multi-join queries reorder by
-      // estimated cardinality instead of SQL text order
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // Generated-class cache sized to the workload: the suite's 139
-      // queries compile several hundred distinct codegen units per pass,
-      // and the default 100-entry cache (StaticSQLConf
-      // CODEGEN_CACHE_MAX_ENTRIES) thrashes — every pass recompiles most
-      // plans. Measured on a 20-query subset: −8.8% total (16/20 queries
-      // faster) at 3000 entries; memory cost is bounded (a few KB–100 KB
-      // of generated class per entry). Scale-neutral: a production
-      // session running a large query suite wants the same sizing.
-      .config("spark.sql.codegen.cache.maxEntries", "3000")
-      .config("spark.ui.enabled", "false")
-      // Session-isolation hygiene: 132 queries × 3 passes in ONE JVM
-      // accumulate status-store state even with the UI off — the
-      // SQLAppStatusListener retains 1000 executions by default, each
-      // carrying its full plan graph string, and the AppStatusListener
-      // keeps per-job/stage/task rows. Round 11 measured a ~24% uniform
-      // session drift (every query, trivial ones included) that idle
-      // re-measures did not reproduce; capping retention keeps the
-      // driver heap flat as the suite grows.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // ONE source of truth for the engine's streaming-state defaults
-    // (RocksDB + changelog checkpointing): the same call every stateful
-    // stream builder makes, so Bench measures production sessions
-    graft.streaming.GraftStream.applyScaleStateStore(spark)
+    val spark = SessionProfile.start(SessionProfile.builder(SessionProfile.envCores))
     // "WindowExec: No Partition Defined" warnings in this log are
     // expected and BOUNDED: every unpartitioned window in the engine is
     // the prefix-sum step of the two-level scan (Sampling.ntileExact /

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import java.nio.file.{Files, Paths}
@@ -33,34 +33,7 @@ object Verify {
     // query set — `runMain graft.Verify <sf> <out> q1 q2` dumps just those.
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the PK collapse is a TypedImperativeAggregate (LatestRow) whose
-      // buffer is ONE row - the default 128-entry ObjectHashAggregate
-      // fallback would sort anyway; at ~128B/key 1M buffered keys is
-      // ~128MB/partition, well within executor memory at this scale
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // CBO on: the scans report fresh per-manifest-state row counts,
-      // sizes AND column min/max/NDV (FooterStats), so selectivity
-      // estimation runs on live numbers - the staleness that keeps
-      // Spark's default off does not apply here
-      .config("spark.sql.cbo.enabled", "true")
-      // join reorder too: with measured per-column NDV free at plan
-      // time (manifest HLL sketches), multi-join queries reorder by
-      // estimated cardinality instead of SQL text order
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // workload-sized generated-class cache — mirror Bench (see there)
-      .config("spark.sql.codegen.cache.maxEntries", "3000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine streaming-state defaults (RocksDB + changelog ckpt) — the
-    // same single source of truth the stream builders apply
-    graft.streaming.GraftStream.applyScaleStateStore(spark)
+    val spark = SessionProfile.start(SessionProfile.builder(SessionProfile.envCores))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -90,9 +90,6 @@ object GraftMetrics {
     b.result()
   }
 
-  /** Test hook: drop every counter and gauge (listeners stay registered). */
-  def resetAll(): Unit = { counters.clear(); gauges.clear() }
-
   /** Every counter in Prometheus text-exposition format (the reference
     * ships pluggable metric reporters, maintenance/observability/
     * metric-reporters.md; this is the dependency-free equivalent — serve

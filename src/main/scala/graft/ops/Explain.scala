@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import graft.SessionProfile
 
 /** Plan-review utility: prints `explain("formatted")` for representative
   * queries so scan pushdowns (PushedFilters / partition pruning /
@@ -13,22 +13,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // hash path for the LatestRow PK collapse (buffer = one row) —
-      // mirror Verify/Bench so audited plans match executed plans
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      // mirror Bench/Verify: CBO on (fresh per-manifest-state stats)
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      // workload-sized generated-class cache — mirror Bench (see there)
-      .config("spark.sql.codegen.cache.maxEntries", "3000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionProfile.start(
+      SessionProfile.builder(SessionProfile.envCores), logLevel = "ERROR")
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.isEmpty || names.contains(name)) {
         println(s"\n========== $name ==========")

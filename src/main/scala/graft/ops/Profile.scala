@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import graft.SessionProfile
 
 /** Optimization-round profiling harness (round 16+): times individual
   * SparkEntry queries in a Bench-identical session, with per-JOB timing so
@@ -17,27 +17,14 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // A/B session-config experiments: "k=v;k=v" applied on top of the
-    // Bench-identical baseline
+    // Bench-identical profile (set after it, so each override wins)
     val extra = sys.env.getOrElse("PROFILE_CONFS", "").split(";")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "3000") // mirror Bench
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.streaming.GraftStream.applyScaleStateStore(spark)
+    val spark = SessionProfile.start(extra.foldLeft(
+      SessionProfile.builder(SessionProfile.envCores))((b, kv) => b.config(kv._1, kv._2)))
 
     // per-job timing: description (or callsite) + millis
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

@@ -43,7 +43,6 @@ final class MinHashIngestIndex(val corpus: GraftTable, val index: GraftTable,
     seed: Long = 42L) {
 
   require(numHashes % bands == 0, "bands must divide numHashes")
-  private val rowsPerBand = numHashes / bands
 
   /** (band, bucket, id) rows for a document set — identical banding to
     * [[Dedup.minhashLshVerifiedPairs]] (same slice hash, same seed), so

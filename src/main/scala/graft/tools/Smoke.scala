@@ -1,16 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.SessionProfile
 
 /** Mirrors the driver's smoke check: SparkEntry.entry must return rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionProfile.start(SessionProfile.builder(SessionProfile.envCores))
     val n = graft.SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows = $n")
     spark.stop()

@@ -4,23 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // hash path for the LatestRow PK collapse (buffer = one row)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // engine streaming-state defaults (RocksDB + changelog ckpt): every
-    // streaming spec exercises the production state store
-    graft.streaming.GraftStream.applyScaleStateStore(s)
-    s
-  }
+  lazy val spark: SparkSession =
+    SessionProfile.start(SessionProfile.builder(8).appName("graft-test"))
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

@@ -22,16 +22,28 @@ class RacyMockFs extends MockRemoteFs {
     new Path("racyfs://test" + q.toUri.getPath)
   }
 
+  // RawLocalFileSystem routes `create(path, overwrite)` through the
+  // first overload and permission-carrying creates through the second,
+  // so both open the same race window
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    checkThenSleep(f, overwrite)
+    super.create(f, true, bufferSize, replication, blockSize, progress)
+  }
+
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
+    checkThenSleep(f, overwrite)
+    super.create(f, permission, true, bufferSize, replication, blockSize,
+      progress)
+  }
+
+  private def checkThenSleep(f: Path, overwrite: Boolean): Unit =
     if (!overwrite) {
       if (exists(f))
         throw new org.apache.hadoop.fs.FileAlreadyExistsException(f.toString)
       Thread.sleep(80) // the check and the act are separate requests
-      super.create(f, permission, true, bufferSize, replication, blockSize,
-        progress)
-    } else super.create(f, permission, overwrite, bufferSize, replication,
-      blockSize, progress)
-  }
+    }
 }

@@ -28,6 +28,10 @@ oracle = json.load(open(f"{OUT}/oracle_sql.json"))
 # Verify dumps each SQL under both the bare name and a "<name>.parquet"
 # alias (round-1 driver keyed results by output filename); check each once.
 oracle = {k: v for k, v in oracle.items() if not k.endswith(".parquet")}
+missing = [n for n in only if n not in oracle]
+if missing:
+    print(f"no oracle for: {missing}"); sys.exit(1)
+compared = {k: v for k, v in oracle.items() if not only or k in only}
 
 def canon(v):
     if isinstance(v, float):
@@ -36,8 +40,7 @@ def canon(v):
     return str(v)
 
 fails = []
-for name, sql in sorted(oracle.items()):
-    if only and name not in only: continue
+for name, sql in sorted(compared.items()):
     try:
         got_rel = con.sql(f"SELECT * FROM '{OUT}/{name}.parquet/*.parquet'")
         # The driver's compare reads the oracle through pandas (DECIMAL ->
@@ -79,5 +82,5 @@ for name, sql in sorted(oracle.items()):
     except Exception as e:
         fails.append(name); print(f"ERROR {name}: {e}")
 
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} pass" + (f"; FAILING: {fails}" if fails else ""))
+print(f"\n{len(compared) - len(fails)}/{len(compared)} pass" + (f"; FAILING: {fails}" if fails else ""))
 sys.exit(1 if fails else 0)
