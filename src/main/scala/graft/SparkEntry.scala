@@ -85,6 +85,10 @@ object SparkEntry {
     * per-source salted top-k cap, carrying every column either pipeline
     * reads downstream (pipe2 keeps quality/rank in its output; pipe3
     * packs n_tokens into shards).
+    *
+    * Eager on first use: the first call for a `dir` RUNS a Spark job —
+    * the rule table is `localCheckpoint`ed while the plan is built — and
+    * later calls return the cached frame.
     */
   private def pipeCapped(s: SparkSession, dir: String): DataFrame =
     Fixtures.cachedDf("pipe_capped", dir) {

@@ -593,11 +593,31 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   // ---------------------------------------------------------------------
 
   private def bucketCol: Column = {
-    val keys = desc.effectiveBucketKeys
+    // a PK table's bucket must be a function of its key even when every
+    // PK column is a partition key: the merge groups by (bucket, key)
+    val keys =
+      if (desc.effectiveBucketKeys.nonEmpty) desc.effectiveBucketKeys
+      else desc.primaryKey
     if (keys.isEmpty) // round-robin-ish spread for key-less log tables
       pmod(spark_partition_id(), lit(desc.numBuckets))
     else pmod(hash(keys.map(col): _*), lit(desc.numBuckets))
   }
+
+  /** The ONE exchange of a commit: hash `__bucket` into as many
+    * partitions as the session has cores (never more than buckets). The
+    * merge windows (partitioned by bucket and key — the same grouping,
+    * the bucket being a function of the key) and the per-bucket offset
+    * numbering all run in the stage after it, like each bucket's KvTablet
+    * merging and appending on its own (KvTablet.putAsLeader). The width
+    * is explicit because AQE's coalescePartitions folds a window's own
+    * sub-MB `ENSURE_REQUIREMENTS` exchange into ONE task but leaves a
+    * user repartition alone; one partition per bucket would pay the
+    * window sorts' per-task fixed cost numBuckets times.
+    */
+  private def byBucket(df: DataFrame): DataFrame =
+    df.repartition(
+      math.min(desc.numBuckets, spark.sparkContext.defaultParallelism),
+      col(Meta.Bucket))
 
   /** Parquet bloom filters on the lookup columns: ON by default for PK
     * tables (blooms on the effective bucket keys), so a point read prunes
@@ -663,9 +683,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // entirely — at scale, checkpointing the full ingest batch to
     // executor disks is the last thing a 100 TB append should do.
     val deterministic = orderBy.nonEmpty && desc.effectiveBucketKeys.nonEmpty
-    commitToLog(enforceCharLengths(df)
+    commitToLog(byBucket(enforceCharLengths(df)
       .withColumn(Meta.ChangeTypeCol, lit(ChangeType.AppendOnly))
-      .withColumn("__ord", ord.head.cast("long")),
+      .withColumn("__ord", ord.head.cast("long"))
+      .withColumn(Meta.Bucket, bucketCol)),
       commitTag = commitTag,
       materializeBatch = !deterministic)
   }
@@ -808,11 +829,11 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       .withColumn("__ord", lit(Long.MinValue))
       .withColumn("__del", lit(false))
       .withColumn("__retract", lit(false))
-    val unioned = src.select((dataCols.map(col) ++
-      Seq(col("__ord"), col("__del"), col("__retract"))).toIndexedSeq: _*)
-      .unionByName(statePseudo)
+    val unioned = mergeInput(src.select((dataCols.map(col) ++
+      Seq(col("__ord"), col("__del"), col("__retract"))).toIndexedSeq: _*),
+      statePseudo)
 
-    val pk = desc.primaryKey.map(col)
+    val pk = mergeKey
     val wKey = Window.partitionBy(pk: _*).orderBy(col("__ord"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val isDel = col("__del")
@@ -879,10 +900,26 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         .when(isDel, emptyChanges)
         .when(col("__prev").isNotNull, upd)
         .otherwise(array(change(lit(ChangeType.Insert), col("__rs")))))
-      .select(col("__ord"), explode(col("__changes")).as("__c"))
-      .select((dataCols.map(c => col(s"__c.img.$c").as(c)) ++
-        Seq(col("__c.ct").as(Meta.ChangeTypeCol), col("__ord"))).toIndexedSeq: _*)
+      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
+      .select(changeColumns(dataCols): _*)
   }
+
+  /** A SQL merge's input: batch rows ∪ state pseudo-rows, bucketed and
+    * hash-partitioned by [[byBucket]] — the commit's one exchange.
+    */
+  private def mergeInput(batchRows: DataFrame, statePseudo: DataFrame): DataFrame =
+    byBucket(batchRows.unionByName(statePseudo).withColumn(Meta.Bucket, bucketCol))
+
+  /** A merge window's partitioning: the bucket, then the PK. The bucket
+    * is a function of the key, so the grouping is the key's; leading with
+    * it lets the [[byBucket]] exchange serve every window.
+    */
+  private def mergeKey: Seq[Column] = col(Meta.Bucket) +: desc.primaryKey.map(col)
+
+  /** A SQL merge's output row from its exploded change `__c`. */
+  private def changeColumns(dataCols: Seq[String]): Seq[Column] =
+    (dataCols.map(c => col(s"__c.img.$c").as(c)) ++ Seq(
+      col("__c.ct").as(Meta.ChangeTypeCol), col("__ord"), col(Meta.Bucket))).toIndexedSeq
 
   /** Sequentially fold a batch against current state per PK, emitting
     * change rows — the engine's KvTablet.putAsLeader (KvTablet.java:514):
@@ -896,6 +933,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     *    codegen, no JVM row objects;
     *  - everything else (partial updates, FIRST_ROW/VERSIONED/AGGREGATION):
     *    cogroup on the PK; each key's fold is local and ordered by `__ord`.
+    *
+    * Output: data cols + `_change_type` + `__ord` + `__bucket`,
+    * partitioned by [[byBucket]] — [[commitToLog]]'s input contract.
     */
   private def computeChanges(batch: DataFrame,
       targetColumns: Option[Seq[String]],
@@ -943,13 +983,13 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val dataCols = desc.schema.fieldNames.toSeq
     val src = batch.filter(!col("__del") && !col("__retract"))
     val statePseudo = touchedState(touched).withColumn("__ord", lit(Long.MinValue))
-    val unioned = src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*)
-      .unionByName(statePseudo)
-    val w = Window.partitionBy(desc.primaryKey.map(col): _*).orderBy(col("__ord"))
+    val unioned = mergeInput(
+      src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
+    val w = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
     unioned.withColumn("__rn", row_number().over(w))
       .filter(col("__ord") =!= Long.MinValue && col("__rn") === 1)
-      .select((dataCols.map(col) ++ Seq(
-        lit(ChangeType.Insert).as(Meta.ChangeTypeCol), col("__ord"))).toIndexedSeq: _*)
+      .select((dataCols.map(col) ++ Seq(lit(ChangeType.Insert).as(Meta.ChangeTypeCol),
+        col("__ord"), col(Meta.Bucket))).toIndexedSeq: _*)
   }
 
   /** VERSIONED engine in SQL: the running state is the max of
@@ -963,8 +1003,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val emitBefore = desc.changelogImage == ChangelogImage.Full
     val src = batch.filter(!col("__del") && !col("__retract"))
     val statePseudo = touchedState(touched).withColumn("__ord", lit(Long.MinValue))
-    val unioned = src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*)
-      .unionByName(statePseudo)
+    val unioned = mergeInput(
+      src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
     // version key in compareVersions' units: raw integer, or epoch millis
     // for timestamps (Timestamp.getTime)
     val vkey = coalesce(desc.schema(vc).dataType match {
@@ -972,9 +1012,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       case _ => col(vc).cast(LongType)
     }, lit(Long.MinValue))
     val img = struct(dataCols.map(col): _*)
-    val w2 = Window.partitionBy(desc.primaryKey.map(col): _*).orderBy(col("__ord"))
+    val w2 = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLag = Window.partitionBy(desc.primaryKey.map(col): _*).orderBy(col("__ord"))
+    val wLag = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
     val change = (ct: Column, image: Column) =>
       struct(ct.as("ct"), image.as("img"))
     val upd =
@@ -990,9 +1030,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       .withColumn("__changes",
         when(col("__prev").isNull,
           array(change(lit(ChangeType.Insert), img))).otherwise(upd))
-      .select(col("__ord"), explode(col("__changes")).as("__c"))
-      .select((dataCols.map(c => col(s"__c.img.$c").as(c)) ++
-        Seq(col("__c.ct").as(Meta.ChangeTypeCol), col("__ord"))).toIndexedSeq: _*)
+      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
+      .select(changeColumns(dataCols): _*)
   }
 
   /** Aggregate functions with an exact running-window equivalent (the
@@ -1032,10 +1071,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val statePseudo = touchedState(touched)
       .withColumn("__ord", lit(Long.MinValue))
       .withColumn("__del", lit(false))
-    val unioned = src.select((dataCols.map(col) ++
-      Seq(col("__ord"), col("__del"))).toIndexedSeq: _*)
-      .unionByName(statePseudo)
-    val w = Window.partitionBy(desc.primaryKey.map(col): _*).orderBy(col("__ord"))
+    val unioned = mergeInput(src.select((dataCols.map(col) ++
+      Seq(col("__ord"), col("__del"))).toIndexedSeq: _*), statePseudo)
+    val w = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
     val img = struct(dataCols.map(col): _*)
     val change = (ct: Column, image: Column) =>
       struct(ct.as("ct"), image.as("img"))
@@ -1058,9 +1096,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         .when(!col("__del") && col("__exists"), upd)
         .otherwise(array(change(lit(ChangeType.Insert), img))))
     withChanges
-      .select(col("__ord"), explode(col("__changes")).as("__c"))
-      .select((dataCols.map(c => col(s"__c.img.$c").as(c)) ++
-        Seq(col("__c.ct").as(Meta.ChangeTypeCol), col("__ord"))).toIndexedSeq: _*)
+      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
+      .select(changeColumns(dataCols): _*)
   }
 
   private def computeChangesCogroup(batch: DataFrame,
@@ -1104,6 +1141,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       }
       out.iterator
     }(Encoders.row(outSchema)).toDF()
+      .withColumn(Meta.Bucket, bucketCol)
+      .transform(byBucket)
   }
 
   // -- staged commits --------------------------------------------------
@@ -1264,9 +1303,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     }
 
   /** Assign per-bucket contiguous offsets and append to the log dir.
-    * Input: data cols + `_change_type` + `__ord`.
+    * Input: data cols + `_change_type` + `__ord` + `__bucket`, partitioned
+    * by [[byBucket]] (the caller's one exchange).
     */
-  private def commitToLog(df: DataFrame,
+  private def commitToLog(bucketed: DataFrame,
       commitTag: Option[(String, Long)] = None,
       materializeBatch: Boolean = true,
       expectedOffsets: Option[Map[Int, Long]] = None,
@@ -1289,28 +1329,31 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           s"a rollback landed on $path since this statement's conflict " +
             "check; offset ranges may have been reused — re-validate and retry")
     }
-    // localCheckpoint (not cache): __ord / key-less __bucket derive from
-    // monotonically_increasing_id / spark_partition_id, so a recomputed
-    // partition (cache eviction, executor loss) could re-assign them
+    // The offset window is partitioned by bucket alone, so it runs in the
+    // stage after the caller's bucket exchange, beside the merge. Then
+    // localCheckpoint (not cache) the NUMBERED rows: __ord / key-less
+    // __bucket derive from monotonically_increasing_id /
+    // spark_partition_id, so a recomputed partition (cache eviction,
+    // executor loss) could re-assign them, and with them the offsets,
     // between the counts job and the write job, corrupting the offset
     // manifest. Checkpointing truncates lineage — recompute is impossible;
-    // a lost block fails loudly instead of silently diverging. Merge
-    // writes also benefit: the counts job and the write job share one
-    // merge computation. Deterministic appends (see append()) skip it:
-    // their per-bucket row sets recompute identically and their lineage
-    // is a cheap projection, so counts and write just run it twice.
-    val withBucket0 = df.withColumn(Meta.Bucket, bucketCol)
-    val withBucket =
-      if (materializeBatch) withBucket0.localCheckpoint() else withBucket0
+    // a lost block fails loudly instead of silently diverging. The pinned
+    // rows carry their offsets: the write job reads them with no exchange
+    // (each bucket already lives in one partition, so one file per
+    // bucket), and the counts job and the write job share one merge
+    // computation. Deterministic appends (see append()) skip it: their
+    // per-bucket row sets recompute identically and their lineage is a
+    // cheap projection, so counts and write just run it twice.
+    val w = Window.partitionBy(Meta.Bucket)
+      .orderBy(col("__ord"), col(Meta.ChangeTypeCol).desc) // -U before +U at same ord
+    val commitTs = new java.sql.Timestamp(System.currentTimeMillis())
+    val baseExpr = bucketMapExpr(bases, 0L)
+    val numbered0 = bucketed
+      .withColumn(Meta.Offset, baseExpr + row_number().over(w) - 1)
+      .withColumn(Meta.Timestamp, lit(commitTs))
+    val numbered =
+      if (materializeBatch) numbered0.localCheckpoint() else numbered0
     try {
-      val w = Window.partitionBy(Meta.Bucket)
-        .orderBy(col("__ord"), col(Meta.ChangeTypeCol).desc) // -U before +U at same ord
-      val commitTs = new java.sql.Timestamp(System.currentTimeMillis())
-      val baseExpr = bucketMapExpr(bases, 0L)
-      val numbered = withBucket
-        .withColumn(Meta.Offset, baseExpr + row_number().over(w) - 1)
-        .withColumn(Meta.Timestamp, lit(commitTs))
-
       // write-time column stats: each arm attaches ONE observe() to its
       // write job (min/max/nulls/HLL per stats-bearing column — no extra
       // pass); publish merges the fetched entry into the manifest blob.
@@ -1405,10 +1448,11 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           // A7 auto-increment (AutoIncrementManager / BoundedSegment-
           // SequenceGenerator): ids assigned commit-side from per-bucket
           // ranges carved out of one counter — contiguous across the
-          // commit, no extra shuffle (reuses the offset window's
-          // numbering). Needs counts BEFORE the write, so this path keeps
+          // commit, derived from the assigned offset (a row's rank in its
+          // bucket is offset − base), so no second window and no extra
+          // shuffle. Needs counts BEFORE the write, so this path keeps
           // the separate counts job.
-          val counts = withBucket.groupBy(col(Meta.Bucket)).count().collect()
+          val counts = numbered.groupBy(col(Meta.Bucket)).count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap
           if (counts.nonEmpty) {
             val aiBase = readAutoInc()
@@ -1419,7 +1463,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
                 when(col(Meta.Bucket) === b, lit(base)).otherwise(acc)
             }
             val out = observeStats(numbered
-              .withColumn(c, lit(aiBase) + cumExpr + row_number().over(w) - 1)
+              .withColumn(c, lit(aiBase) + cumExpr + col(Meta.Offset) - baseExpr)
               .drop("__ord")
               .select(logSchema.fieldNames.map(col).toIndexedSeq: _*))
             val staging = newStagingDir()
@@ -1431,7 +1475,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         case None if desc.numBuckets > 64 =>
           // very wide bucketing: numBuckets observation aggregates would
           // bloat every commit plan — one separate counts job is cheaper
-          val counts = withBucket.groupBy(col(Meta.Bucket)).count().collect()
+          val counts = numbered.groupBy(col(Meta.Bucket)).count().collect()
             .map(r => r.getInt(0) -> r.getLong(1)).toMap
           if (counts.nonEmpty) {
             val out = observeStats(numbered.drop("__ord")
@@ -1460,7 +1504,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
             .filter(_._2 > 0).toMap
           publish(counts, Some(staging))
       }
-    } finally if (materializeBatch) withBucket.unpersist() // no-op for checkpointed plans; ContextCleaner frees the blocks
+    } finally if (materializeBatch) numbered.unpersist() // no-op for checkpointed plans; ContextCleaner frees the blocks
   }
 
   // ---------------------------------------------------------------------

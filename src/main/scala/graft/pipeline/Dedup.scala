@@ -560,6 +560,10 @@ object Dedup {
     * Blocking: pigeonhole on nBits/4-bit chunks — any pair within distance
     * `maxHamming` (< 4) agrees on at least one of the 4 chunks, so the
     * join only compares same-chunk buckets. Verified with bit_count(xor).
+    *
+    * Eager: calling this RUNS a Spark job — the (id, simhash) table is
+    * `localCheckpoint`ed while the plan is built, so the kernel pass over
+    * `df` happens here, not at the returned frame's first action.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, nBits: Int = 64,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,10 +72,11 @@ final class MinHashIngestIndex(val corpus: GraftTable, val index: GraftTable,
     * complement posture — [[ingestStream]] feeds trigger-sized batches).
     * The fast path broadcasts batch-derived tables (ids, band rows,
     * signatures) past the conservative post-checkpoint size stats; a
-    * caller-supplied batch above [[MinHashIngestIndex.MaxBroadcastBatchRows]]
-    * rows falls back to stats-based join planning instead of risking the
-    * 8 GB broadcast cap / driver memory (the guard is a cheap count over
-    * the checkpointed batch, not a second source scan).
+    * caller-supplied batch whose estimated size exceeds
+    * [[MinHashIngestIndex.MaxBroadcastBatchBytes]] falls back to
+    * stats-based join planning instead of risking the 8 GB broadcast cap
+    * / driver memory (the guard is one aggregate over the checkpointed
+    * batch, not a second source scan).
     */
   def ingest(batch: DataFrame, threshold: Double): DataFrame = {
     val sc = batch.sparkSession.sparkContext
@@ -115,13 +116,14 @@ final class MinHashIngestIndex(val corpus: GraftTable, val index: GraftTable,
         .localCheckpoint()
     }
     // micro-batch guard for the explicit broadcasts below (see the method
-    // contract): one cheap count over the checkpointed blocks decides
-    // whether batch-derived tables may be broadcast — a too-large batch
-    // degrades to stats-based planning instead of a broadcast hard-fail
-    val batchRows = staged("batch count")(enriched.count())
+    // contract): one aggregate over the checkpointed blocks sizes the
+    // batch in bytes and decides whether batch-derived tables may be
+    // broadcast — a too-large batch degrades to stats-based planning
+    // instead of a broadcast hard-fail
+    val batchSize = staged("batch size")(
+      MinHashIngestIndex.footprint(enriched, textCol))
     def bcastIfSmall(df: DataFrame): DataFrame =
-      if (batchRows <= MinHashIngestIndex.MaxBroadcastBatchRows) broadcast(df)
-      else df
+      if (batchSize.broadcastable) broadcast(df) else df
     val fresh = enriched.select(batch.columns.map(col).toIndexedSeq: _*)
     val shingled = enriched.select(col(idCol).as("id"), col("__gs").as("gs"))
       .withColumn("sz", size(col("gs")))
@@ -248,14 +250,34 @@ final class MinHashIngestIndex(val corpus: GraftTable, val index: GraftTable,
 
 object MinHashIngestIndex {
 
-  /** Largest batch (rows) the ingest fast path will broadcast. A
-    * signature row is ~600 B framed (id + 60 longs), so 500 k rows keep
-    * every batch-derived broadcast well under the driver-memory comfort
-    * zone and far from Spark's 8 GB broadcast cap; above it, [[MinHash
-    * IngestIndex.ingest]] lets the planner pick join strategies from
-    * stats instead.
+  /** Largest batch (estimated bytes, see [[footprint]]) the ingest fast
+    * path will broadcast: 500 k signature rows of ~600 B framed (id + 60
+    * longs), which keeps every batch-derived broadcast well under the
+    * driver-memory comfort zone and far from Spark's 8 GB broadcast cap;
+    * above it, [[MinHashIngestIndex.ingest]] lets the planner pick join
+    * strategies from stats instead. A byte cap, not a row cap: a few
+    * book-length documents carry megabytes of shingle hashes each.
     */
-  val MaxBroadcastBatchRows: Long = 500000L
+  val MaxBroadcastBatchBytes: Long = 500000L * 600L
+
+  /** An ingest batch's row count and estimated size in bytes. */
+  final case class BatchFootprint(rows: Long, bytes: Long) {
+    def broadcastable: Boolean = bytes <= MaxBroadcastBatchBytes
+  }
+
+  /** Size a shingled + signed batch (`__gs` shingle hashes, `__sig`
+    * signature) in ONE aggregate: per row the text's UTF-8 bytes, 8 B
+    * per shingle hash and per signature slot, and 16 B for the id and
+    * row framing.
+    */
+  private[pipeline] def footprint(enriched: DataFrame,
+      textCol: String): BatchFootprint = {
+    def len(c: Column): Column = greatest(c, lit(0)).cast(LongType)
+    val bytes = len(octet_length(col(textCol))) +
+      lit(8L) * (len(size(col("__gs"))) + len(size(col("__sig")))) + lit(16L)
+    val r = enriched.agg(count(lit(1)), coalesce(sum(bytes), lit(0L))).head()
+    BatchFootprint(r.getLong(0), r.getLong(1))
+  }
 
   /** Create the index table beside an existing corpus table and backfill
     * it from the corpus's current rows.

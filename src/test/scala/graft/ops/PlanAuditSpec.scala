@@ -107,6 +107,110 @@ class PlanAuditSpec extends SparkTestBase {
     }
   }
 
+  test("upsert: merge and offset numbering share ONE bucket exchange; the write has none") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.functions.{col, count, count_distinct, lit, max, min}
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.core._
+
+    val planHelper = new AdaptiveSparkPlanHelper {}
+    def shuffles(qe: QueryExecution): Seq[ShuffleExchangeLike] =
+      planHelper.collect(qe.executedPlan) { case e: ShuffleExchangeLike => e }
+    def parquetFiles(dir: String): Set[Path] =
+      Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSet
+
+    val width = math.min(16, spark.sparkContext.defaultParallelism)
+    val cat = new Catalog(
+      Files.createTempDirectory("graft-audit-commit").toString, spark)
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType)))
+    Seq("default" -> MergeEngine.Default,
+        "aggregation" -> MergeEngine.Aggregation(Map("v" -> AggFunction.Sum)))
+      .foreach { case (name, engine) =>
+        val t = cat.createTable("audit", s"commit_$name", TableDescriptor(
+          schema, primaryKey = Seq("k"), numBuckets = 16, mergeEngine = engine))
+        t.upsert(spark.range(400).selectExpr("id AS k", "id AS v"))
+        val bases = t.latestOffsets
+        val filesBefore = parquetFiles(s"${t.path}/log")
+
+        val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+        val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]
+        val qeListener = new QueryExecutionListener {
+          override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+            plans.add(f -> qe)
+          override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+        }
+        val stageListener = new SparkListener {
+          override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+            val m = e.stageInfo.taskMetrics
+            stages.add((e.stageInfo.numTasks, m.shuffleReadMetrics.recordsRead,
+              m.outputMetrics.bytesWritten))
+          }
+        }
+        spark.listenerManager.register(qeListener)
+        spark.sparkContext.addSparkListener(stageListener)
+        try {
+          // 200 updated keys + 200 new ones: every bucket is touched
+          t.upsert(spark.range(200, 600).selectExpr("id AS k", "id * 10 AS v"))
+          eventually(timeout(30.seconds)) {
+            val fs = plans.asScala.map(_._1).toSeq
+            assert(fs.contains("localCheckpoint") && fs.contains("command"), fs)
+            assert(stages.asScala.exists(_._3 > 0))
+          }
+        } finally {
+          spark.listenerManager.unregister(qeListener)
+          spark.sparkContext.removeSparkListener(stageListener)
+        }
+        val all = plans.asScala.toSeq
+        val checkpoint = all.filter(_._1 == "localCheckpoint").map(_._2)
+        val write = all.filter(_._1 == "command").map(_._2)
+        assert(checkpoint.size == 1 && write.size == 1, all.map(_._1))
+        // batch ∪ state -> ONE exchange, on __bucket, `width` partitions
+        // (the 16-bucket state on local[8] is a grouped read: its collapse
+        // needs no exchange of its own)
+        val ex = shuffles(checkpoint.head)
+        assert(ex.size == 1, s"$name: ${checkpoint.head.executedPlan}")
+        assert(ex.head.outputPartitioning.numPartitions == width &&
+          ex.head.toString.contains(Meta.Bucket), s"$name: ${ex.head}")
+        // the write reads the numbered checkpoint as it lies
+        assert(shuffles(write.head).isEmpty, s"$name: ${write.head.executedPlan}")
+        // ... in `width` tasks, no shuffle read; the merge stage is as wide
+        val st = stages.asScala.toSeq
+        val writeStages = st.filter(_._3 > 0)
+        assert(writeStages.map(s => (s._1, s._2)) == Seq((width, 0L)), s"$name: $st")
+        assert(st.exists(s => s._2 > 0 && s._1 == width), s"$name: $st")
+
+        // one parquet file per touched bucket
+        val newFiles = (parquetFiles(s"${t.path}/log") -- filesBefore).toSeq
+        val dirs = newFiles.map(_.getParent.getFileName.toString)
+        assert(dirs.size == 16 && dirs.distinct.size == 16, s"$name: $dirs")
+        // per-bucket offsets contiguous from the pre-commit base, though
+        // ~16/width buckets shared each partition of the numbering window
+        val committed = t.committedRowsSince(bases)
+          .groupBy(col(Meta.Bucket))
+          .agg(min(Meta.Offset), max(Meta.Offset),
+            count_distinct(col(Meta.Offset)), count(lit(1)))
+          .collect()
+        assert(committed.length == 16, s"$name")
+        committed.foreach { r =>
+          val (b, lo, hi, distinct, n) =
+            (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+          assert(lo == bases.getOrElse(b, 0L) && hi - lo + 1 == n && distinct == n,
+            s"$name bucket $b: [$lo, $hi] for $n rows, base ${bases.get(b)}")
+          assert(t.latestOffsets(b) == hi + 1, s"$name bucket $b")
+        }
+      }
+  }
+
   test("sim1: scoring runs inside whole-stage codegen") {
     val p = plan("sim1_cosine_topk")
     // `*(n)` prefixes mark WholeStageCodegen spans; graft_dot must be

@@ -161,6 +161,37 @@ class PipelineSpec extends SparkTestBase {
     assert(again.sorted.toSeq == got.sorted.toSeq)
   }
 
+  test("ingest dedup: the broadcast guard counts bytes, so a few hundred very wide documents are not broadcast") {
+    import spark.implicits._
+    import graft.functions.{MinHashSig, VectorExprs}
+    // four ~140 KB documents, shingled and signed with the ingest kernels
+    val rnd = new scala.util.Random(7)
+    val wide = (1 to 4).map(i => (i.toLong,
+      Seq.fill(20000)(rnd.nextInt(1 << 20).toString).mkString(" ")))
+      .toDF("doc_id", "text")
+    val (a, b) = MinHashSig.params(60)
+    val enriched = wide
+      .withColumn("__gs", VectorExprs.shingleHashes(col("text"), 5))
+      .withColumn("__sig", VectorExprs.minhashSig(col("__gs"), a, b, MinHashSig.P))
+      .localCheckpoint()
+    val fp = MinHashIngestIndex.footprint(enriched, "text")
+    // text bytes + 8 B per shingle hash and per signature slot + 16 B
+    val want = enriched.select(octet_length(col("text")), size(col("__gs")),
+        size(col("__sig"))).collect()
+      .map(r => r.getInt(0) + 8L * (r.getInt(1) + r.getInt(2)) + 16L).sum
+    assert(fp == MinHashIngestIndex.BatchFootprint(4, want), s"want $want")
+    assert(fp.broadcastable)
+    // at this width (~0.7 MB a row) a few hundred documents pass the cap:
+    // refused, though a 500,000-row cap admitted them
+    val perRow = fp.bytes / fp.rows
+    assert(perRow > 500000L, s"per row $perRow")
+    val rows = MinHashIngestIndex.MaxBroadcastBatchBytes / perRow + 1
+    assert(rows < 1000, s"$rows rows")
+    assert(!MinHashIngestIndex.BatchFootprint(rows, rows * perRow).broadcastable)
+    // the documented budget itself still broadcasts: 500 k narrow rows
+    assert(MinHashIngestIndex.BatchFootprint(500000L, 500000L * 600L).broadcastable)
+  }
+
   test("ingest dedup: batches filtered against the persisted band index") {
     import spark.implicits._
     import graft.core.{Catalog, TableDescriptor}
