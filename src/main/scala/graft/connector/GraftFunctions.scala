@@ -1,13 +1,11 @@
 package graft.connector
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Murmur3HashFunction
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types._
 
 /** The catalog-exposed `bucket` V2 function — the engine's row→bucket
-  * assignment ([[graft.core.GraftTable]]'s write-side `pmod(hash(keys),
-  * numBuckets)`, the reference's key hashing in
+  * assignment ([[graft.core.Buckets]], the reference's key hashing in
   * fluss-client/.../write/HashBucketAssigner.java) published through
   * Spark's `FunctionCatalog` so the planner can PROVE two scans are
   * co-partitioned: a reported `KeyGroupedPartitioning` over
@@ -17,9 +15,8 @@ import org.apache.spark.sql.types._
   * join elide both exchanges.
   *
   * Also callable directly from SQL (`SELECT cat.bucket(16, k)`), where it
-  * must — and does — reproduce the writer's assignment exactly: Spark's
-  * Murmur3 `hash()` fold (seed 42, null inputs skipped) followed by a
-  * positive modulus.
+  * must — and does — reproduce the writer's assignment exactly: it runs
+  * the same fold.
   */
 object GraftBucketFunction extends UnboundFunction {
 
@@ -27,7 +24,7 @@ object GraftBucketFunction extends UnboundFunction {
 
   override def description(): String =
     "bucket(numBuckets, key[, key...]): the engine's bucket id for a key " +
-      "(pmod(hash(keys), numBuckets), Spark Murmur3 seed 42)"
+      "(the positive modulus of Spark's Murmur3 hash() of the keys)"
 
   override def bind(inputType: StructType): BoundFunction = {
     require(inputType.fields.length >= 2,
@@ -60,19 +57,12 @@ final case class GraftBucketBound(keyTypes: Array[DataType])
   override def canonicalName(): String =
     s"graft.bucket(${keyTypes.map(_.catalogString).mkString(",")})"
 
-  override def produceResult(input: InternalRow): Integer = {
-    if (input.isNullAt(0)) return null
-    val nb = input.getInt(0)
-    require(nb > 0, s"bucket count must be positive; got $nb")
-    var h = 42L // Spark's hash() seed; null inputs leave the fold unchanged
-    var i = 0
-    while (i < keyTypes.length) {
-      if (!input.isNullAt(i + 1))
-        h = Murmur3HashFunction.hash(input.get(i + 1, keyTypes(i)),
-          keyTypes(i), h)
-      i += 1
-    }
-    val r = h.toInt % nb
-    Int.box(if (r < 0) r + nb else r)
-  }
+  private val types = keyTypes.toIndexedSeq
+
+  override def produceResult(input: InternalRow): Integer =
+    if (input.isNullAt(0)) null
+    else Int.box(graft.core.Buckets.ofCatalyst(
+      types.indices.map(i =>
+        if (input.isNullAt(i + 1)) null else input.get(i + 1, types(i))),
+      types, input.getInt(0)))
 }

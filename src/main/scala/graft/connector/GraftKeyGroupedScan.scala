@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{ChangeType, GraftTable, HiveDirValues, Meta, WarehouseIO}
+import graft.core.{Buckets, ChangeType, GraftTable, HiveDirValues, Meta, WarehouseIO}
 
 /** What a key-grouped scan reads. */
 private[graft] sealed trait GraftScanTier
@@ -253,17 +253,14 @@ final class GraftKeyGroupedScan(table: GraftTable, required: StructType,
 
   /** Admissible buckets from runtime In/EqualTo on the (single) bucket
     * key — each key value hashes through the writer's own assignment
-    * ([[GraftBucketBound]]). None = no constraint.
+    * ([[graft.core.Buckets]]). None = no constraint.
     */
   private def runtimeBuckets(rf: Array[Filter]): Option[Set[Int]] = {
     if (bucketKeys.length != 1) return None
     val key = bucketKeys.head
-    val kt = desc.schema(key).dataType
-    val fn = GraftBucketBound(Array(kt))
-    def bucketOf(v: Any): Int = fn.produceResult(new GenericInternalRow(
-      Array[Any](Int.box(desc.numBuckets),
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToCatalyst(v)))).intValue
+    val kt = Seq(desc.schema(key).dataType)
+    def bucketOf(v: Any): Int =
+      Buckets.ofValues(Seq(v), kt, desc.numBuckets)
     val sets = rf.collect {
       case In(a, vs) if a == key => vs.toSet.map(bucketOf)
       case EqualTo(a, v) if a == key => Set(bucketOf(v))

@@ -600,7 +600,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       else desc.primaryKey
     if (keys.isEmpty) // round-robin-ish spread for key-less log tables
       pmod(spark_partition_id(), lit(desc.numBuckets))
-    else pmod(hash(keys.map(col): _*), lit(desc.numBuckets))
+    else Buckets.column(keys.map(col), desc.numBuckets)
   }
 
   /** The ONE exchange of a commit: hash `__bucket` into as many
@@ -771,32 +771,14 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       ord.head.cast("long").as("__ord"), deleteFlag.as("__del"),
       retractFlag.as("__retract"))).toIndexedSeq: _*))
 
-    // O(touched-buckets) write path: state participates in the merge only
-    // for buckets the batch can collide with (the reference's putAsLeader
-    // reads only the touched RocksDB keys — KvTablet.java:514; here the
-    // batch's bucket set partition-prunes snapshot and log before the
-    // merge). The pre-pass is a distinct over <= numBuckets ints — for a
-    // small batch against a huge table this turns a full state read into
-    // a few partition dirs.
-    val bKeys = desc.effectiveBucketKeys
-    val touched: Option[Column] =
-      // empty table (first commit): nothing to prune, skip the pre-pass
-      if (bKeys.isEmpty || (visibleLogFiles()._1.isEmpty && readSnapshotMeta().isEmpty)) None
-      else {
-        val bs = projected.select(pmod(hash(bKeys.map(col): _*),
-          lit(desc.numBuckets)).as("b")).distinct().collect().map(_.getInt(0))
-        if (bs.length >= desc.numBuckets) None
-        else Some(col(Meta.Bucket).isin(bs.toIndexedSeq: _*))
-      }
-
+    // state joins the merge only for the buckets the batch can collide
+    // with (the reference's putAsLeader reads only the touched RocksDB
+    // keys — KvTablet.java:514), found by the bounded probe
+    val touched = touchedBuckets(projected)
     val changes = computeChanges(projected, targetColumns, touched, mayDelete)
     commitToLog(changes, commitTag, expectedOffsets = expectedOffsets,
       expectedEpoch = expectedEpoch)
   }
-
-  /** Current state restricted to a bucket subset (write-path merge input). */
-  private def touchedState(buckets: Option[Column]): DataFrame =
-    Materialize.currentState(stateInput(buckets), collapseDesc)
 
   /** AGGREGATION-engine SQL fast path: the sequential per-key fold of
     * RowMergers re-expressed as running-window aggregates, so the whole
@@ -815,7 +797,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * row its before-image.
     */
   private def computeChangesAggSql(batch: DataFrame,
-      aggs: Map[String, String], touched: Option[Column]): DataFrame = {
+      aggs: Map[String, String], touched: Option[Seq[Int]]): DataFrame = {
     val dataCols = desc.schema.fieldNames.toSeq
     val emitBefore = desc.changelogImage == ChangelogImage.Full
     val src = desc.deleteBehavior match {
@@ -825,7 +807,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // initial state participates as a pseudo-row below every batch ord:
     // its stored per-column values are exactly the accumulators the
     // running aggregates must start from
-    val statePseudo = touchedState(touched)
+    val statePseudo = stateFor(touched)
       .withColumn("__ord", lit(Long.MinValue))
       .withColumn("__del", lit(false))
       .withColumn("__retract", lit(false))
@@ -925,21 +907,25 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * change rows — the engine's KvTablet.putAsLeader (KvTablet.java:514):
     * state lookup, RowMerger, changelog out.
     *
-    * Two implementations with identical semantics (MergeCrossCheckSpec
-    * pins them to the sequential RowMergers fold):
-    *  - full-row DEFAULT engine: pure SQL — for last-write-wins, the state
-    *    before row i is exactly row i-1 (or the initial state row), so one
-    *    lag window + a generator emits the changelog inside whole-stage
-    *    codegen, no JVM row objects;
-    *  - everything else (partial updates, FIRST_ROW/VERSIONED/AGGREGATION):
-    *    cogroup on the PK; each key's fold is local and ordered by `__ord`.
+    * Two kinds of implementation with identical semantics
+    * (MergeCrossCheckSpec pins them to the sequential RowMergers fold):
+    *  - SQL windows, inside whole-stage codegen with no JVM row objects:
+    *    the full-row DEFAULT engine (for last-write-wins the state before
+    *    row i is exactly row i-1, or the initial state row, so one lag
+    *    window + a generator emits the changelog), delete-free partial
+    *    updates and windowable AGGREGATION (running-window aggregates),
+    *    FIRST_ROW (row_number) and VERSIONED on an integer or timestamp
+    *    version (a running max);
+    *  - the cogroup fallback for the rest (partial updates that may
+    *    delete, non-windowable aggregates, other version types): cogroup
+    *    on the PK; each key's fold is local and ordered by `__ord`.
     *
     * Output: data cols + `_change_type` + `__ord` + `__bucket`,
     * partitioned by [[byBucket]] — [[commitToLog]]'s input contract.
     */
   private def computeChanges(batch: DataFrame,
       targetColumns: Option[Seq[String]],
-      touched: Option[Column] = None,
+      touched: Option[Seq[Int]] = None,
       mayDelete: Boolean = true): DataFrame =
     (desc.mergeEngine, targetColumns) match {
       case (MergeEngine.Default, None) =>
@@ -979,10 +965,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * only when nothing (state or earlier batch row) precedes it.
     */
   private def computeChangesFirstRowSql(batch: DataFrame,
-      touched: Option[Column]): DataFrame = {
+      touched: Option[Seq[Int]]): DataFrame = {
     val dataCols = desc.schema.fieldNames.toSeq
     val src = batch.filter(!col("__del") && !col("__retract"))
-    val statePseudo = touchedState(touched).withColumn("__ord", lit(Long.MinValue))
+    val statePseudo = stateFor(touched).withColumn("__ord", lit(Long.MinValue))
     val unioned = mergeInput(
       src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
     val w = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
@@ -998,11 +984,11 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * IS the new running state (its ord equals the winner's).
     */
   private def computeChangesVersionedSql(batch: DataFrame, vc: String,
-      touched: Option[Column]): DataFrame = {
+      touched: Option[Seq[Int]]): DataFrame = {
     val dataCols = desc.schema.fieldNames.toSeq
     val emitBefore = desc.changelogImage == ChangelogImage.Full
     val src = batch.filter(!col("__del") && !col("__retract"))
-    val statePseudo = touchedState(touched).withColumn("__ord", lit(Long.MinValue))
+    val statePseudo = stateFor(touched).withColumn("__ord", lit(Long.MinValue))
     val unioned = mergeInput(
       src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
     // version key in compareVersions' units: raw integer, or epoch millis
@@ -1058,7 +1044,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
 
   /** SQL fast path: batch has data cols + __ord + __del + __retract. */
   private def computeChangesDefaultSql(batch: DataFrame,
-      touched: Option[Column] = None): DataFrame = {
+      touched: Option[Seq[Int]] = None): DataFrame = {
     val dataCols = desc.schema.fieldNames.toSeq
     val emitBefore = desc.changelogImage == ChangelogImage.Full
     // retractions are no-ops for the default engine; Ignore drops deletes
@@ -1068,7 +1054,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       case DeleteBehavior.Allow => src0
     }
     // initial state participates as a pseudo-row below every batch ord
-    val statePseudo = touchedState(touched)
+    val statePseudo = stateFor(touched)
       .withColumn("__ord", lit(Long.MinValue))
       .withColumn("__del", lit(false))
     val unioned = mergeInput(src.select((dataCols.map(col) ++
@@ -1102,7 +1088,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
 
   private def computeChangesCogroup(batch: DataFrame,
       targetColumns: Option[Seq[String]],
-      touched: Option[Column] = None): DataFrame = {
+      touched: Option[Seq[Int]] = None): DataFrame = {
     val d = desc
     val pk = d.primaryKey
     val pkSchema = StructType(pk.map(c => d.schema(d.schema.fieldIndex(c))).toArray)
@@ -1115,7 +1101,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     def keyOf(r: Row, schema: StructType): Row =
       new GenericRowWithSchema(pk.map(c => r.get(schema.fieldIndex(c))).toArray[Any], pkSchema)
 
-    val state = touchedState(touched)
+    val state = stateFor(touched)
     val stateG = state.groupByKey(r => keyOf(r, dataSchema))(keyEnc)
     val batchG = batch.groupByKey(r => keyOf(r, batchSchema))(keyEnc)
     val ordIdx = batchSchema.fieldIndex("__ord")
@@ -2499,9 +2485,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           // by PK within a bucket (total, deterministic).
           val w = Window.partitionBy(col(Meta.Bucket))
             .orderBy(desc.primaryKey.map(col): _*)
-          Materialize.currentState(stateInput(None), collapseDesc)
-            .withColumn(Meta.Bucket,
-              pmod(hash(keys.map(col): _*), lit(newBuckets)))
+          currentState()
+            .withColumn(Meta.Bucket, Buckets.column(keys.map(col), newBuckets))
             .withColumn(Meta.Offset, (row_number().over(w) - 1).cast("long"))
             .withColumn(Meta.Timestamp,
               lit(new java.sql.Timestamp(System.currentTimeMillis())))
@@ -2513,8 +2498,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           logDFFor(manifestAtStart)
             .withColumn("__old_b", col(Meta.Bucket))
             .withColumn("__old_o", col(Meta.Offset))
-            .withColumn(Meta.Bucket,
-              pmod(hash(keys.map(col): _*), lit(newBuckets)))
+            .withColumn(Meta.Bucket, Buckets.column(keys.map(col), newBuckets))
             .withColumn(Meta.Offset, (row_number().over(w) - 1).cast("long"))
             .select(logSchema.fieldNames.map(col).toIndexedSeq: _*)
         }
@@ -2842,8 +2826,16 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   /** Current state: snapshot ∪ log tail, keyed-merged (S4/S7 semantics:
     * log wins, DELETE removes).
     */
-  def currentState(): DataFrame =
-    Materialize.currentState(stateInput(None), collapseDesc)
+  def currentState(): DataFrame = stateFor(None)
+
+  /** The one keyed state read: current state of `buckets` only (None =
+    * all). The `__bucket` predicate sits on the state INPUT, so it prunes
+    * snapshot and log bucket dirs before the collapse.
+    */
+  private def stateFor(buckets: Option[Seq[Int]]): DataFrame =
+    Materialize.currentState(
+      stateInput(buckets.map(bs => col(Meta.Bucket).isin(bs: _*))),
+      collapseDesc)
 
   // ---------------------------------------------------------------------
   // read surfaces
@@ -3182,73 +3174,60 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   def scanPruned(eq: Map[String, Any]): DataFrame = {
     val fresh = currentHandle()
     if (fresh ne this) return fresh.scanPruned(eq)
-    if (bucketPruneUnsafe) return scan()
-    val keys = desc.effectiveBucketKeys
-    if (keys.nonEmpty && keys.forall(eq.contains)) {
-      if (desc.isPrimaryKeyTable) prunedState(eq)
-      else {
-        val bTypes = keys.map(c => desc.schema(c).dataType)
-        val b = graft.plans.BucketPruning.bucketForValues(
-          keys.map(eq), bTypes, desc.numBuckets)
-        logDF.filter(col(Meta.Bucket) === b)
-          .select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
-      }
-    } else scan()
+    scanBuckets(keyBuckets(Seq(eq)))
   }
 
   /** Scan pruned to the buckets a SET of key rows hashes to — the
     * probe-side discipline of the reference's lookup path
     * (PrefixKeyLookuper.java:49 / TabletService.java:353: a probe reads
     * the buckets it routes to, never the table) generalized to a
-    * DataFrame of keys. `keyRows` must carry the table's bucket-key
-    * columns; the pre-pass is ONE tiny job — a distinct over the keys'
-    * storage buckets, ≤ numBuckets ints to the driver — after which the
-    * read is partition-pruned to those `__bucket=` directories. For a
-    * micro-batch probing a corpus-scale table this turns a full scan
-    * into O(batch-bucket-set) IO: the dedup-at-ingest index probe
+    * DataFrame of keys, through the bounded probe of [[touchedBuckets]].
+    * For a micro-batch probing a corpus-scale table this turns a full
+    * scan into O(batch-bucket-set) IO: the dedup-at-ingest index probe
     * ([[graft.pipeline.MinHashIngestIndex]]) is the motivating caller.
-    * Falls back to the plain scan when the table is key-less, the key
-    * columns are missing, or the key set already touches every bucket.
     */
   def scanPrunedToKeys(keyRows: DataFrame): DataFrame = {
     val fresh = currentHandle()
     if (fresh ne this) return fresh.scanPrunedToKeys(keyRows)
-    if (bucketPruneUnsafe) return scan()
+    scanBuckets(touchedBuckets(keyRows))
+  }
+
+  /** The table's rows in `buckets` (None = every bucket): PK state
+    * through [[stateFor]], or the log's data columns.
+    */
+  private def scanBuckets(buckets: Option[Seq[Int]]): DataFrame =
+    if (buckets.isEmpty) scan()
+    else if (desc.isPrimaryKeyTable) stateFor(buckets)
+    else logDF.filter(col(Meta.Bucket).isin(buckets.get: _*))
+      .select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
+
+  /** The buckets a set of key rows hashes to, or None when nothing can
+    * be pruned: the table has no bucket keys, the rows lack a key column,
+    * a rebucket marker makes the numbering ambiguous
+    * ([[bucketPruneUnsafe]]), the table is empty (no manifest offsets and
+    * no snapshot), or the keys cover every bucket. `keyRows` is probed
+    * BOUNDED: 16×numBuckets rows either (a) don't fill the limit — the
+    * sample IS the key set, exact and done — or (b) already touch every
+    * bucket — nothing to prune. Only the narrow middle (a big key set
+    * with genuinely sparse coverage) pays an exact distinct, and that is
+    * the case pruning wins. A driver-built `keyRows` costs no job (Spark
+    * folds the limit into its LocalRelation); a generated one costs one
+    * limit job. Keys are cast to the declared types before hashing.
+    */
+  private def touchedBuckets(keyRows: DataFrame): Option[Seq[Int]] = {
     val keys = desc.effectiveBucketKeys
     if (keys.isEmpty || !keys.forall(keyRows.columns.contains) ||
-        (visibleLogFiles()._1.isEmpty && readSnapshotMeta().isEmpty))
-      return scan()
-    // coerce to the declared column types before hashing — an Int 7 for
-    // a BIGINT key hashes to a different bucket than the Long 7 the log
-    // holds (same rule as the write-path pre-pass)
-    val bucketOf = pmod(hash(keys.map(k =>
-      col(k).cast(desc.schema(k).dataType)): _*), lit(desc.numBuckets))
-    // BOUNDED saturation probe before the exact pre-pass: a key set much
-    // larger than the bucket count (a backfill-sized "batch" probing a
-    // small-bucket table) covers every bucket with near-certainty, and a
-    // full-keyRows distinct would then be pure overhead before an
-    // unpruned scan. 16×numBuckets sampled rows either (a) don't fill
-    // the limit — the sample IS the key set, exact and done — or
-    // (b) already touch every bucket — scan, nothing to prune. Only the
-    // narrow middle (big key set, genuinely sparse coverage) pays the
-    // exact pass, and that is the case pruning actually wins.
+        bucketPruneUnsafe || (readOffsets().isEmpty && readSnapshotMeta().isEmpty))
+      return None
+    val bucket = Buckets.column(
+      keys.map(k => col(k).cast(desc.schema(k).dataType)), desc.numBuckets)
     val cap = 16 * desc.numBuckets
-    val sampled = keyRows.select(bucketOf.as("b")).limit(cap)
-      .collect().map(_.getInt(0))
-    val bs: Array[Int] =
-      if (sampled.length < cap) sampled.distinct
-      else if (sampled.distinct.length >= desc.numBuckets)
-        return scan()
-      else keyRows.select(bucketOf.as("b"))
-        .distinct().collect().map(_.getInt(0))
-    if (bs.length >= desc.numBuckets) scan()
-    else {
-      val pred = col(Meta.Bucket).isin(bs.toIndexedSeq: _*)
-      if (desc.isPrimaryKeyTable)
-        Materialize.currentState(stateInput(Some(pred)), collapseDesc)
-      else logDF.filter(pred)
-        .select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
-    }
+    val sample = keyRows.select(bucket).limit(cap).collect().map(_.getInt(0))
+    val bs =
+      if (sample.length < cap) sample.distinct
+      else if (sample.distinct.length >= desc.numBuckets) return None
+      else keyRows.select(bucket).distinct().collect().map(_.getInt(0))
+    if (bs.length >= desc.numBuckets) None else Some(bs.toSeq.sorted)
   }
 
   /** `t$changelog` virtual table (website/docs/table-design/
@@ -3403,7 +3382,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     require(desc.isPrimaryKeyTable, "lookup requires a PK table")
     require(key.keySet == desc.primaryKey.toSet, s"full PK required: ${desc.primaryKey}")
     GraftMetrics.inc(path, GraftMetrics.Lookups)
-    prunedState(key).filter(keyPredicate(key))
+    stateFor(keyBuckets(Seq(key))).filter(keyPredicate(key))
   }
 
   /** Batched point lookups (the reference's LookupClient/LookupSender
@@ -3418,12 +3397,6 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     require(keys.nonEmpty, "no keys")
     keys.foreach(k => require(k.keySet == desc.primaryKey.toSet,
       s"full PK required: ${desc.primaryKey}"))
-    val bKeys = desc.effectiveBucketKeys
-    val bTypes = bKeys.map(c => desc.schema(c).dataType)
-    val buckets = keys
-      .map(k => graft.plans.BucketPruning.bucketForValues(
-        bKeys.map(k), bTypes, desc.numBuckets))
-      .distinct
     // FLAT membership predicate, not an OR-chain reduce: n keys as nested
     // Or recurse n deep through every expression visitor (a 400-key batch
     // overflowed the stack), while one In(...) stays a single node that
@@ -3439,10 +3412,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           lit(k(c)).cast(desc.schema(c).dataType).as(c)): _*))
         tuple.isin(lits: _*)
       }
-    Materialize.currentState(
-        stateInput(if (bucketPruneUnsafe) None
-          else Some(col(Meta.Bucket).isin(buckets: _*))), collapseDesc)
-      .filter(pred)
+    stateFor(keyBuckets(keys)).filter(pred)
   }
 
   /** Prefix-key lookup (PrefixKeyLookuper.java:49): prefix must be the
@@ -3456,7 +3426,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       s"prefix must equal bucket keys ${desc.effectiveBucketKeys}")
     require(desc.primaryKey.startsWith(desc.effectiveBucketKeys),
       "bucket keys must be a prefix of the PK for prefix lookup")
-    prunedState(prefix).filter(keyPredicate(prefix))
+    stateFor(keyBuckets(Seq(prefix))).filter(keyPredicate(prefix))
   }
 
   /** Row-level DELETE (§4: FlinkTableSink SupportsDeletePushDown,
@@ -4057,22 +4027,19 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   private def keyPredicate(key: Map[String, Any]): Column =
     key.map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
 
-  /** Materialize only the key's bucket: same merge, 1/numBuckets the IO.
-    * Key literals are cast to the DECLARED column type before hashing:
-    * the write path hashed e.g. LongType, so hashing a caller's Int 7
-    * as IntegerType would prune to the wrong bucket and silently return
-    * empty even though the row exists.
+  /** The buckets of driver-side keys (column → value maps), or None when
+    * nothing can be pruned: no bucket keys, a bucket key unbound, or a
+    * rebucket marker ([[bucketPruneUnsafe]]; unpruned is always correct).
     */
-  private def prunedState(key: Map[String, Any]): DataFrame = {
-    val keys = desc.effectiveBucketKeys
-    val pred =
-      if (bucketPruneUnsafe) None // rebucket in flight: unpruned is correct
-      else if (keys.forall(key.contains)) {
-        val b = pmod(hash(keys.map(k =>
-          lit(key(k)).cast(desc.schema(k).dataType)): _*), lit(desc.numBuckets))
-        Some(col(Meta.Bucket) === b) // foldable -> partition pruning
-      } else None
-    Materialize.currentState(stateInput(pred), collapseDesc)
+  private def keyBuckets(keys: Seq[Map[String, Any]]): Option[Seq[Int]] = {
+    val bKeys = desc.effectiveBucketKeys
+    if (bKeys.isEmpty || !keys.forall(k => bKeys.forall(k.contains)) ||
+        bucketPruneUnsafe) None
+    else {
+      val types = bKeys.map(c => desc.schema(c).dataType)
+      Some(keys.map(k =>
+        Buckets.ofValues(bKeys.map(k), types, desc.numBuckets)).distinct)
+    }
   }
 
   /** READ-side rebucket fence (the commit fence's quiet twin): while

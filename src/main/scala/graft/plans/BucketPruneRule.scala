@@ -8,14 +8,15 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.core.Meta
+import graft.core.{Buckets, Meta}
 
 /** P5 — PK point-query rewrite (SURVEY §2.2): the reference's planner turns
   * a full-PK equality filter into a single-bucket lookup instead of a scan
   * (fluss-flink/.../source/FlinkTableSource.java:570-609,
   * PushdownUtils.java:259). Here the same idea is a Catalyst optimizer
   * rule: when a Filter over a graft log relation pins every bucket key to a
-  * literal, derive the murmur bucket id and add a `__bucket = b` conjunct.
+  * literal, derive the key's bucket ([[graft.core.Buckets]]) and add a
+  * `__bucket = b` conjunct.
   * `__bucket` is a hive partition column of the log, so FileSourceStrategy
   * turns the conjunct into partition pruning — the scan touches 1/numBuckets
   * of the files, which is exactly the reference's "route to the key's
@@ -61,29 +62,6 @@ object BucketPruning {
           graft.core.WarehouseIO.exists(s"$tableDir/_rebucket.json")
       }
       .map(_._2)
-  }
-
-  /** Same hash the write path uses: pmod(murmur3(keys), n) — evaluated at
-    * plan time over the predicate's literals.
-    */
-  private[plans] def bucketOf(lits: Seq[Literal], n: Int): Int = {
-    val h = Pmod(new Murmur3Hash(lits), Literal(n)).eval(null)
-    h.asInstanceOf[Int]
-  }
-
-  /** Driver-side bucket routing for scala values (lookup batching).
-    * `types` are the DECLARED bucket-key column types: values are coerced
-    * before hashing so e.g. an Int key for a BIGINT column hashes as
-    * LongType — the type the write path hashed — not IntegerType.
-    */
-  def bucketForValues(values: Seq[Any],
-      types: Seq[org.apache.spark.sql.types.DataType], n: Int): Int = {
-    val lits = values.zip(types).map { case (v, dt) =>
-      val l = Literal(v)
-      if (l.dataType == dt) l
-      else Literal(Cast(l, dt, Some("UTC")).eval(null), dt)
-    }
-    bucketOf(lits, n)
   }
 
   /** Install into a live session (idempotent). */
@@ -134,8 +112,9 @@ object BucketPruneRule extends Rule[LogicalPlan] with PredicateHelper {
             case EqualTo(l: Literal, a: AttributeReference) => a.name -> l
           }.toMap
           if (layout.bucketKeys.forall(eq.contains)) {
-            val b = BucketPruning.bucketOf(
-              layout.bucketKeys.map(eq), layout.numBuckets)
+            val b = Buckets.ofValues(layout.bucketKeys.map(eq),
+              layout.bucketKeys.map(k => r.output.find(_.name == k).get.dataType),
+              layout.numBuckets)
             val bucketAttr = r.output.find(_.name == Meta.Bucket).get
             Filter(And(cond, EqualTo(bucketAttr, Literal(b))), r)
           } else f

@@ -436,17 +436,101 @@ class GraftTableSpec extends SparkTestBase {
     assert(del.getStruct(1).getInt(1) == 2 && del.isNullAt(2))
   }
 
+  /** The buckets each planned state scan of `plan` reads: the
+    * `__bucket=` dirs of a V1 scan's listed files, the bucket keys of
+    * the grouped scan's input partitions.
+    */
+  private def bucketsRead(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Set[Int]] = {
+    import org.apache.spark.sql.connector.read.HasPartitionKey
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    new AdaptiveSparkPlanHelper {}.collect(plan) {
+      case f: FileSourceScanExec =>
+        f.relation.location.listFiles(f.partitionFilters, f.dataFilters)
+          .flatMap(_.files).map(st => raw"__bucket=(\d+)".r
+            .findFirstMatchIn(st.getPath.toString).get.group(1).toInt).toSet
+      case b: BatchScanExec =>
+        b.inputPartitions.map(_.asInstanceOf[HasPartitionKey]
+          .partitionKey().getInt(0)).toSet
+    }
+  }
+
   test("pk table: lookup and prefix lookup prune to one bucket") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
     val cat = newCatalog()
     val t = cat.createTable("db", "pk2",
       TableDescriptor(schema, primaryKey = Seq("k", "s"), bucketKeys = Seq("k"),
-        numBuckets = 8))
+        numBuckets = 64))
     t.upsert(df((1L, 1, "x"), (1L, 2, "y"), (2L, 3, "x"), (1L, 9, "x")),
       orderBy = Seq(col("ord")))
-    assertSameRows(t.lookup(Map("k" -> 1L, "s" -> "x")).collect(),
-      Seq(Row(1L, 9, "x")))
-    assertSameRows(t.prefixLookup(Map("k" -> 1L)).collect(),
-      Seq(Row(1L, 9, "x"), Row(1L, 2, "y")))
+    // other keys fill most of the 64 buckets, so an unpruned read shows
+    t.upsert(df((3L until 300L).map(k => (k, Int.box(k.toInt), "z")): _*),
+      orderBy = Seq(col("ord")))
+    val b = Buckets.ofValues(Seq(1L), Seq(LongType), 64)
+    def onlyKeyBucket(what: String, plan: org.apache.spark.sql.execution.SparkPlan): Unit = {
+      val read = bucketsRead(plan)
+      assert(read.nonEmpty && read.forall(_ == Set(b)),
+        s"$what read buckets $read, not just $b:\n$plan")
+    }
+    val prev = spark.conf.getOption(GroupedReads.Key)
+    try Seq("true", "false").foreach { grouped =>
+      spark.conf.set(GroupedReads.Key, grouped)
+      // the scans return the key's whole bucket: their rows are
+      // compared on the key
+      def check(what: String, q: org.apache.spark.sql.DataFrame,
+          exp: Seq[Row], keyOnly: Boolean = false): Unit = {
+        val got = q.collect().toSeq
+        assertSameRows(if (keyOnly) got.filter(_.getLong(0) == 1L) else got, exp)
+        onlyKeyBucket(s"$what (grouped=$grouped)", q.queryExecution.executedPlan)
+      }
+      check("lookup", t.lookup(Map("k" -> 1L, "s" -> "x")), Seq(Row(1L, 9, "x")))
+      check("lookupAll", t.lookupAll(Seq(Map("k" -> 1L, "s" -> "y"))),
+        Seq(Row(1L, 2, "y")))
+      check("prefixLookup", t.prefixLookup(Map("k" -> 1L)),
+        Seq(Row(1L, 9, "x"), Row(1L, 2, "y")))
+      check("scanPruned", t.scanPruned(Map("k" -> 1L)),
+        Seq(Row(1L, 9, "x"), Row(1L, 2, "y")), keyOnly = true)
+      check("scanPrunedToKeys",
+        t.scanPrunedToKeys(spark.range(1).selectExpr("CAST(1 AS INT) AS k")),
+        Seq(Row(1L, 9, "x"), Row(1L, 2, "y")), keyOnly = true)
+
+      // a one-key upsert (rewriting the key's value: the rows above
+      // hold in both passes) merges against the key's bucket only
+      val merges = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (f == "localCheckpoint") merges.add(qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        t.upsert(df((1L, 9, "x")), orderBy = Seq(col("ord")))
+        eventually(timeout(30.seconds))(assert(merges.size == 1))
+      } finally spark.listenerManager.unregister(listener)
+      onlyKeyBucket(s"upsert merge input (grouped=$grouped)",
+        merges.peek().executedPlan)
+    } finally prev match {
+      case Some(v) => spark.conf.set(GroupedReads.Key, v)
+      case None => spark.conf.unset(GroupedReads.Key)
+    }
+  }
+
+  test("pk table keyed only by partition columns: lookups find every key") {
+    // no bucket keys are left to route by: the writer buckets by the PK,
+    // so lookups read unpruned rather than hash an empty key
+    val cat = newCatalog()
+    val t = cat.createTable("db", "pkpart", TableDescriptor(
+      StructType(Seq(StructField("p", StringType), StructField("v", LongType))),
+      primaryKey = Seq("p"), partitionKeys = Seq("p"), numBuckets = 8))
+    t.upsert(spark.range(20).selectExpr("CAST(id AS STRING) AS p", "id AS v"),
+      orderBy = Seq(col("v")))
+    assertSameRows(t.lookupAll(Seq(Map("p" -> "3"), Map("p" -> "5"))).collect().toSeq,
+      Seq(Row("3", 3L), Row("5", 5L)))
+    assertSameRows(t.lookup(Map("p" -> "3")).collect().toSeq, Seq(Row("3", 3L)))
   }
 
   test("pk table: compact snapshot + tail reads match full materialization") {

@@ -110,10 +110,12 @@ class PlanAuditSpec extends SparkTestBase {
   test("upsert: merge and offset numbering share ONE bucket exchange; the write has none") {
     import java.nio.file.{Files, Path}
     import scala.jdk.CollectionConverters._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.{LocalTableScanExec, QueryExecution}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     import org.apache.spark.sql.functions.{col, count, count_distinct, lit, max, min}
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.util.QueryExecutionListener
@@ -142,35 +144,71 @@ class PlanAuditSpec extends SparkTestBase {
         val bases = t.latestOffsets
         val filesBefore = parquetFiles(s"${t.path}/log")
 
-        val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
-        val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]
-        val qeListener = new QueryExecutionListener {
-          override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-            plans.add(f -> qe)
-          override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-        }
-        val stageListener = new SparkListener {
-          override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-            val m = e.stageInfo.taskMetrics
-            stages.add((e.stageInfo.numTasks, m.shuffleReadMetrics.recordsRead,
-              m.outputMetrics.bytesWritten))
+        /** One upsert's query executions, completed stages (tasks,
+          * shuffle records read, bytes written) and touched-bucket probes
+          * (the probe's SQL execution plan, the jobs it ran).
+          */
+        case class Traced(plans: Seq[(String, QueryExecution)],
+            stages: Seq[(Int, Long, Long)], probes: Seq[(String, Int)])
+        def traced(batch: org.apache.spark.sql.DataFrame): Traced = {
+          val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+          val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]
+          val probes = new java.util.concurrent.ConcurrentHashMap[Long, String]
+          val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+          val qeListener = new QueryExecutionListener {
+            override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+              plans.add(f -> qe)
+            override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
           }
-        }
-        spark.listenerManager.register(qeListener)
-        spark.sparkContext.addSparkListener(stageListener)
-        try {
-          // 200 updated keys + 200 new ones: every bucket is touched
-          t.upsert(spark.range(200, 600).selectExpr("id AS k", "id * 10 AS v"))
-          eventually(timeout(30.seconds)) {
-            val fs = plans.asScala.map(_._1).toSeq
-            assert(fs.contains("localCheckpoint") && fs.contains("command"), fs)
-            assert(stages.asScala.exists(_._3 > 0))
+          val stageListener = new SparkListener {
+            override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+              val m = e.stageInfo.taskMetrics
+              stages.add((e.stageInfo.numTasks, m.shuffleReadMetrics.recordsRead,
+                m.outputMetrics.bytesWritten))
+            }
+            override def onJobStart(e: SparkListenerJobStart): Unit =
+              Option(e.properties).flatMap(p =>
+                Option(p.getProperty("spark.sql.execution.id")))
+                .foreach(id => jobs.add(id.toLong))
+            // a probe's SQL execution is the one its call stack names
+            override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+              case s: SparkListenerSQLExecutionStart
+                  if s.details.contains("touchedBuckets") =>
+                probes.put(s.executionId, s.physicalPlanDescription)
+              case _ =>
+            }
           }
-        } finally {
-          spark.listenerManager.unregister(qeListener)
-          spark.sparkContext.removeSparkListener(stageListener)
+          spark.listenerManager.register(qeListener)
+          spark.sparkContext.addSparkListener(stageListener)
+          try {
+            t.upsert(batch)
+            eventually(timeout(30.seconds)) {
+              val fs = plans.asScala.map(_._1).toSeq
+              assert(fs.contains("localCheckpoint") && fs.contains("command"), fs)
+              assert(stages.asScala.exists(_._3 > 0))
+            }
+          } finally {
+            spark.listenerManager.unregister(qeListener)
+            spark.sparkContext.removeSparkListener(stageListener)
+          }
+          val jobIds = jobs.asScala.toSeq
+          Traced(plans.asScala.toSeq, stages.asScala.toSeq,
+            probes.asScala.toSeq.map { case (id, plan) =>
+              plan -> jobIds.count(_ == id) })
         }
-        val all = plans.asScala.toSeq
+
+        // 200 updated keys + 200 new ones: every bucket is touched
+        val generated = traced(
+          spark.range(200, 600).selectExpr("id AS k", "id * 10 AS v"))
+        // the touched-bucket probe is ONE bounded limit collect: no
+        // distinct, so no exchange, and it prunes nothing here
+        assert(generated.probes.size == 1, s"$name: ${generated.probes}")
+        assert(generated.probes.forall { case (plan, jobs) =>
+          !plan.contains("Exchange") && jobs >= 1 }, s"$name: ${generated.probes}")
+        val collects = generated.plans.filter(_._1 == "collect").map(_._2)
+        assert(collects.forall(qe => shuffles(qe).isEmpty),
+          s"$name: ${collects.map(_.executedPlan)}")
+        val all = generated.plans
         val checkpoint = all.filter(_._1 == "localCheckpoint").map(_._2)
         val write = all.filter(_._1 == "command").map(_._2)
         assert(checkpoint.size == 1 && write.size == 1, all.map(_._1))
@@ -184,7 +222,7 @@ class PlanAuditSpec extends SparkTestBase {
         // the write reads the numbered checkpoint as it lies
         assert(shuffles(write.head).isEmpty, s"$name: ${write.head.executedPlan}")
         // ... in `width` tasks, no shuffle read; the merge stage is as wide
-        val st = stages.asScala.toSeq
+        val st = generated.stages
         val writeStages = st.filter(_._3 > 0)
         assert(writeStages.map(s => (s._1, s._2)) == Seq((width, 0L)), s"$name: $st")
         assert(st.exists(s => s._2 > 0 && s._1 == width), s"$name: $st")
@@ -208,6 +246,16 @@ class PlanAuditSpec extends SparkTestBase {
             s"$name bucket $b: [$lo, $hi] for $n rows, base ${bases.get(b)}")
           assert(t.latestOffsets(b) == hi + 1, s"$name bucket $b")
         }
+
+        // a driver-built batch (a client's rows): Spark folds the probe's
+        // limit into the LocalRelation, so the probe runs NO job
+        val local = traced(spark.createDataFrame(
+          (600L until 1000L).map(k => Row(k, k)).asJava, schema))
+        assert(local.probes.size == 1 && local.probes.head._2 == 0,
+          s"$name: ${local.probes}")
+        val localCollects = local.plans.filter(_._1 == "collect").map(_._2)
+        assert(localCollects.exists(_.executedPlan.isInstanceOf[LocalTableScanExec]),
+          s"$name: ${localCollects.map(_.executedPlan)}")
       }
   }
 
