@@ -48,9 +48,6 @@ object AggFunction {
   val BoolOr = "bool_or"
   val Rb32 = "rb32"
   val Rb64 = "rb64"
-  val all: Seq[String] = Seq(Sum, Product, Max, Min, LastValue,
-    LastValueIgnoreNulls, FirstValue, FirstValueIgnoreNulls, ListAgg,
-    BoolAnd, BoolOr, Rb32, Rb64)
 }
 
 /** DELETE handling for PK tables (metadata/DeleteBehavior.java:28-41). */

@@ -2,17 +2,14 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.merge.{Materialize, RowMergers}
+import graft.merge.{Materialize, WriteMerge}
 
 /** A table handle: append-only parquet log + lazily-materialized state.
   *
@@ -457,7 +454,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         // snapshot rows carry Timestamp(0) and replay below any tail row
         stateInput(None).filter(col(Meta.Timestamp) <= lit(ts))
     }
-    if (desc.isPrimaryKeyTable) Materialize.currentState(upTo, collapseDesc)
+    if (desc.isPrimaryKeyTable) Materialize.currentState(upTo, desc)
     else upTo.select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -584,7 +581,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           s"earliest reconstructible offsets: $snapOffsets)")
       stateInput(None).filter(col(Meta.Offset) < bucketMapExpr(bound, 0L))
     }
-    if (desc.isPrimaryKeyTable) Materialize.currentState(upTo, collapseDesc)
+    if (desc.isPrimaryKeyTable) Materialize.currentState(upTo, desc)
     else upTo.select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
   }
 
@@ -775,360 +772,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // with (the reference's putAsLeader reads only the touched RocksDB
     // keys — KvTablet.java:514), found by the bounded probe
     val touched = touchedBuckets(projected)
-    val changes = computeChanges(projected, targetColumns, touched, mayDelete)
+    val changes = new WriteMerge(desc, stateFor(touched), bucketCol, byBucket)
+      .changes(projected, targetColumns, mayDelete)
     commitToLog(changes, commitTag, expectedOffsets = expectedOffsets,
       expectedEpoch = expectedEpoch)
-  }
-
-  /** AGGREGATION-engine SQL fast path: the sequential per-key fold of
-    * RowMergers re-expressed as running-window aggregates, so the whole
-    * changelog generation stays inside Tungsten (no JVM row objects, no
-    * cogroup serialization). Exactness is what gates eligibility
-    * (WindowableAggs): every function here has a running form with
-    * byte-identical results to the fold — MergeCrossCheckSpec's
-    * randomized agg cases run through this path and pin it to the
-    * sequential implementation.
-    *
-    * Deletes reset aggregation state, which a running window cannot do —
-    * so rows are first split into per-key SEGMENTS (cumulative count of
-    * preceding deletes); each segment restarts the running aggregates.
-    * A delete row is always the last row of its own segment, and emits
-    * `-D` of the segment's final state via the same lag that gives every
-    * row its before-image.
-    */
-  private def computeChangesAggSql(batch: DataFrame,
-      aggs: Map[String, String], touched: Option[Seq[Int]]): DataFrame = {
-    val dataCols = desc.schema.fieldNames.toSeq
-    val emitBefore = desc.changelogImage == ChangelogImage.Full
-    val src = desc.deleteBehavior match {
-      case DeleteBehavior.Ignore => batch.filter(!col("__del"))
-      case DeleteBehavior.Allow => batch
-    }
-    // initial state participates as a pseudo-row below every batch ord:
-    // its stored per-column values are exactly the accumulators the
-    // running aggregates must start from
-    val statePseudo = stateFor(touched)
-      .withColumn("__ord", lit(Long.MinValue))
-      .withColumn("__del", lit(false))
-      .withColumn("__retract", lit(false))
-    val unioned = mergeInput(src.select((dataCols.map(col) ++
-      Seq(col("__ord"), col("__del"), col("__retract"))).toIndexedSeq: _*),
-      statePseudo)
-
-    val pk = mergeKey
-    val wKey = Window.partitionBy(pk: _*).orderBy(col("__ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val isDel = col("__del")
-    val isRet = col("__retract")
-    // segment id = deletes strictly before this row (per key); a delete
-    // row belongs to the segment it terminates
-    val withSeg = unioned.withColumn("__seg",
-      sum(when(isDel, 1L).otherwise(0L)).over(wKey) - when(isDel, 1L).otherwise(0L))
-    val wSeg = Window.partitionBy((pk :+ col("__seg")): _*).orderBy(col("__ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val active = !isDel && !isRet
-
-    // running accumulator per column — each case mirrors RowMergers
-    // .aggField exactly (null-skipping; sum subtracts on retraction into
-    // an implicit zero; FirstValue fixes at the state-creating row)
-    def acc(c: String): Column = {
-      val dt = desc.schema(c).dataType
-      aggs.getOrElse(c, AggFunction.LastValue) match {
-        case AggFunction.Sum =>
-          sum(when(isDel, lit(null).cast(dt))
-            .when(isRet, -col(c)).otherwise(col(c))).over(wSeg).cast(dt)
-        case AggFunction.Max => max(when(active, col(c))).over(wSeg)
-        case AggFunction.Min => min(when(active, col(c))).over(wSeg)
-        case AggFunction.LastValue =>
-          // wrap in struct: the last non-retract row wins even when its
-          // value is null
-          last(when(active, struct(col(c).as("v"))), ignoreNulls = true)
-            .over(wSeg)("v")
-        case AggFunction.LastValueIgnoreNulls =>
-          last(when(active, col(c)), ignoreNulls = true).over(wSeg)
-        case AggFunction.FirstValue =>
-          // value at state creation: the segment's first row (a creating
-          // retraction contributes null, and it never changes after)
-          first(when(!isRet, struct(col(c).as("v"))), ignoreNulls = false)
-            .over(wSeg)("v")
-        case AggFunction.FirstValueIgnoreNulls =>
-          first(when(active, col(c)), ignoreNulls = true).over(wSeg)
-        case AggFunction.BoolAnd => bool_and(when(active, col(c))).over(wSeg)
-        case AggFunction.BoolOr => bool_or(when(active, col(c))).over(wSeg)
-        case other => throw new IllegalStateException(s"not windowable: $other")
-      }
-    }
-    val rs = struct(dataCols.map(c =>
-      (if (desc.primaryKey.contains(c)) col(c) else acc(c)).as(c)): _*)
-    val wLag = Window.partitionBy((pk :+ col("__seg")): _*).orderBy(col("__ord"))
-
-    val change = (ct: Column, image: Column) =>
-      struct(ct.as("ct"), image.as("img"))
-    val emptyChanges = array().cast(ArrayType(StructType(Seq(
-      StructField("ct", StringType, nullable = false),
-      StructField("img", StructType(desc.schema.fields))))))
-    val upd =
-      if (emitBefore) array(
-        change(lit(ChangeType.UpdateBefore), col("__prev")),
-        change(lit(ChangeType.UpdateAfter), col("__rs")))
-      else array(change(lit(ChangeType.UpdateAfter), col("__rs")))
-    withSeg
-      .withColumn("__rs", rs)
-      .withColumn("__prev", lag(col("__rs"), 1).over(wLag))
-      .filter(col("__ord") =!= Long.MinValue) // pseudo-rows emit nothing
-      .withColumn("__changes",
-        when(isDel && col("__prev").isNotNull,
-          array(change(lit(ChangeType.Delete), col("__prev"))))
-        .when(isDel, emptyChanges)
-        .when(col("__prev").isNotNull, upd)
-        .otherwise(array(change(lit(ChangeType.Insert), col("__rs")))))
-      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
-      .select(changeColumns(dataCols): _*)
-  }
-
-  /** A SQL merge's input: batch rows ∪ state pseudo-rows, bucketed and
-    * hash-partitioned by [[byBucket]] — the commit's one exchange.
-    */
-  private def mergeInput(batchRows: DataFrame, statePseudo: DataFrame): DataFrame =
-    byBucket(batchRows.unionByName(statePseudo).withColumn(Meta.Bucket, bucketCol))
-
-  /** A merge window's partitioning: the bucket, then the PK. The bucket
-    * is a function of the key, so the grouping is the key's; leading with
-    * it lets the [[byBucket]] exchange serve every window.
-    */
-  private def mergeKey: Seq[Column] = col(Meta.Bucket) +: desc.primaryKey.map(col)
-
-  /** A SQL merge's output row from its exploded change `__c`. */
-  private def changeColumns(dataCols: Seq[String]): Seq[Column] =
-    (dataCols.map(c => col(s"__c.img.$c").as(c)) ++ Seq(
-      col("__c.ct").as(Meta.ChangeTypeCol), col("__ord"), col(Meta.Bucket))).toIndexedSeq
-
-  /** Sequentially fold a batch against current state per PK, emitting
-    * change rows — the engine's KvTablet.putAsLeader (KvTablet.java:514):
-    * state lookup, RowMerger, changelog out.
-    *
-    * Two kinds of implementation with identical semantics
-    * (MergeCrossCheckSpec pins them to the sequential RowMergers fold):
-    *  - SQL windows, inside whole-stage codegen with no JVM row objects:
-    *    the full-row DEFAULT engine (for last-write-wins the state before
-    *    row i is exactly row i-1, or the initial state row, so one lag
-    *    window + a generator emits the changelog), delete-free partial
-    *    updates and windowable AGGREGATION (running-window aggregates),
-    *    FIRST_ROW (row_number) and VERSIONED on an integer or timestamp
-    *    version (a running max);
-    *  - the cogroup fallback for the rest (partial updates that may
-    *    delete, non-windowable aggregates, other version types): cogroup
-    *    on the PK; each key's fold is local and ordered by `__ord`.
-    *
-    * Output: data cols + `_change_type` + `__ord` + `__bucket`,
-    * partitioned by [[byBucket]] — [[commitToLog]]'s input contract.
-    */
-  private def computeChanges(batch: DataFrame,
-      targetColumns: Option[Seq[String]],
-      touched: Option[Seq[Int]] = None,
-      mayDelete: Boolean = true): DataFrame =
-    (desc.mergeEngine, targetColumns) match {
-      case (MergeEngine.Default, None) =>
-        computeChangesDefaultSql(batch, touched)
-      case (MergeEngine.Default, Some(target)) if !mayDelete =>
-        // Partial update IS an aggregation: target columns take the
-        // incoming value (last_value), untouched columns keep the value
-        // fixed at state creation (first_value) — the overwrite fold and
-        // this mapping are the same function when no deletes can occur
-        // (a partial DELETE nulls target columns instead, which only the
-        // cogroup models; upsert() guarantees delete-free batches).
-        // Non-target batch values are NULLED first: a key with no prior
-        // state must store null for untouched columns (the fold's
-        // overwrite(nullRow, row, target)), not the batch row's value.
-        val nonTarget = desc.schema.fieldNames.toSeq
-          .filterNot(c => desc.primaryKey.contains(c) || target.contains(c))
-        val nulled = nonTarget.foldLeft(batch)((d, c) =>
-          d.withColumn(c, lit(null).cast(desc.schema(c).dataType)))
-        val aggs = desc.schema.fieldNames.toSeq
-          .filterNot(desc.primaryKey.contains)
-          .map(c => c -> (if (target.contains(c)) AggFunction.LastValue
-            else AggFunction.FirstValue)).toMap
-        computeChangesAggSql(nulled, aggs, touched)
-      case (MergeEngine.Aggregation(aggs), None) if windowable(aggs) =>
-        computeChangesAggSql(batch, aggs, touched)
-      case (MergeEngine.FirstRow, None) =>
-        computeChangesFirstRowSql(batch, touched)
-      case (MergeEngine.Versioned(vc), None)
-          if Seq(LongType, IntegerType, TimestampType)
-            .contains(desc.schema(vc).dataType) =>
-        computeChangesVersionedSql(batch, vc, touched)
-      case _ => computeChangesCogroup(batch, targetColumns, touched)
-    }
-
-  /** FIRST_ROW engine in SQL: deletes and retractions are no-ops, and a
-    * key emits exactly one `+I` — its first-ever row. A batch row wins
-    * only when nothing (state or earlier batch row) precedes it.
-    */
-  private def computeChangesFirstRowSql(batch: DataFrame,
-      touched: Option[Seq[Int]]): DataFrame = {
-    val dataCols = desc.schema.fieldNames.toSeq
-    val src = batch.filter(!col("__del") && !col("__retract"))
-    val statePseudo = stateFor(touched).withColumn("__ord", lit(Long.MinValue))
-    val unioned = mergeInput(
-      src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
-    val w = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
-    unioned.withColumn("__rn", row_number().over(w))
-      .filter(col("__ord") =!= Long.MinValue && col("__rn") === 1)
-      .select((dataCols.map(col) ++ Seq(lit(ChangeType.Insert).as(Meta.ChangeTypeCol),
-        col("__ord"), col(Meta.Bucket))).toIndexedSeq: _*)
-  }
-
-  /** VERSIONED engine in SQL: the running state is the max of
-    * (version, ord) — ties go to the later row, null version = -inf,
-    * exactly compareVersions' ordering. A batch row emits only when it
-    * IS the new running state (its ord equals the winner's).
-    */
-  private def computeChangesVersionedSql(batch: DataFrame, vc: String,
-      touched: Option[Seq[Int]]): DataFrame = {
-    val dataCols = desc.schema.fieldNames.toSeq
-    val emitBefore = desc.changelogImage == ChangelogImage.Full
-    val src = batch.filter(!col("__del") && !col("__retract"))
-    val statePseudo = stateFor(touched).withColumn("__ord", lit(Long.MinValue))
-    val unioned = mergeInput(
-      src.select((dataCols.map(col) :+ col("__ord")).toIndexedSeq: _*), statePseudo)
-    // version key in compareVersions' units: raw integer, or epoch millis
-    // for timestamps (Timestamp.getTime)
-    val vkey = coalesce(desc.schema(vc).dataType match {
-      case TimestampType => unix_millis(col(vc))
-      case _ => col(vc).cast(LongType)
-    }, lit(Long.MinValue))
-    val img = struct(dataCols.map(col): _*)
-    val w2 = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wLag = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
-    val change = (ct: Column, image: Column) =>
-      struct(ct.as("ct"), image.as("img"))
-    val upd =
-      if (emitBefore) array(
-        change(lit(ChangeType.UpdateBefore), col("__prev.img")),
-        change(lit(ChangeType.UpdateAfter), img))
-      else array(change(lit(ChangeType.UpdateAfter), img))
-    unioned
-      .withColumn("__st", max(struct(vkey.as("vk"), col("__ord").as("o"),
-        img.as("img"))).over(w2))
-      .withColumn("__prev", lag(col("__st"), 1).over(wLag))
-      .filter(col("__ord") =!= Long.MinValue && col("__st.o") === col("__ord"))
-      .withColumn("__changes",
-        when(col("__prev").isNull,
-          array(change(lit(ChangeType.Insert), img))).otherwise(upd))
-      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
-      .select(changeColumns(dataCols): _*)
-  }
-
-  /** Aggregate functions with an exact running-window equivalent (the
-    * SQL fast path below). listagg (O(n^2) as a running concat), product
-    * (no exact running form) and the bitmap unions stay on the cogroup.
-    */
-  private val WindowableAggs: Set[String] = Set(
-    AggFunction.Sum, AggFunction.Max, AggFunction.Min,
-    AggFunction.LastValue, AggFunction.LastValueIgnoreNulls,
-    AggFunction.FirstValue, AggFunction.FirstValueIgnoreNulls,
-    AggFunction.BoolAnd, AggFunction.BoolOr)
-
-  /** STRING max/min is additionally excluded: Spark's window max orders
-    * by UTF-8 bytes while the sequential fold uses Java compareTo
-    * (UTF-16 code units) — they disagree on supplementary characters,
-    * and the two paths must stay byte-identical.
-    */
-  private def windowable(aggs: Map[String, String]): Boolean =
-    aggs.forall { case (c, fn) =>
-      WindowableAggs.contains(fn) &&
-        !((fn == AggFunction.Max || fn == AggFunction.Min) &&
-          desc.schema(c).dataType == StringType)
-    }
-
-  /** SQL fast path: batch has data cols + __ord + __del + __retract. */
-  private def computeChangesDefaultSql(batch: DataFrame,
-      touched: Option[Seq[Int]] = None): DataFrame = {
-    val dataCols = desc.schema.fieldNames.toSeq
-    val emitBefore = desc.changelogImage == ChangelogImage.Full
-    // retractions are no-ops for the default engine; Ignore drops deletes
-    val src0 = batch.filter(!col("__retract")).drop("__retract")
-    val src = desc.deleteBehavior match {
-      case DeleteBehavior.Ignore => src0.filter(!col("__del"))
-      case DeleteBehavior.Allow => src0
-    }
-    // initial state participates as a pseudo-row below every batch ord
-    val statePseudo = stateFor(touched)
-      .withColumn("__ord", lit(Long.MinValue))
-      .withColumn("__del", lit(false))
-    val unioned = mergeInput(src.select((dataCols.map(col) ++
-      Seq(col("__ord"), col("__del"))).toIndexedSeq: _*), statePseudo)
-    val w = Window.partitionBy(mergeKey: _*).orderBy(col("__ord"))
-    val img = struct(dataCols.map(col): _*)
-    val change = (ct: Column, image: Column) =>
-      struct(ct.as("ct"), image.as("img"))
-    val upd =
-      if (emitBefore) array(
-        change(lit(ChangeType.UpdateBefore), col("__prev.img")),
-        change(lit(ChangeType.UpdateAfter), img))
-      else array(change(lit(ChangeType.UpdateAfter), img))
-    val withChanges = unioned
-      .withColumn("__prev", lag(struct(img.as("img"), col("__del").as("del")), 1).over(w))
-      .withColumn("__exists", col("__prev").isNotNull && !col("__prev.del"))
-      .filter(col("__ord") =!= Long.MinValue) // pseudo-rows emit nothing
-      .withColumn("__changes",
-        when(col("__del") && col("__exists"),
-          array(change(lit(ChangeType.Delete), col("__prev.img"))))
-        .when(col("__del") && !col("__exists"),
-          array().cast(ArrayType(StructType(Seq(
-            StructField("ct", StringType, nullable = false),
-            StructField("img", StructType(desc.schema.fields)))))))
-        .when(!col("__del") && col("__exists"), upd)
-        .otherwise(array(change(lit(ChangeType.Insert), img))))
-    withChanges
-      .select(col("__ord"), col(Meta.Bucket), explode(col("__changes")).as("__c"))
-      .select(changeColumns(dataCols): _*)
-  }
-
-  private def computeChangesCogroup(batch: DataFrame,
-      targetColumns: Option[Seq[String]],
-      touched: Option[Seq[Int]] = None): DataFrame = {
-    val d = desc
-    val pk = d.primaryKey
-    val pkSchema = StructType(pk.map(c => d.schema(d.schema.fieldIndex(c))).toArray)
-    val keyEnc = Encoders.row(pkSchema)
-    val dataSchema = d.schema
-    val batchSchema = batch.schema
-    val outSchema = StructType(dataSchema.fields ++ Seq(
-      StructField(Meta.ChangeTypeCol, StringType, nullable = false),
-      StructField("__ord", LongType, nullable = false)))
-    def keyOf(r: Row, schema: StructType): Row =
-      new GenericRowWithSchema(pk.map(c => r.get(schema.fieldIndex(c))).toArray[Any], pkSchema)
-
-    val state = stateFor(touched)
-    val stateG = state.groupByKey(r => keyOf(r, dataSchema))(keyEnc)
-    val batchG = batch.groupByKey(r => keyOf(r, batchSchema))(keyEnc)
-    val ordIdx = batchSchema.fieldIndex("__ord")
-    val delIdx = batchSchema.fieldIndex("__del")
-    val retIdx = batchSchema.fieldIndex("__retract")
-
-    stateG.cogroup(batchG) { (_, sIt, bIt) =>
-      var st: Option[Row] = sIt.toSeq.headOption
-      val out = ArrayBuffer.empty[Row]
-      val sorted = bIt.toArray.sortBy(r => r.getAs[Number](ordIdx).longValue())
-      sorted.foreach { r =>
-        val ord = r.getAs[Number](ordIdx).longValue()
-        val dataRow = new GenericRowWithSchema(
-          (0 until dataSchema.length).map(r.get).toArray[Any], dataSchema)
-        val res = RowMergers.merge(d, st,
-          RowMergers.Incoming(dataRow, isDelete = r.getBoolean(delIdx),
-            isRetract = r.getBoolean(retIdx), targetColumns = targetColumns))
-        st = res.state
-        res.changes.foreach { case (ct, row) =>
-          out += new GenericRowWithSchema(
-            ((0 until dataSchema.length).map(row.get) :+ ct :+ ord).toArray[Any], outSchema)
-        }
-      }
-      out.iterator
-    }(Encoders.row(outSchema)).toDF()
-      .withColumn(Meta.Bucket, bucketCol)
-      .transform(byBucket)
   }
 
   // -- staged commits --------------------------------------------------
@@ -2057,7 +1704,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
             .map { case (k, i) =>
               col(k).isin(changedTuples.map(_.get(i)).distinct: _*) }
             .foldLeft(exact && bucketIn)(_ && _)
-          Materialize.currentState(stateInput(Some(pred)), collapseDesc)
+          Materialize.currentState(stateInput(Some(pred)), desc)
             .withColumn(Meta.Bucket, bucketCol)
         }
       val stagedKeys =
@@ -2752,15 +2399,6 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     GraftMetrics.inc(path, GraftMetrics.Rewrites)
   }
 
-  /** The log stores POST-merge row images (the write path already applied
-    * the merge engine, like the reference's KV store holding merged rows) —
-    * so state collapse is always last-write-wins over the changelog,
-    * whatever the engine (SortMergeReader.java:46 does the same).
-    */
-  private def collapseDesc: TableDescriptor =
-    desc.copy(mergeEngine = MergeEngine.Default,
-      deleteBehavior = DeleteBehavior.Allow)
-
   /** The pre-merge state input: snapshot ∪ log tail (S4/S7: log wins,
     * DELETE removes), with an optional bucket predicate pushed into BOTH
     * sides so point lookups prune partition dirs of the snapshot AND the
@@ -2834,8 +2472,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     */
   private def stateFor(buckets: Option[Seq[Int]]): DataFrame =
     Materialize.currentState(
-      stateInput(buckets.map(bs => col(Meta.Bucket).isin(bs: _*))),
-      collapseDesc)
+      stateInput(buckets.map(bs => col(Meta.Bucket).isin(bs: _*))), desc)
 
   // ---------------------------------------------------------------------
   // read surfaces
@@ -2955,7 +2592,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       val gated = base.filter(col(Meta.Offset) === lit(-1L) ||
         col(Meta.Offset) >= bucketMapExpr(pinned, 0L))
       return if (desc.isPrimaryKeyTable)
-        Materialize.currentState(gated, collapseDesc)
+        Materialize.currentState(gated, desc)
       else gated.select(desc.schema.fieldNames.map(col).toIndexedSeq: _*)
     }
     // offsets + live-file resolution under ONE lake lock: a tier
@@ -3003,7 +2640,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           col(Meta.Offset) >= bucketMapExpr(pinned, 0L))
         .select((desc.schema.fieldNames.map(col) ++
           Seq(col(Meta.ChangeTypeCol), col(Meta.Offset))).toIndexedSeq: _*)
-      Materialize.currentState(lakeAsLog.unionByName(tail), collapseDesc)
+      Materialize.currentState(lakeAsLog.unionByName(tail), desc)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.io.{ByteArrayOutputStream, DataOutputStream, ByteArrayInputStream, DataInputStream}
 
-import org.apache.spark.sql.{Column, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 import org.roaringbitmap.longlong.Roaring64Bitmap
@@ -11,9 +11,9 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   *
   * Same surface as the reference's Flink bitmap functions
   * (fluss-flink/fluss-flink-common/src/main/java/org/apache/fluss/flink/
-  * functions/bitmap/: RbBuildFunction, RbAndFunction, RbOrFunction,
-  * RbCardinalityFunction, RbContainsFunction, RbToArrayFunction,
-  * RbBuildAggFunction, RbAndAggFunction, RbOrAggFunction), re-expressed as
+  * functions/bitmap/: RbBuildFunction, RbCardinalityFunction,
+  * RbContainsFunction, RbToArrayFunction, RbBuildAggFunction,
+  * RbAndAggFunction, RbOrAggFunction), re-expressed as
   * Spark UDFs + typed `Aggregator`s over a serialized `Roaring64Bitmap`
   * BINARY column. RoaringBitmap ships with Spark itself, so the format is
   * a public, portable one.
@@ -61,18 +61,6 @@ object Bitmaps {
     val bm = new Roaring64Bitmap()
     if (xs != null) xs.foreach(bm.addLong)
     ser(bm)
-  }
-
-  /** rb_and(bm, bm) -> binary. */
-  val rbAnd = udf { (a: Array[Byte], b: Array[Byte]) =>
-    if (a == null || b == null) null
-    else { val x = deser(a); x.and(deser(b)); ser(x) }
-  }
-
-  /** rb_or(bm, bm) -> binary. */
-  val rbOr = udf { (a: Array[Byte], b: Array[Byte]) =>
-    if (a == null || b == null) null
-    else { val x = deser(a); x.or(deser(b)); ser(x) }
   }
 
   /** rb_cardinality(bm) -> bigint. */
@@ -141,20 +129,4 @@ object Bitmaps {
 
   /** rb_or_agg(binary) -> union of all bitmaps in the group. */
   def rb_or_agg(c: Column): Column = orUdaf(c)
-
-  /** Register the SQL-callable surface: `rb_build`, `rb_and`, `rb_or`,
-    * `rb_cardinality`, `rb_contains`, `rb_to_array`, `rb_build_agg`,
-    * `rb_and_agg`, `rb_or_agg`.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("rb_build", rbBuild)
-    spark.udf.register("rb_and", rbAnd)
-    spark.udf.register("rb_or", rbOr)
-    spark.udf.register("rb_cardinality", rbCardinality)
-    spark.udf.register("rb_contains", rbContains)
-    spark.udf.register("rb_to_array", rbToArray)
-    spark.udf.register("rb_build_agg", udaf(BuildAgg))
-    spark.udf.register("rb_and_agg", udaf(new CombineAgg(and = true)))
-    spark.udf.register("rb_or_agg", udaf(new CombineAgg(and = false)))
-  }
 }

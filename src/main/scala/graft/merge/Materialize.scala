@@ -1,197 +1,54 @@
 package graft.merge
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.functions.LatestRow.{earliestBy, latestBy}
+import graft.functions.LatestRow.latestBy
 
-/** Batch materialization: collapse a changelog (rows with PK, `__offset`,
-  * `_change_type`) into the table's current state — the engine's analog of
-  * the reference's snapshot∪log sort-merge (fluss-client/.../scanner/
-  * SortMergeReader.java:46) and of write-time merging in
-  * KvTablet.putAsLeader (fluss-server/.../kv/KvTablet.java:514).
+/** Batch materialization: collapse a PK table's changelog (rows with PK,
+  * `__offset`, `_change_type`) into its current state — the engine's analog
+  * of the reference's snapshot∪log sort-merge (fluss-client/.../scanner/
+  * SortMergeReader.java:46).
   *
-  * Everything here is a single aggregation per primary key — shuffle-once
-  * with map-side partial aggregation — chosen over `row_number()` windows
+  * The log holds POST-merge row images: every merge engine already ran at
+  * write time ([[WriteMerge]], the reference's KvTablet.putAsLeader —
+  * fluss-server/.../kv/KvTablet.java:514). So the collapse is the same for
+  * every engine: the latest image per key by offset, `-U` before-images
+  * skipped, a trailing `-D` removing the key.
+  *
+  * It is a single aggregation per primary key — shuffle-once with
+  * map-side partial aggregation — chosen over a `row_number()` window
   * deliberately: the partial combine shrinks each key to one row before
-  * the exchange, where a window would ship every version. The collapse
-  * itself is [[graft.functions.LatestRow]] (a hash-plannable
-  * `max_by`/`min_by`): built-in `max_by` carries a struct buffer, which
-  * forces SortAggregate — a per-partition sort of the full scan input on
-  * every state read; as a TypedImperativeAggregate the same plan is
-  * ObjectHashAggregate at every phase.
+  * the exchange, where a window would ship every version. The pick is
+  * [[graft.functions.LatestRow]] (a hash-plannable `max_by`): built-in
+  * `max_by` carries a struct buffer, which forces SortAggregate — a
+  * per-partition sort of the full scan input on every state read; as a
+  * TypedImperativeAggregate the same plan is ObjectHashAggregate at every
+  * phase.
   */
 object Materialize {
 
-  /** Current state of a PK-table changelog `log` according to the
-    * descriptor's merge engine. Output columns = desc.schema fields.
+  /** Current state of a PK-table changelog `log` of post-merge images.
+    * Output columns = desc.schema fields.
     */
   def currentState(log: DataFrame, desc: TableDescriptor): DataFrame = {
     require(desc.isPrimaryKeyTable, "materialization needs a primary key")
     // embedder sessions get the hash plan too, not just the repo harnesses
     graft.functions.LatestRow.ensureHashFallbackThreshold(log.sparkSession)
-    desc.mergeEngine match {
-      case MergeEngine.Default => defaultEngine(log, desc)
-      case MergeEngine.FirstRow => firstRow(log, desc)
-      case MergeEngine.Versioned(vc) => versioned(log, desc, vc)
-      case MergeEngine.Aggregation(aggs) => aggregation(log, desc, aggs)
-    }
-  }
-
-  private def pkCols(desc: TableDescriptor): Seq[Column] =
-    desc.primaryKey.map(col)
-
-  private def dataCols(desc: TableDescriptor): Seq[String] =
-    desc.schema.fieldNames.toSeq
-
-  private def nonPkCols(desc: TableDescriptor): Seq[String] =
-    dataCols(desc).filterNot(desc.primaryKey.contains)
-
-  /** Project the result back into declared column order, taking PK columns
-    * from the GROUPING attributes (not from the aggregated struct): Catalyst
-    * can then push a PK predicate below the Aggregate down to the scan,
-    * which is what makes point queries prune down to one bucket (P5).
-    */
-  private def selectOut(desc: TableDescriptor, structCol: String)(df: DataFrame): DataFrame =
-    df.select(dataCols(desc).map(c =>
-      if (desc.primaryKey.contains(c)) col(c)
-      else col(s"$structCol.$c").as(c)): _*)
-
-  /** Pre-filter applying DeleteBehavior.Ignore (DeleteBehavior.java:28-41). */
-  private def withDeleteBehavior(log: DataFrame, desc: TableDescriptor): DataFrame =
-    desc.deleteBehavior match {
-      case DeleteBehavior.Ignore => log.filter(col(Meta.ChangeTypeCol) =!= ChangeType.Delete)
-      case DeleteBehavior.Allow => log
-    }
-
-  /** DEFAULT engine (DefaultRowMerger.java:38): last write wins; a trailing
-    * DELETE removes the row. `-U` before-images never contribute state.
-    * One latest-row-by-offset aggregation.
-    */
-  private def defaultEngine(log: DataFrame, desc: TableDescriptor): DataFrame = {
-    val src = withDeleteBehavior(log, desc)
-      .filter(col(Meta.ChangeTypeCol) =!= ChangeType.UpdateBefore)
-    val payload = struct(
-      (col(Meta.ChangeTypeCol).as("__ct") +: nonPkCols(desc).map(col)): _*)
-    selectOut(desc, "__last")(
-      src.groupBy(pkCols(desc): _*)
-        .agg(latestBy(payload, col(Meta.Offset)).as("__last"))
-        .filter(col("__last.__ct") =!= ChangeType.Delete))
-  }
-
-  /** FIRST_ROW engine (FirstRowRowMerger.java:32): first write wins, later
-    * writes and deletes ignored.
-    */
-  private def firstRow(log: DataFrame, desc: TableDescriptor): DataFrame = {
-    val src = log.filter(col(Meta.ChangeTypeCol).isin(ChangeType.upserts: _*))
-    val payload = struct(
-      (nonPkCols(desc).map(col) :+ col(Meta.Offset).as("__off")): _*)
-    selectOut(desc, "__first")(
-      src.groupBy(pkCols(desc): _*)
-        .agg(earliestBy(payload, col(Meta.Offset)).as("__first")))
-  }
-
-  /** VERSIONED engine (VersionedRowMerger.java:43): keep the row with max
-    * version; null version = -infinity; on version ties the later offset
-    * wins (merge keeps new when cmp <= 0, VersionedRowMerger.java:75).
-    * DELETEs are ignored (not supported by the engine).
-    */
-  private def versioned(log: DataFrame, desc: TableDescriptor, vc: String): DataFrame = {
-    val src = log.filter(col(Meta.ChangeTypeCol).isin(ChangeType.upserts: _*))
-    val payload = struct(
-      (nonPkCols(desc).map(col) :+ col(Meta.Offset).as("__off")): _*)
-    // Order key: (version NULLS FIRST ~ -inf, offset). struct ordering is
-    // lexicographic; null version sorts first under max_by's ordering only
-    // if we substitute a floor — use a two-field struct with a not-null
-    // rank: (is_not_null, version, offset) so null < any version.
-    val orderKey = struct(
-      col(vc).isNotNull.as("__has_v"),
-      col(vc).as("__v"),
-      col(Meta.Offset).as("__o"))
-    selectOut(desc, "__best")(
-      src.groupBy(pkCols(desc): _*)
-        .agg(latestBy(payload, orderKey).as("__best")))
-  }
-
-  /** AGGREGATION engine (AggregateRowMerger.java:57): per-column aggregate
-    * on PK collision. A DELETE removes the row entirely — aggregation
-    * restarts after it — so only records after each key's last DELETE
-    * contribute (unless DeleteBehavior.Ignore drops deletes entirely).
-    * `-U` retraction: sum subtracts; other functions ignore `-U` rows
-    * (matching the reference's partial retraction support).
-    */
-  private def aggregation(log: DataFrame, desc: TableDescriptor,
-      aggs: Map[String, String]): DataFrame = {
-    val src0 = withDeleteBehavior(log, desc)
-    // Only rows after the key's last DELETE contribute. Computed with an
-    // aggregate + self-join-free approach: first find last delete offset
-    // per key (tiny aggregate on the same shuffle key), broadcast-join
-    // back. Both aggregations hash-partition on the PK so AQE coalesces.
-    val hasDeletes = desc.deleteBehavior == DeleteBehavior.Allow
-    val src = if (hasDeletes) {
-      val lastDel = src0
-        .groupBy(pkCols(desc): _*)
-        .agg(max(when(col(Meta.ChangeTypeCol) === ChangeType.Delete,
-          col(Meta.Offset))).as("__last_del"))
-        .filter(col("__last_del").isNotNull)
-      src0.join(lastDel, desc.primaryKey, "left")
-        .filter(col("__last_del").isNull || col(Meta.Offset) > col("__last_del"))
-        .drop("__last_del")
-        .filter(col(Meta.ChangeTypeCol) =!= ChangeType.Delete)
-    } else src0
-    // Results keep the declared field type (the reference aggregates within
-    // the column's own type, FieldSumAgg.java:48-77) — cast back since e.g.
-    // Spark's sum(int) widens to long.
-    val exprs = desc.schema.fields.filterNot(f => desc.primaryKey.contains(f.name))
-      .map { f =>
-        val fn = aggs.getOrElse(f.name, AggFunction.LastValue)
-        aggExpr(f.name, fn).cast(f.dataType).as(f.name)
-      }
-    src.groupBy(pkCols(desc): _*).agg(exprs.head, exprs.tail: _*)
-      .select(dataCols(desc).map(col): _*)
-  }
-
-  /** One column's aggregate expression in arrival (`__offset`) order,
-    * null-skipping semantics matching the reference field aggregators
-    * (fluss-server/.../rowmerger/aggregate/functions/Field*Agg.java).
-    * Retracting `-U` rows: sum subtracts, others skip the row.
-    */
-  private[graft] def aggExpr(c: String, fn: String): Column = {
-    val ct = col(Meta.ChangeTypeCol)
-    val isRetract = ct === ChangeType.UpdateBefore
-    val v = when(!isRetract, col(c)) // null for retraction rows (skipped)
-    val off = col(Meta.Offset)
-    fn match {
-      case AggFunction.Sum =>
-        sum(when(isRetract, -col(c)).otherwise(col(c)))
-      case AggFunction.Product => graft.functions.Aggs.product(v)
-      case AggFunction.Max => max(v)
-      case AggFunction.Min => min(v)
-      case AggFunction.LastValue =>
-        // last row's value even when null: wrap in struct so the pick
-        // function sees it
-        latestBy(struct(v.as("v")), when(!isRetract, off))("v")
-      case AggFunction.LastValueIgnoreNulls =>
-        latestBy(col(c), when(v.isNotNull, off))
-      case AggFunction.FirstValue =>
-        earliestBy(struct(v.as("v")), when(!isRetract, off))("v")
-      case AggFunction.FirstValueIgnoreNulls =>
-        earliestBy(col(c), when(v.isNotNull, off))
-      case AggFunction.BoolAnd => bool_and(v)
-      case AggFunction.BoolOr => bool_or(v)
-      case AggFunction.Rb32 | AggFunction.Rb64 =>
-        // BYTES column of serialized bitmaps; group result = OR-union
-        // (same semantics as the sequential fold's Bitmaps.union)
-        graft.functions.Bitmaps.rb_or_agg(v)
-      case other if other.startsWith(s"${AggFunction.ListAgg}") =>
-        // "listagg" or "listagg:<delim>"; arrival order, nulls skipped
-        val delim = if (other.contains(':')) other.split(":", 2)(1) else ","
-        val collected = array_sort(collect_list(
-          when(v.isNotNull, struct(off.as("o"), v.as("v")))))
-        val joined = array_join(transform(collected, x => x("v")), delim)
-        when(size(collected) === 0, lit(null)).otherwise(joined)
-      case other => throw new IllegalArgumentException(s"unknown agg: $other")
-    }
+    val dataCols = desc.schema.fieldNames.toSeq
+    val payload = struct((col(Meta.ChangeTypeCol).as("__ct") +:
+      dataCols.filterNot(desc.primaryKey.contains).map(col)): _*)
+    // PK columns come from the GROUPING attributes (not from the
+    // aggregated struct): Catalyst can then push a PK predicate below the
+    // Aggregate down to the scan, which is what makes point queries prune
+    // down to one bucket (P5)
+    log.filter(col(Meta.ChangeTypeCol) =!= ChangeType.UpdateBefore)
+      .groupBy(desc.primaryKey.map(col): _*)
+      .agg(latestBy(payload, col(Meta.Offset)).as("__last"))
+      .filter(col("__last.__ct") =!= ChangeType.Delete)
+      .select(dataCols.map(c =>
+        if (desc.primaryKey.contains(c)) col(c)
+        else col(s"__last.$c").as(c)): _*)
   }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.types._
 
 import graft.core._
 
-/** Row-level merge engines — the sequential-fold counterpart of
-  * [[Materialize]], used by the write path (changelog generation needs
-  * per-record old/new images) and by Structured Streaming state functions.
+/** Row-level merge engines — the sequential fold that defines each
+  * engine's semantics: [[WriteMerge]]'s cogroup fallback runs it, and its
+  * SQL windows are cross-checked against it (MergeCrossCheckSpec).
   *
   * Contract mirrors the reference RowMerger (fluss-server/.../kv/rowmerger/
   * RowMerger.java:84-110): given the current state and one incoming record,
@@ -135,8 +135,8 @@ object RowMergers {
         if (in.isRetract) {
           // Retraction with no prior state: subtract into an IMPLICIT ZERO
           // for sum columns (others stay null) — the same thing the
-          // distributed path's sum(when(isRetract, -col)) computes for a
-          // key whose first log row is a -U. Keeping the two
+          // windowed path's sum(when(isRetract, -col)) computes for a
+          // key whose first row is a -U. Keeping the two
           // implementations byte-identical matters more than rejecting a
           // malformed changelog (a -U should always follow a +I/+U).
           val vals = desc.schema.fields.zipWithIndex.map { case (f, i) =>
@@ -149,7 +149,7 @@ object RowMergers {
           val merged = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
             vals.toArray[Any], desc.schema)
           // state exists even when every aggregated value is null: the
-          // distributed groupBy emits a group for ANY log row of the key
+          // windowed path emits a `+I` for ANY first row of the key
           MergeResult(Some(merged), Seq(ChangeType.Insert -> merged))
         }
         else MergeResult(Some(in.row), Seq(ChangeType.Insert -> in.row))
@@ -171,9 +171,8 @@ object RowMergers {
 
   /** Per-field aggregate step (Field*Agg.java): null-skipping; sum
     * subtracts on retraction (into an implicit zero when the accumulator
-    * is still null, matching [[Materialize.aggExpr]]'s
-    * sum(when(isRetract, -col)) semantics exactly), others ignore
-    * retraction rows.
+    * is still null, matching [[WriteMerge]]'s running
+    * sum(when(isRetract, -col)) exactly), others ignore retraction rows.
     */
   private[graft] def aggField(fn: String, dt: DataType, acc: Any, in: Any,
       retract: Boolean): Any = {

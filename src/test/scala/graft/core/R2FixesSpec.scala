@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
-import graft.merge.{Materialize, RowMergers}
+import graft.merge.RowMergers
 import graft.pipeline.Multimodal
 
 /** Regression specs for the round-1 ADVICE findings:
@@ -16,8 +16,8 @@ import graft.pipeline.Multimodal
   * - streaming-sink batch ids commit atomically with the log offsets
   *   (no replay double-apply window);
   * - Aggregation-engine retraction-before-insert agrees between the
-  *   sequential RowMergers fold and Materialize's hash-agg collapse
-  *   (both subtract into an implicit zero);
+  *   sequential RowMergers fold and the write path's windowed merge,
+  *   read back through a scan (both subtract into an implicit zero);
   * - frameSample emits zero frames for an empty media blob.
   */
 class R2FixesSpec extends SparkTestBase {
@@ -72,14 +72,16 @@ class R2FixesSpec extends SparkTestBase {
     val desc = TableDescriptor(schema, primaryKey = Seq("k"),
       mergeEngine = MergeEngine.Aggregation(Map("v" -> AggFunction.Sum)))
     // changelog where key 1's FIRST row is a -U retraction
-    val logSchema = StructType(schema.fields ++ Seq(
-      StructField(Meta.ChangeTypeCol, StringType),
-      StructField(Meta.Offset, LongType)))
     val log = spark.createDataFrame(Seq(
       Row(1L, 5, ChangeType.UpdateBefore, 0L),
       Row(1L, 3, ChangeType.Insert, 1L),
-      Row(2L, 4, ChangeType.UpdateBefore, 0L)).asJava, logSchema)
-    val distributed = Materialize.currentState(log, desc).collect().toSeq
+      Row(2L, 4, ChangeType.UpdateBefore, 0L)).asJava,
+      StructType(schema.fields ++ Seq(
+        StructField(Meta.ChangeTypeCol, StringType),
+        StructField("ord", LongType))))
+    val t = newCatalog().createTable("db", "retract_first", desc)
+    t.applyChangelog(log, orderBy = Seq(col("ord")))
+    val distributed = t.scan().collect().toSeq
 
     def fold(ops: Seq[(Row, Boolean)]): Option[Row] =
       ops.foldLeft(Option.empty[Row]) { case (st, (r, retract)) =>

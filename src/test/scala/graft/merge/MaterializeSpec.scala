@@ -1,14 +1,19 @@
 package graft.merge
 
-import org.apache.spark.sql.Row
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.SparkTestBase
 import graft.core._
 
-/** Batch materialization over raw changelogs — and a cross-check that the
-  * DataFrame path (Materialize) agrees with the sequential row-fold path
-  * (RowMergers) on a pseudo-random workload, per SURVEY §5.
+/** What a PK table materializes: the last-write-wins collapse of a log of
+  * post-merge images (Materialize), and — through the write path, where
+  * every merge engine runs — each engine's state from a raw changelog,
+  * cross-checked against the sequential row-fold path (RowMergers) on a
+  * pseudo-random workload, per SURVEY §5.
   */
 class MaterializeSpec extends SparkTestBase {
   import scala.jdk.CollectionConverters._
@@ -22,10 +27,22 @@ class MaterializeSpec extends SparkTestBase {
     StructField(Meta.ChangeTypeCol, StringType),
     StructField(Meta.Offset, LongType)))
 
+  private lazy val cat =
+    new Catalog(Files.createTempDirectory("graft-mat").toString, spark)
+
   private def logDf(rows: (Long, Integer, String, String, Long)*) =
     spark.createDataFrame(
       rows.map { case (k, v, s, ct, off) => Row(k, v, s, ct, off) }.asJava,
       logSchema)
+
+  /** The state a table of `desc` reads back after `log`'s rows arrive
+    * through `applyChangelog`, in offset order.
+    */
+  private def written(desc: TableDescriptor, log: DataFrame): Array[Row] = {
+    val t = cat.createTable("mat", "t" + System.nanoTime(), desc)
+    t.applyChangelog(log, orderBy = Seq(col(Meta.Offset)))
+    t.scan().collect()
+  }
 
   test("default: last write wins, trailing delete removes") {
     val log = logDf(
@@ -41,15 +58,15 @@ class MaterializeSpec extends SparkTestBase {
       (1L, 3, "c", "+A", 0L), (1L, 1, "a", "+A", 1L),
       (2L, 9, "v9", "+A", 2L), (2L, 4, "v4", "+A", 3L), (2L, 9, "v9b", "+A", 4L),
       (3L, null, "nv", "+A", 5L))
-    val first = Materialize.currentState(log,
-      TableDescriptor(schema, primaryKey = Seq("k"), mergeEngine = MergeEngine.FirstRow))
-    assertSameRows(first.collect(),
+    val first = written(
+      TableDescriptor(schema, primaryKey = Seq("k"), mergeEngine = MergeEngine.FirstRow), log)
+    assertSameRows(first,
       Seq(Row(1L, 3, "c"), Row(2L, 9, "v9"), Row(3L, null, "nv")))
-    val versioned = Materialize.currentState(log,
+    val versioned = written(
       TableDescriptor(schema, primaryKey = Seq("k"),
-        mergeEngine = MergeEngine.Versioned("v"), deleteBehavior = DeleteBehavior.Ignore))
+        mergeEngine = MergeEngine.Versioned("v"), deleteBehavior = DeleteBehavior.Ignore), log)
     // max v wins; tie -> later offset (v9b); null version = -inf
-    assertSameRows(versioned.collect(),
+    assertSameRows(versioned,
       Seq(Row(1L, 3, "c"), Row(2L, 9, "v9b"), Row(3L, null, "nv")))
   }
 
@@ -58,11 +75,14 @@ class MaterializeSpec extends SparkTestBase {
       (1L, 1, "a", "+I", 0L), (1L, 2, "b", "+U", 1L),
       (1L, null, null, "-D", 2L), (1L, 5, "c", "+I", 3L), (1L, 7, "d", "+U", 4L),
       (2L, 10, "x", "+I", 5L), (2L, 3, null, "-U", 6L))
-    val desc = TableDescriptor(schema, primaryKey = Seq("k"),
-      mergeEngine = MergeEngine.Aggregation(Map(
-        "v" -> AggFunction.Sum, "s" -> (AggFunction.ListAgg + ":,"))))
-    val got = Materialize.currentState(log, desc)
-    assertSameRows(got.collect(), Seq(Row(1L, 12, "c,d"), Row(2L, 7, "x")))
+    def agg(s: String) = TableDescriptor(schema, primaryKey = Seq("k"),
+      mergeEngine = MergeEngine.Aggregation(Map("v" -> AggFunction.Sum, "s" -> s)))
+    // listagg runs on the cogroup fold, last_value_ignore_nulls on the
+    // windowed path: both restart after the delete and skip the -U value
+    assertSameRows(written(agg(AggFunction.ListAgg + ":,"), log),
+      Seq(Row(1L, 12, "c,d"), Row(2L, 7, "x")))
+    assertSameRows(written(agg(AggFunction.LastValueIgnoreNulls), log),
+      Seq(Row(1L, 12, "d"), Row(2L, 7, "x")))
   }
 
   test("cross-check: batch materialization == sequential row fold (random)") {
@@ -82,7 +102,7 @@ class MaterializeSpec extends SparkTestBase {
         MergeEngine.Aggregation(Map("v" -> AggFunction.Sum,
           "s" -> AggFunction.LastValueIgnoreNulls)))) {
       val desc = TableDescriptor(schema, primaryKey = Seq("k"), mergeEngine = engine)
-      val batch = Materialize.currentState(logDf(rows: _*), desc).collect()
+      val batch = written(desc, logDf(rows: _*))
       // sequential oracle via RowMergers
       val folded = rows.groupBy(_._1).flatMap { case (k, rs) =>
         var st: Option[Row] = None

@@ -11,12 +11,16 @@ import org.apache.spark.sql.types._
 import graft.SparkTestBase
 import graft.core._
 
-/** Randomized cross-check (SURVEY §5): the distributed write+read path
-  * (cogroup changelog generation → log → Materialize's SQL collapse,
-  * optionally through a snapshot) must agree with a sequential in-memory
-  * fold of RowMergers over the same ops. Materialize (hash-agg expressions)
-  * and RowMergers (row-at-a-time Scala) are independent implementations of
-  * the merge semantics, so agreement here pins both.
+/** Randomized cross-check (SURVEY §5): the distributed write path — the
+  * merge engines at write time ([[WriteMerge]]: its SQL windows or the
+  * cogroup fallback) appending post-merge images to the log — must agree
+  * with a sequential in-memory fold of RowMergers over the same ops, both
+  * in the changelog it writes (per key, in offset order: change type and
+  * image, under both changelog images) and in the state a scan reads
+  * back through the last-write-wins collapse (optionally through a
+  * snapshot). The SQL windows and RowMergers (row-at-a-time Scala) are
+  * independent implementations of the merge semantics, so agreement here
+  * pins both; the cogroup runs RowMergers itself and pins the plumbing.
   */
 class MergeCrossCheckSpec extends SparkTestBase {
   import scala.jdk.CollectionConverters._
@@ -31,54 +35,123 @@ class MergeCrossCheckSpec extends SparkTestBase {
   private lazy val cat =
     new Catalog(Files.createTempDirectory("graft-cc").toString, spark)
 
-  /** Random (row, isDelete) ops over a small keyspace, with nulls. */
-  private def randomOps(rnd: Random, n: Int): Seq[(Row, Boolean)] =
+  /** One op: a row and its change type — [[ChangeType.Insert]] (an
+    * upsert), [[ChangeType.Delete]] or [[ChangeType.UpdateBefore]] (a
+    * retraction).
+    */
+  private type Op = (Row, String)
+  private type Batch = (Seq[Op], Option[Seq[String]])
+
+  /** The write API a batch goes through. */
+  private sealed trait Via
+  /** `upsertMixed`: deletes as `__delete`, partial batches allowed. */
+  private case object Mixed extends Via
+  /** `applyChangelog`: `_change_type`, so retractions too. */
+  private case object Changelog extends Via
+  /** `upsert`: delete-free, so a partial batch takes the windowed path. */
+  private case object Upsert extends Via
+
+  /** Random ops over a small keyspace, with nulls; retractions only when
+    * asked (the draw sequence is otherwise unchanged).
+    */
+  private def randomOps(rnd: Random, n: Int, retractions: Boolean = false): Seq[Op] =
     (0 until n).map { _ =>
       val k = rnd.nextInt(12).toLong
       val a: Any = if (rnd.nextInt(8) == 0) null else Int.box(rnd.nextInt(100))
       val b: Any = if (rnd.nextInt(8) == 0) null else "s" + rnd.nextInt(30)
       val ver: Any = if (rnd.nextInt(8) == 0) null else Long.box(rnd.nextInt(50).toLong)
       val fl: Any = if (rnd.nextInt(8) == 0) null else Boolean.box(rnd.nextBoolean())
-      (new GenericRowWithSchema(Array[Any](k, a, b, ver, fl), schema): Row,
-        rnd.nextInt(6) == 0)
+      val ct =
+        if (rnd.nextInt(6) == 0) ChangeType.Delete
+        else if (retractions && rnd.nextInt(5) == 0) ChangeType.UpdateBefore
+        else ChangeType.Insert
+      (new GenericRowWithSchema(Array[Any](k, a, b, ver, fl), schema): Row, ct)
     }
 
-  private type Batch = (Seq[(Row, Boolean)], Option[Seq[String]])
-
-  private def expectedState(desc: TableDescriptor,
-      batches: Seq[Batch]): Seq[Row] = {
+  /** The sequential RowMergers fold: final state, and each key's emitted
+    * changes in order (change type, then the image's values).
+    */
+  private def fold(desc: TableDescriptor,
+      batches: Seq[Batch]): (Seq[Row], Map[Long, Seq[Seq[String]]]) = {
     var st = Map.empty[Long, Row]
+    val changes = scala.collection.mutable.Map.empty[Long, Vector[Seq[String]]]
     batches.foreach { case (ops, target) =>
-      ops.foreach { case (row, del) =>
-        val res = RowMergers.merge(desc, st.get(row.getLong(0)),
-          RowMergers.Incoming(row, isDelete = del, targetColumns = target))
+      ops.foreach { case (row, ct) =>
+        val k = row.getLong(0)
+        val res = RowMergers.merge(desc, st.get(k),
+          RowMergers.Incoming(row, isDelete = ct == ChangeType.Delete,
+            isRetract = ct == ChangeType.UpdateBefore, targetColumns = target))
         res.state match {
-          case Some(r) => st += row.getLong(0) -> r
-          case None => st -= row.getLong(0)
+          case Some(r) => st += k -> r
+          case None => st -= k
+        }
+        res.changes.foreach { case (c, img) =>
+          changes(k) = changes.getOrElse(k, Vector.empty) :+
+            (c +: img.toSeq.map(String.valueOf))
         }
       }
     }
-    st.values.toSeq
+    (st.values.toSeq, changes.toMap)
   }
 
-  private def run(name: String, desc: TableDescriptor,
-      compactBetween: Boolean, partialBatch: Boolean): Unit = {
-    val rnd = new Random(42 + name.hashCode)
-    val batches: Seq[Batch] = Seq(
-      (randomOps(rnd, 120), None),
-      (randomOps(rnd, 80), if (partialBatch) Some(Seq("a")) else None))
-    val t = cat.createTable("cc", name + System.nanoTime(), desc)
-    val inSchema = StructType(schema.fields ++ Seq(
-      StructField("__delete", BooleanType), StructField("ord", LongType)))
-    batches.zipWithIndex.foreach { case ((ops, target), i) =>
-      val df = spark.createDataFrame(
-        ops.zipWithIndex.map { case ((r, del), j) =>
-          Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), del, j.toLong)
-        }.asJava, inSchema)
-      t.upsertMixed(df, orderBy = Seq(df("ord")), targetColumns = target)
-      if (compactBetween && i == 0) t.compact()
+  /** Write `batches` through `via` into a fresh table of `desc` under each
+    * changelog image; its changelog and scan must equal the fold's.
+    */
+  private def check(name: String, desc: TableDescriptor, batches: Seq[Batch],
+      via: Via, compactBetween: Boolean): Unit =
+    Seq(ChangelogImage.Full, ChangelogImage.Wal).foreach { image =>
+      val d = desc.copy(changelogImage = image)
+      val t = cat.createTable("cc",
+        s"${name}_${image.toString.toLowerCase}${System.nanoTime()}", d)
+      batches.zipWithIndex.foreach { case ((ops, target), i) =>
+        val (extra, flags): (Seq[StructField], String => Seq[Any]) = via match {
+          case Mixed => (Seq(StructField("__delete", BooleanType)),
+            ct => Seq(ct == ChangeType.Delete))
+          case Changelog => (Seq(StructField(Meta.ChangeTypeCol, StringType)), ct => Seq(ct))
+          case Upsert => (Nil, _ => Nil)
+        }
+        val df = spark.createDataFrame(
+          ops.zipWithIndex.map { case ((r, ct), j) =>
+            Row.fromSeq(r.toSeq ++ flags(ct) :+ j.toLong)
+          }.asJava,
+          StructType(schema.fields ++ extra :+ StructField("ord", LongType)))
+        val ord = Seq(df("ord"))
+        via match {
+          case Mixed => t.upsertMixed(df, orderBy = ord, targetColumns = target)
+          case Changelog =>
+            require(target.isEmpty, "applyChangelog writes full rows")
+            t.applyChangelog(df, orderBy = ord)
+          case Upsert =>
+            require(ops.forall(_._2 == ChangeType.Insert), "upsert cannot delete")
+            t.upsert(df, targetColumns = target, orderBy = ord)
+        }
+        if (compactBetween && i == 0) t.compact()
+      }
+      val (expState, expChanges) = fold(d, batches)
+      val n = schema.length
+      val gotChanges = t.changelog().collect().toSeq
+        .groupBy(_.getLong(0))
+        .map { case (k, rs) =>
+          k -> rs.sortBy(_.getAs[Long](Meta.LogOffset)).map(r =>
+            r.getAs[String](Meta.ChangeTypeCol) +: (0 until n).map(i => String.valueOf(r.get(i))))
+        }
+      assert(gotChanges == expChanges, s"$name/$image changelog:\n" +
+        (gotChanges.keySet ++ expChanges.keySet).toSeq.sorted
+          .filter(k => gotChanges.get(k) != expChanges.get(k))
+          .map(k => s"key $k\n got ${gotChanges.get(k)}\n exp ${expChanges.get(k)}")
+          .mkString("\n"))
+      assertSameRows(t.scan().collect().toSeq, expState)
     }
-    assertSameRows(t.scan().collect().toSeq, expectedState(desc, batches))
+
+  /** Two random batches (120 and 80 ops), the second partial when asked. */
+  private def run(name: String, desc: TableDescriptor,
+      compactBetween: Boolean, partialBatch: Boolean, via: Via = Mixed): Unit = {
+    val rnd = new Random(42 + name.hashCode)
+    val retractions = via == Changelog
+    val batches: Seq[Batch] = Seq(
+      (randomOps(rnd, 120, retractions), None),
+      (randomOps(rnd, 80, retractions), if (partialBatch) Some(Seq("a")) else None))
+    check(name, desc, batches, via, compactBetween)
   }
 
   test("default engine: distributed == sequential (deletes, partial batch)") {
@@ -111,60 +184,55 @@ class MergeCrossCheckSpec extends SparkTestBase {
   }
 
   test("aggregation engine: distributed == sequential (sum/listagg/max)") {
-    run("agg", TableDescriptor(schema, primaryKey = Seq("k"),
+    val desc = TableDescriptor(schema, primaryKey = Seq("k"),
       numBuckets = 4, mergeEngine = MergeEngine.Aggregation(Map(
         "a" -> AggFunction.Sum,
         "b" -> (AggFunction.ListAgg + ":|"),
-        "ver" -> AggFunction.Max))),
-      compactBetween = false, partialBatch = false)
+        "ver" -> AggFunction.Max)))
+    run("agg", desc, compactBetween = false, partialBatch = false)
+    run("agg_ret", desc, compactBetween = false, partialBatch = false, via = Changelog)
   }
 
   test("aggregation engine through a snapshot compact") {
-    run("agg_snap", TableDescriptor(schema, primaryKey = Seq("k"),
+    val desc = TableDescriptor(schema, primaryKey = Seq("k"),
       numBuckets = 4, mergeEngine = MergeEngine.Aggregation(Map(
         "a" -> AggFunction.Sum,
         "b" -> AggFunction.LastValueIgnoreNulls,
-        "ver" -> AggFunction.Min))),
-      compactBetween = true, partialBatch = false)
+        "ver" -> AggFunction.Min)))
+    run("agg_snap", desc, compactBetween = true, partialBatch = false)
+    run("agg_snap_ret", desc, compactBetween = true, partialBatch = false, via = Changelog)
   }
 
   test("default partial update, delete-free: windowed path == sequential") {
     // upsert() (no deletes possible) routes Default+targetColumns through
     // the windowed aggregation mapping — pin it to the sequential fold
-    val desc = TableDescriptor(schema, primaryKey = Seq("k"), numBuckets = 4)
     val rnd = new Random(99)
     // batch 1 touches only half the keyspace, so batch 2's partial rows
     // hit BOTH merge cases: existing state (untouched cols keep state
     // values) and no state (untouched cols must store null)
-    val full = randomOps(rnd, 120).map { case (r, _) => (r, false) }
+    val full = randomOps(rnd, 120).map { case (r, _) => (r, ChangeType.Insert) }
       .filter(_._1.getLong(0) < 6)
-    val partial = randomOps(rnd, 80).map { case (r, _) => (r, false) }
-    val batches: Seq[Batch] = Seq((full, None), (partial, Some(Seq("a", "ver"))))
-    val t = cat.createTable("cc", "pwin" + System.nanoTime(), desc)
-    val inSchema = StructType(schema.fields :+ StructField("ord", LongType))
-    batches.foreach { case (ops, target) =>
-      val df = spark.createDataFrame(
-        ops.zipWithIndex.map { case ((r, _), j) =>
-          Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), j.toLong)
-        }.asJava, inSchema)
-      t.upsert(df, targetColumns = target, orderBy = Seq(df("ord")))
-    }
-    assertSameRows(t.scan().collect().toSeq, expectedState(desc, batches))
+    val partial = randomOps(rnd, 80).map { case (r, _) => (r, ChangeType.Insert) }
+    check("pwin", TableDescriptor(schema, primaryKey = Seq("k"), numBuckets = 4),
+      Seq((full, None), (partial, Some(Seq("a", "ver")))), Upsert,
+      compactBetween = false)
   }
 
   test("aggregation engine first/bool window forms: distributed == sequential") {
-    run("agg_fv", TableDescriptor(schema, primaryKey = Seq("k"),
-      numBuckets = 4, mergeEngine = MergeEngine.Aggregation(Map(
-        "a" -> AggFunction.FirstValue,
-        "b" -> AggFunction.FirstValueIgnoreNulls,
-        "ver" -> AggFunction.LastValue,
-        "fl" -> AggFunction.BoolAnd))),
-      compactBetween = false, partialBatch = false)
-    run("agg_bool", TableDescriptor(schema, primaryKey = Seq("k"),
-      numBuckets = 4, mergeEngine = MergeEngine.Aggregation(Map(
-        "a" -> AggFunction.Min,
-        "fl" -> AggFunction.BoolOr))),
-      compactBetween = true, partialBatch = false)
+    for ((name, aggs, compact) <- Seq(
+        ("agg_fv", Map(
+          "a" -> AggFunction.FirstValue,
+          "b" -> AggFunction.FirstValueIgnoreNulls,
+          "ver" -> AggFunction.LastValue,
+          "fl" -> AggFunction.BoolAnd), false),
+        ("agg_bool", Map(
+          "a" -> AggFunction.Min,
+          "fl" -> AggFunction.BoolOr), true));
+        via <- Seq(Mixed, Changelog)) {
+      run(if (via == Mixed) name else s"${name}_ret", TableDescriptor(schema, primaryKey = Seq("k"),
+        numBuckets = 4, mergeEngine = MergeEngine.Aggregation(aggs)),
+        compactBetween = compact, partialBatch = false, via = via)
+    }
   }
 
   test("aggregation engine rb64: write-path union == expected value sets") {
@@ -189,16 +257,5 @@ class MergeCrossCheckSpec extends SparkTestBase {
       k -> vs.map(_._2).distinct.sorted.toSeq
     }
     assert(got == exp)
-    // and the distributed collapse path (Materialize with the agg desc)
-    val dist = Materialize.currentState(
-      t.changelog()
-        .filter(org.apache.spark.sql.functions.col(Meta.ChangeTypeCol) =!=
-          ChangeType.UpdateBefore)
-        .withColumnRenamed(Meta.LogOffset, Meta.Offset), desc)
-    // post-merge images collapse to the same final bitmap per key
-    val got2 = dist.collect()
-      .map(r => r.getLong(0) -> Bitmaps.toValues(r.getAs[Array[Byte]](1)))
-      .toMap
-    assert(got2 == exp)
   }
 }

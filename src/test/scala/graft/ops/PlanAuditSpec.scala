@@ -259,6 +259,79 @@ class PlanAuditSpec extends SparkTestBase {
       }
   }
 
+  test("upsert: each merge engine plans its measured exchanges, sorts and windows") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types._
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.core._
+
+    val planHelper = new AdaptiveSparkPlanHelper {}
+    /** (exchanges, sorts, windows) of an executed plan, AQE stages included. */
+    def shape(qe: QueryExecution): (Int, Int, Int) = {
+      val nodes = planHelper.collect(qe.executedPlan) { case n => n }
+      (nodes.count(_.isInstanceOf[ShuffleExchangeLike]),
+        nodes.count(_.isInstanceOf[SortExec]), nodes.count(_.isInstanceOf[WindowExec]))
+    }
+    val cat = new Catalog(
+      Files.createTempDirectory("graft-audit-engines").toString, spark)
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType), StructField("s", StringType)))
+    def rows(from: Long, until: Long): DataFrame = spark.range(from, until)
+      .selectExpr("id AS k", "id * 10 AS v", "CAST(id AS STRING) AS s")
+    val sum = MergeEngine.Aggregation(Map("v" -> AggFunction.Sum))
+    // (path, engine, write of a 1k-row batch, measured (exchanges, sorts,
+    // windows) of the merge-and-number job: the merge windows and the
+    // offset numbering window, behind the one bucket exchange)
+    val paths: Seq[(String, MergeEngine, (GraftTable, DataFrame) => Unit, (Int, Int, Int))] = Seq(
+      ("default upsert", MergeEngine.Default, (t, b) => t.upsert(b), (1, 2, 2)),
+      ("default upsertMixed", MergeEngine.Default,
+        (t, b) => t.upsertMixed(b.selectExpr("*", "k % 5 = 0 AS __delete")), (1, 2, 2)),
+      ("partial update", MergeEngine.Default,
+        (t, b) => t.upsert(b, targetColumns = Some(Seq("v"))), (1, 3, 4)),
+      ("aggregation", sum, (t, b) => t.upsert(b), (1, 3, 4)),
+      ("first_row", MergeEngine.FirstRow, (t, b) => t.upsert(b), (1, 2, 2)),
+      ("versioned", MergeEngine.Versioned("v"), (t, b) => t.upsert(b), (1, 2, 3)),
+      // listagg has no exact running form: the RowMergers cogroup
+      ("cogroup", MergeEngine.Aggregation(Map("s" -> AggFunction.ListAgg)),
+        (t, b) => t.upsert(b), (3, 3, 1)))
+    paths.zipWithIndex.foreach { case ((name, engine, write, (ex, sorts, windows)), i) =>
+      val t = cat.createTable("audit", s"engine_$i", TableDescriptor(
+        schema, primaryKey = Seq("k"), numBuckets = 16, mergeEngine = engine))
+      t.upsert(rows(0, 4000))
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(f -> qe)
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        write(t, rows(3500, 4500))
+        eventually(timeout(30.seconds)) {
+          val fs = plans.asScala.map(_._1).toSeq
+          assert(fs.contains("localCheckpoint") && fs.contains("command"), fs)
+        }
+      } finally spark.listenerManager.unregister(listener)
+      val all = plans.asScala.toSeq
+      val merge = all.filter(_._1 == "localCheckpoint").map(_._2)
+      val commit = all.filter(_._1 == "command").map(_._2)
+      assert(merge.size == 1 && commit.size == 1, s"$name: ${all.map(_._1)}")
+      val (gotEx, gotSorts, gotWindows) = shape(merge.head)
+      assert(gotEx == ex && gotSorts == sorts && gotWindows <= windows,
+        s"$name: ($gotEx, $gotSorts, $gotWindows) vs ($ex, $sorts, <= $windows)\n" +
+          merge.head.executedPlan)
+      assert(shape(commit.head)._1 == 0, s"$name: ${commit.head.executedPlan}")
+    }
+  }
+
   test("sim1: scoring runs inside whole-stage codegen") {
     val p = plan("sim1_cosine_topk")
     // `*(n)` prefixes mark WholeStageCodegen spans; graft_dot must be
