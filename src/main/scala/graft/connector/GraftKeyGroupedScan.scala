@@ -352,7 +352,10 @@ final class GraftKeyGroupedScan(table: GraftTable, required: StructType,
     // flips to COLUMNAR output.
     val (manifestHi, logEntries, logGateFree) = tier match {
       case GraftScanTier.SnapshotOnly => (Map.empty[Int, Long], Nil, true)
-      case _ => table.visibleLogPlan()
+      case _ =>
+        val m = table.tableLog.read()
+        val log = table.tableLog.visible(m)
+        (m.offsets, log.files.map(f => f.path -> f.len), log.gateFree)
     }
     val cutoffs: Option[Map[Int, Long]] =
       if (tier != GraftScanTier.State) None

@@ -346,7 +346,7 @@ object GraftProcedures {
         // HLL NDV) so plan-time CBO stats hold at any table size — the
         // arming path for tables whose history predates write-time stats
         t.analyzeColumnStats()
-        val cols = t.readColStatsBlob().map(_.cols.size).getOrElse(0)
+        val cols = t.tableLog.read().colStats.map(_.cols.size).getOrElse(0)
         s"column stats rebuilt into the manifest ($cols columns)"
       })
       case "remove_orphan_files" => Some(proc(catalog, "remove_orphan_files",

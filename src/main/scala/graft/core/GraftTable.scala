@@ -34,16 +34,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   /** The session this handle plans against (read-only accessor). */
   def sparkSession: SparkSession = spark
 
-  private val logDir = s"$path/log"
+  /** The commit layer: manifest, visible-log listing, lock, publish. */
+  private[graft] val tableLog = new TableLog(path, desc)
+  private val logDir = tableLog.logDir
   private val snapshotDir = s"$path/snapshot"
-  private val offsetsFile = s"$path/_offsets.json"
   private val snapshotMetaFile = s"$path/_snapshot.json"
-  private val autoIncFile = s"$path/_autoinc.json"
   private val vacuumMarkerFile = s"$path/_vacuumed.json"
   private val retentionMarkerFile = s"$path/_retention.json"
   private val leasesFile = s"$path/_leases.json"
   private val rollbackEpochFile = s"$path/_rollbacks.json"
-  private val rebucketMarkerFile = s"$path/_rebucket.json"
   @volatile private var snapshotLayoutChecked = false
 
   // P5: let the optimizer rule map this log dir back to its bucket layout.
@@ -60,24 +59,6 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   // log read
   // ---------------------------------------------------------------------
 
-  // Commit-id prefix on log file names: every committed file is named
-  // `cid-<uuid>--<sparkPartName>` and its commit id is recorded in the
-  // manifest ATOMICALLY with the offsets (same _offsets.json rename). A
-  // crash mid-move leaves files whose id was never published — readers
-  // enumerate only manifested files, so the residue can never surface,
-  // even after later commits reuse its offset range (the reference closes
-  // this with the tablet leader's WriterStateManager; this is the
-  // shared-filesystem analog of iceberg's per-commit file manifest, one
-  // ~36-byte id per commit instead of every file name). Un-prefixed files
-  // (legacy layout) stay visible unconditionally, gated only by offsets.
-  private val CidPrefix = "cid-"
-  private val CidLen = CidPrefix.length + 36 // uuid is 36 chars
-
-  private def cidOf(fileName: String): Option[String] =
-    if (fileName.startsWith(CidPrefix) && fileName.length > CidLen)
-      Some(fileName.substring(CidPrefix.length, CidLen))
-    else None
-
   /** Join-key normalization ONLY (never a path to read): Spark's
     * input_file_name() renders local files as "file:///x" while Hadoop
     * listings render "file:/x" — collapse both to "/x"; other schemes
@@ -85,72 +66,6 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     */
   private def stripFileScheme(s: String): String =
     s.replaceFirst("^file:/*", "/")
-
-  /** Existing log parquet files visible under the manifest's committed-id
-    * set, plus whether any unmanifested residue was excluded. Driver-side
-    * listing — the same work Spark's file index does for a directory scan,
-    * reused here to drop unmanifested residue.
-    */
-  private def visibleLogFiles(ids: Option[Set[String]]): (Seq[String], Boolean) = {
-    // paths stay FULLY QUALIFIED (Hadoop listing form): stripping file:
-    // would re-resolve them against fs.defaultFS, which on a cluster
-    // whose default is hdfs:// points a file:-scheme warehouse at the
-    // wrong filesystem. Callers that join against input_file_name()
-    // normalize BOTH sides with stripFileScheme at the join only.
-    val all = WarehouseIO.walkFiles(logDir)
-      .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-      .map(_.path).toVector
-    ids match {
-      case None => (all, false) // legacy manifest: the directory is the truth
-      case Some(idSet) =>
-        val vis = all.filter { f =>
-          val name = f.substring(f.lastIndexOf('/') + 1)
-          cidOf(name).forall(idSet.contains)
-        }
-        (vis, vis.length != all.length)
-    }
-  }
-
-  private def visibleLogFiles(): (Seq[String], Boolean) =
-    visibleLogFiles(readManifest()._3)
-
-  /** Planning surface for the native DSv2 streaming read
-    * ([[graft.streaming.GraftMicroBatchStream]]): the committed-visible
-    * log parquet files as (qualified path, size) — the same
-    * manifest-gated listing [[logDF]] scans, without building a
-    * DataFrame. Driver-side, one directory walk.
-    */
-  private[graft] def visibleLogFileEntries(): Seq[(String, Long)] = {
-    val ids = readManifest()._3
-    WarehouseIO.walkFiles(logDir)
-      .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-      .filter(e => ids.forall(idSet => cidOf(e.name).forall(idSet.contains)))
-      .map(e => e.path -> e.len)
-  }
-
-  /** Atomic log planning view for the grouped batch scan: per-bucket
-    * next offsets and the committed-visible file list from ONE manifest
-    * parse (offsets from a different parse than the id set could gate in
-    * rows whose files were listed from another manifest version — the
-    * same race [[logDFFor]] closes), plus whether the listing PROVES the
-    * row-level offset gate redundant: with an id-gated manifest and
-    * every visible file commit-id-stamped, a visible file's rows are all
-    * below the offsets published atomically with its id, so `offset <
-    * next(bucket)` can never fire and the scan may emit raw columnar
-    * batches. Legacy manifests (ids=None) and un-prefixed legacy files
-    * keep the gate load-bearing.
-    */
-  private[graft] def visibleLogPlan()
-      : (Map[Int, Long], Seq[(String, Long)], Boolean) = {
-    val (offsets, _, ids) = readManifest()
-    val all = WarehouseIO.walkFiles(logDir)
-      .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-    val visible = all
-      .filter(e => ids.forall(idSet => cidOf(e.name).forall(idSet.contains)))
-    val gateFree =
-      ids.isDefined && visible.forall(e => cidOf(e.name).isDefined)
-    (offsets, visible.map(e => e.path -> e.len), gateFree)
-  }
 
   /** The log directory (partition layout: `<partitionKeys>/__bucket=N/`)
     * — the base the streaming planner relativizes file paths against.
@@ -186,7 +101,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * offset are visible, so files from a commit that crashed between
     * its file move and its manifest publish never surface.
     */
-  def logDF: DataFrame = logDFFor(readManifest())
+  def logDF: DataFrame = logDFFor(tableLog.read())
 
   /** [[logDF]] against ONE pinned manifest version: the visible-file set
     * and the offset gate must come from the same read, or a commit landing
@@ -195,11 +110,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * like [[vacuumLog]] can conflict-check against exactly the state their
     * rewrite saw.
     */
-  private def logDFFor(
-      manifest: (Map[Int, Long], Map[String, Long], Option[Set[String]])): DataFrame = {
-    val (offsets, _, ids) = manifest
-    val (files, residue) = visibleLogFiles(ids)
-    if (files.isEmpty) {
+  private def logDFFor(m: Manifest): DataFrame = {
+    val log = tableLog.visible(m)
+    if (log.files.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], logSchema)
     } else {
       // Steady state (no crash residue): one recursive root listing —
@@ -209,137 +122,27 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       // commit deletes it) does the scan pin the visible file list
       // explicitly; basePath keeps partition parsing (and pruning)
       // identical in both shapes.
-      val src = if (residue) spark.read.schema(logSchema)
-          .option("basePath", logDir).parquet(files: _*)
+      val src = if (log.residue) spark.read.schema(logSchema)
+          .option("basePath", logDir).parquet(log.files.map(_.path): _*)
         else spark.read.schema(logSchema)
           .option("basePath", logDir).parquet(logDir)
       src.select(logSchema.fieldNames.map(col).toIndexedSeq: _*)
-        .filter(col(Meta.Offset) < bucketMapExpr(offsets, 0L))
+        .filter(col(Meta.Offset) < bucketMapExpr(m.offsets, 0L))
     }
   }
 
   // ---------------------------------------------------------------------
-  // offset manifest
+  // offset manifest ([[Manifest]], published through [[TableLog]])
   // ---------------------------------------------------------------------
-
-  /** Manifest = per-bucket next offsets + per-sink last committed streaming
-    * batch id + the committed-commit-id set, in ONE file so a commit's
-    * "advance offsets", "mark batch committed" and "make files visible"
-    * are a single atomic rename — no crash window between any of them
-    * (the reference's WriterStateManager batch-sequence dedup). Legacy
-    * formats (flat bucket→offset map; offsets+commits without ids) still
-    * read; ids=None marks a manifest written before id gating existed.
-    *
-    * A MISSING manifest also maps to ids=None ("directory is the truth"),
-    * NOT Some(empty): with an empty id set, a table whose manifest was
-    * lost (partial restore, operator mistake) would treat every committed
-    * file as unmanifested residue and the next commit would physically
-    * delete all of it. With None the data stays on disk (rows are still
-    * hidden by the empty offset gate until offsets are rebuilt) —
-    * fail-safe, not fail-destructive. The cost: residue of a crashed
-    * FIRST commit is cleaned by the second successful commit rather than
-    * the first (its rows were never visible either way).
-    */
-  /** One read + parse of `_offsets.json`: offsets, streaming commit tags,
-    * committed-id set, version history. Multi-field callers (publish,
-    * vacuum, rewrite) use this directly so the manifest is parsed once
-    * per operation.
-    */
-  private def parseManifest(): (Map[Int, Long], Map[String, Long],
-      Option[Set[String]], List[VersionEntry]) =
-    WarehouseIO.readStringIfExists(offsetsFile) match {
-      case None => (Map.empty, Map.empty, None, Nil)
-      case Some(manifestJson) =>
-      val obj = JsonMethods.parse(manifestJson).asInstanceOf[JObject].obj.toMap
-      obj.get("offsets") match {
-        case Some(o: JObject) =>
-          val offs = o.obj.map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap
-          val commits = obj.get("commits").collect { case c: JObject =>
-            c.obj.map { case (k, v) => k -> v.asInstanceOf[JInt].num.toLong }.toMap
-          }.getOrElse(Map.empty[String, Long])
-          val ids = obj.get("ids").collect { case a: org.json4s.JArray =>
-            a.arr.map(_.asInstanceOf[JString].s).toSet
-          }
-          val hist = obj.get("history").collect { case a: org.json4s.JArray =>
-            a.arr.map { e =>
-              val m = e.asInstanceOf[JObject].obj.toMap
-              VersionEntry(
-                m("v").asInstanceOf[JInt].num.toLong,
-                m("ts").asInstanceOf[JInt].num.toLong,
-                m("o").asInstanceOf[JObject].obj
-                  .map { case (k, x) => k.toInt -> x.asInstanceOf[JInt].num.toLong }.toMap)
-            }
-          }.getOrElse(Nil)
-          (offs, commits, ids, hist)
-        case _ =>
-          (obj.map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong },
-            Map.empty, None, Nil)
-      }
-    }
-
-  private def readManifest(): (Map[Int, Long], Map[String, Long], Option[Set[String]]) = {
-    val (o, c, ids, _) = parseManifest()
-    (o, c, ids)
-  }
-
-  private def readOffsets(): Map[Int, Long] = readManifest()._1
-
-  /** Commit history: one entry per offset-advancing commit, recorded in
-    * the SAME `_offsets.json` the commit publishes through — version,
-    * offsets and visibility advance in one atomic rename, so the history
-    * can never name a version whose files aren't readable (or vice
-    * versa). Iceberg keeps the analogous snapshot list in its table
-    * metadata file; the reference navigates history by per-bucket
-    * offsets, which is exactly what each entry pins. Entries are tiny
-    * (≤numBuckets longs), so thousands of commits stay driver-scale.
-    */
-  private def readVersionHistory(): List[VersionEntry] = parseManifest()._4
-
-  /** How a manifest write treats the persisted column-stats blob:
-    * `Preserve` carries the current blob through unchanged (offset
-    * rewrites, rollbacks, tag-only writes — the data they publish is a
-    * subset/rewrite of what the blob already over-approximates), `Put`
-    * replaces it (data-adding commits merge their entry in; analyze
-    * rebuilds).
-    */
-  private sealed trait ColStatsUpdate
-  private case object PreserveColStats extends ColStatsUpdate
-  private final case class PutColStats(blob: ManifestColStats.Blob)
-      extends ColStatsUpdate
-
-  /** The persisted column-stats blob, if any commit has written one. */
-  private[graft] def readColStatsBlob(): Option[ManifestColStats.Blob] =
-    WarehouseIO.readStringIfExists(offsetsFile).flatMap { manifestJson =>
-      JsonMethods.parse(manifestJson).asInstanceOf[JObject].obj.toMap
-        .get("colstats").map(ManifestColStats.fromJson)
-    }
-
-  private def writeManifest(m: Map[Int, Long], commits: Map[String, Long],
-      ids: Set[String], history: List[VersionEntry],
-      colStats: ColStatsUpdate = PreserveColStats): Unit = {
-    val blob = colStats match {
-      case PutColStats(b) => Some(b)
-      case PreserveColStats => readColStatsBlob()
-    }
-    CatalogJson.atomicWrite(offsetsFile, JsonMethods.compact(JsonMethods.render(JObject(List(
-      "offsets" -> JObject(m.toList.sortBy(_._1).map { case (k, v) => k.toString -> (JInt(v): JValue) }),
-      "commits" -> JObject(commits.toList.sorted.map { case (k, v) => k -> (JInt(v): JValue) }),
-      "ids" -> org.json4s.JArray(ids.toList.sorted.map(i => JString(i): JValue)),
-      "history" -> org.json4s.JArray(history.map(e => JObject(List(
-        "v" -> (JInt(e.version): JValue),
-        "ts" -> (JInt(e.tsMillis): JValue),
-        "o" -> (JObject(e.offsets.toList.sortBy(_._1)
-          .map { case (k, v) => k.toString -> (JInt(v): JValue) }): JValue))): JValue))) ++
-      blob.map(b => "colstats" -> ManifestColStats.toJson(b)).toList))))
-  }
 
   /** Last streaming batch id committed by sink `sinkId`, if any. */
-  def committedBatchId(sinkId: String): Option[Long] = readManifest()._2.get(sinkId)
+  def committedBatchId(sinkId: String): Option[Long] =
+    tableLog.read().commitTags.get(sinkId)
 
   /** Per-bucket next offsets (the "latest offset" metadata the reference
     * answers count(*) from, PushdownUtils.java:348-440).
     */
-  def latestOffsets: Map[Int, Long] = readOffsets()
+  def latestOffsets: Map[Int, Long] = tableLog.read().offsets
 
   /** Per-bucket earliest RETAINED offset after a [[vacuumLog]] (the
     * reference's earliest-offset / log-start-offset metadata); None while
@@ -355,17 +158,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       val obj = JsonMethods.parse(markerJson)
         .asInstanceOf[JObject].obj.toMap[String, JValue]
       obj.get("floorOffsets") match {
-        case Some(o: JObject) => Some(o.obj
-          .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap)
+        case Some(o: JObject) => Some(Manifest.bucketMap(o))
         case _ => readSnapshotMeta()
       }
     }
-
-  private def readAutoInc(): Long =
-    WarehouseIO.readStringIfExists(autoIncFile).map(_.trim.toLong).getOrElse(1L)
-
-  private def writeAutoInc(next: Long): Unit =
-    CatalogJson.atomicWrite(autoIncFile, next.toString)
 
   /** Earliest offset at-or-after `ts` per bucket — the reference's
     * timestamp→offset resolution (TimeIndex.java / ListOffsetsParam.java).
@@ -376,7 +172,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val found = logDF.filter(col(Meta.Timestamp) >= lit(ts))
       .groupBy(col(Meta.Bucket)).agg(min(col(Meta.Offset)).as("o")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    readOffsets().map { case (b, next) => b -> found.getOrElse(b, next) }
+    tableLog.read().offsets.map { case (b, next) => b -> found.getOrElse(b, next) }
   }
 
   /** Startup-mode `timestamp` as a bounded read (T1,
@@ -465,7 +261,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * existed have entries only from their first post-upgrade commit.
     */
   def history(): DataFrame = {
-    val hist = readVersionHistory()
+    val hist = tableLog.read().history
     val rows = hist.foldLeft((0L, List.empty[Row])) { case ((prev, acc), e) =>
       val total = e.offsets.values.sum
       (total, acc :+ Row(e.version, new java.sql.Timestamp(e.tsMillis),
@@ -500,7 +296,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       else desc.properties.get("table.statistics.columns")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Nil)
-    val (files, _) = visibleLogFiles()
+    val m = tableLog.read()
+    val files = tableLog.visible(m).files
     val schema = StructType(Seq(
       StructField("file", StringType, nullable = false),
       StructField("commit_id", StringType, nullable = true),
@@ -511,11 +308,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         StructType(schema.fields.dropRight(1) ++ Seq(
           StructField("bucket", IntegerType), StructField("n_rows", LongType),
           StructField("min_offset", LongType), StructField("max_offset", LongType))))
-    val listed = files.map { f =>
-      val name = f.substring(f.lastIndexOf('/') + 1)
-      Row(WarehouseIO.relativize(logDir, f), cidOf(name).orNull,
-        WarehouseIO.size(f), stripFileScheme(f))
-    }
+    val listed = files.map(f => Row(WarehouseIO.relativize(logDir, f.path),
+      f.commitId.orNull, f.len, stripFileScheme(f.path)))
     val sizes = spark.createDataFrame(listed.asJava, schema)
     val aggExprs = Seq(
       first(col(Meta.Bucket)).as("bucket"), count(lit(1)).as("n_rows"),
@@ -523,7 +317,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       max(col(Meta.Offset)).as("max_offset")) ++
       statCols.flatMap(c => Seq(
         min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    val counts = logDF
+    val counts = logDFFor(m)
       .groupBy(regexp_replace(input_file_name(), "^file:/*", "/").as("__path"))
       .agg(aggExprs.head, aggExprs.tail: _*)
     sizes.join(counts, Seq("__path"), "left").drop("__path")
@@ -531,7 +325,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   }
 
   /** Latest recorded version, if any commit has been recorded. */
-  def latestVersion: Option[Long] = readVersionHistory().lastOption.map(_.version)
+  def latestVersion: Option[Long] = tableLog.read().history.lastOption.map(_.version)
 
   /** Version travel (`VERSION AS OF`, lakehouse semantics): the table
     * STATE as of recorded commit `v` — every log record the version's
@@ -543,7 +337,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * ones fail loudly rather than returning partial state.
     */
   def scanAtVersion(v: Long): DataFrame = {
-    val hist = readVersionHistory()
+    val hist = tableLog.read().history
     require(hist.nonEmpty, s"table at $path has no recorded version history")
     val entry = hist.find(_.version == v).getOrElse(throw new IllegalArgumentException(
       s"version $v not recorded for $path (recorded: " +
@@ -778,162 +572,23 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       expectedEpoch = expectedEpoch)
   }
 
-  // -- staged commits --------------------------------------------------
-  // The batch is written OUTSIDE the log dir, validated, then moved in
-  // file-by-file under a commit-id name prefix (Spark part names are
-  // globally unique). Visibility is granted by ONE atomic manifest write
-  // that publishes the id together with the advanced offsets — readers
-  // enumerate only manifested files, so a commit that failed validation
-  // or crashed anywhere between move and publish can never surface, even
-  // after later commits reuse its offset range. Residue from crashed
-  // commits is deleted by the next commit under the same lock.
-
-  /** File-based mutual exclusion around validate+move+publish: the
-    * optimistic manifest check alone is check-then-act — two commits
-    * interleaving between check and manifest write would both pass and
-    * both move duplicate-offset files in. `createFile` is atomic on any
-    * POSIX filesystem; a holder that crashed leaves a stale lock which
-    * is broken after 10 minutes. (The reference serializes commits
-    * through the tablet leader; this is the shared-filesystem analog.)
-    */
-  private def withCommitLock[T](staging: Option[String])(body: => T): T = {
-    val lock = s"$path/_commit.lock"
-    if (!WarehouseIO.createExclusive(lock)) {
-      // the holder may release between our failed create and this stat —
-      // that's still a conflict (retry), just not a stale one
-      val ageMs = System.currentTimeMillis() -
-        (try WarehouseIO.mtimeMillis(lock)
-         catch { case _: java.io.IOException => System.currentTimeMillis() })
-      if (ageMs > 10 * 60 * 1000) WarehouseIO.deleteIfExists(lock) // stale holder
-      staging.foreach(deleteTree)
-      throw new java.util.ConcurrentModificationException(
-        s"another commit holds the lock on $path" +
-          (if (ageMs > 10 * 60 * 1000) " (stale lock broken; retry)" else ""))
-    }
-    // every mutator serializes through here, so this is the ONE place
-    // the rebucket fences live: (1) an intent marker blocks all other
-    // mutation from marker-write to meta-flip — including after a crash
-    // (loud, recovered by the next CALL sys.rebucket); (2) a handle
-    // whose descriptor bucket count no longer matches the published
-    // meta.json must not commit — its rows are hashed with the OLD
-    // bucket count and would land in the wrong partition dirs. The
-    // fences are evaluated INSIDE the lock: a rebucket cannot swap the
-    // numbering between a mutator's fence check and its commit (a
-    // pre-lock check left that window open — a mutator delayed across
-    // the whole rebucket, e.g. a long GC pause, could pass stale checks
-    // and then commit old-space rows into the new-space log).
-    try {
-      if (!GraftTable.inRebucket.get()) {
-        if (WarehouseIO.exists(rebucketMarkerFile)) {
-          staging.foreach(deleteTree)
-          throw new java.util.ConcurrentModificationException(
-            s"a rebucket is in progress (or crashed) on $path; mutation is " +
-              "fenced until it completes — re-run CALL sys.rebucket(table, n) " +
-              "to finish or abort it")
-        }
-        WarehouseIO.readStringIfExists(s"$path/meta.json").foreach { m =>
-          val live = CatalogJson.read(m).numBuckets
-          if (live != desc.numBuckets) {
-            staging.foreach(deleteTree)
-            throw new java.util.ConcurrentModificationException(
-              s"table at $path was rebucketed from ${desc.numBuckets} to " +
-                s"$live buckets; this handle is stale — re-open the table")
-          }
-        }
-      }
-      body
-    } finally WarehouseIO.deleteIfExists(lock)
-  }
-
-  private def newStagingDir(): String =
-    s"$path/log.staging-${java.util.UUID.randomUUID()}"
-
   private def deleteTree(dir: String): Unit =
     WarehouseIO.deleteRecursively(dir)
-
-  /** Move staged parquet files into the log dir under `commitId`'s name
-    * prefix. The files stay INVISIBLE until the manifest publishes the id,
-    * so a crash anywhere in here leaves only inert residue.
-    */
-  private def moveStagedFiles(staging: String, commitId: String): Unit = {
-    val files = WarehouseIO.walkFiles(staging)
-      .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-    files.foreach { e =>
-      val rel = WarehouseIO.relativize(staging, e.path)
-      val relDir = rel.lastIndexOf('/') match {
-        case -1 => ""
-        case i => rel.substring(0, i + 1)
-      }
-      WarehouseIO.moveFile(e.path,
-        s"$logDir/$relDir$CidPrefix$commitId--${e.name}")
-    }
-    deleteTree(staging)
-  }
-
-  /** Delete cid-prefixed files whose commit id was never published —
-    * residue of a commit that crashed between move and publish. Runs
-    * under the commit lock, so no in-flight commit's files qualify;
-    * un-prefixed (legacy) files are never touched.
-    */
-  private def cleanUnmanifestedResidue(ids: Set[String]): Unit =
-    WarehouseIO.walkFiles(logDir)
-      .filter(e => !e.isDir && cidOf(e.name).exists(!ids.contains(_)))
-      .foreach(e => WarehouseIO.deleteIfExists(e.path))
 
   /** Delete crash residue: staged-then-never-published log files, and
     * abandoned staging dirs older than `stagingOlderThanMs`, whose commit
     * id the manifest never recorded. Readers already exclude them
-    * ([[visibleLogFiles]]); this frees the storage — iceberg's
+    * ([[TableLog.visible]]); this frees the storage — iceberg's
     * `remove_orphan_files` analog. Every commit also cleans unmanifested
     * log files opportunistically; the explicit form covers tables that
     * stopped committing. Unmanifested cid-files can only appear under the
-    * commit lock (moveStagedFiles runs inside publish), so deleting them
+    * commit lock (files move in inside the publish), so deleting them
     * here — also under the lock — is race-free. Staging DIRS are written
     * BEFORE the lock is taken, so those are only removed past the age
     * threshold (default 24 h, iceberg's olderThan posture).
     */
   def removeOrphanFiles(stagingOlderThanMs: Long = 24L * 3600 * 1000): Unit =
-    withCommitLock(None) {
-      readManifest()._3.foreach(cleanUnmanifestedResidue)
-      val now = System.currentTimeMillis()
-      val entries = WarehouseIO.listDir(path)
-      entries
-        .filter(e => e.isDir && (e.name.startsWith("log.staging-") ||
-            // op staging left by a crashed vacuum/rewrite/rollback/
-            // compact (unique names — concurrent ops never collide);
-            // an IN-FLIGHT op whose staging we reclaim aborts at its
-            // staging-exists check instead of publishing empty. NOT
-            // snapshot.old: after a compact crashed mid-swap it may be
-            // the only copy of a post-vacuum load-bearing snapshot —
-            // repair material, never garbage.
-            e.name.startsWith("log.vacuum") ||
-            e.name.startsWith("log.rewrite") ||
-            e.name.startsWith("log.rollback") ||
-            e.name.startsWith("log.rebucket") ||
-            e.name.startsWith("snapshot.compact")) &&
-          now - e.mtimeMillis >= stagingOlderThanMs)
-        .foreach(e => deleteTree(e.path))
-      // atomic-write temps a crashed writer never renamed (unique
-      // .tmp-<uuid> names) — anywhere under the table, e.g. consumer
-      // group offsets in _consumer_offsets/: inert, but free the bytes
-      WarehouseIO.walkFiles(path)
-        .filter(e => !e.isDir && e.name.contains(".tmp-") &&
-          now - e.mtimeMillis >= stagingOlderThanMs)
-        .foreach(e => WarehouseIO.deleteIfExists(e.path))
-      // per-QUERY staging left by a crashed streaming sink or row-level
-      // DML statement (commit/abort clean up in-process; a driver crash
-      // leaks the dir). Age-check the per-query SUBDIR, not the parent —
-      // a live query keeps its own dir's mtime fresh (new epoch dirs /
-      // task files), while a dead query's dir goes stale
-      Seq("_stream_staging", "_rowlevel_staging").foreach { root =>
-        val dir = s"$path/$root"
-        if (WarehouseIO.exists(dir))
-          WarehouseIO.listDir(dir)
-            .filter(e => e.isDir &&
-              now - e.mtimeMillis >= stagingOlderThanMs)
-            .foreach(e => deleteTree(e.path))
-      }
-    }
+    tableLog.removeOrphanFiles(stagingOlderThanMs)
 
   /** Assign per-bucket contiguous offsets and append to the log dir.
     * Input: data cols + `_change_type` + `__ord` + `__bucket`, partitioned
@@ -947,7 +602,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // epoch read BEFORE the manifest (ABA): unchanged-epoch-then-offsets
     // proves no rollback slid between the caller's check and this read
     val epochAtStart = expectedEpoch.map(_ => rollbackEpoch)
-    val (bases, _, _) = readManifest()
+    // the manifest this commit numbers its offsets and auto-increment ids
+    // from; the publish refuses if another commit lands in between
+    val pinned = tableLog.read()
+    val bases = pinned.offsets
     // optimistic precondition (row-level SQL path): the caller validated
     // against a specific manifest state — starting from any other state
     // would apply a delta its overlap check never saw
@@ -987,60 +645,88 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val numbered =
       if (materializeBatch) numbered0.localCheckpoint() else numbered0
     try {
-      // write-time column stats: each arm attaches ONE observe() to its
-      // write job (min/max/nulls/HLL per stats-bearing column — no extra
-      // pass); publish merges the fetched entry into the manifest blob.
-      // Disabled (or failed) collection marks the blob incomplete — the
-      // footer sweep then remains the plan-time source, never a stale
+      // Counts come from a separate counts job when the table has an
+      // auto-increment column (the ids need them BEFORE the write) or
+      // more than 64 buckets (numBuckets observation aggregates would
+      // bloat every commit plan); otherwise they ride the WRITE job as
+      // observed metrics — no separate counting pass over the batch (one
+      // pass saved per commit; for non-materialized appends it halves
+      // the compute). An empty counts job leaves nothing to write.
+      val counted =
+        if (desc.autoIncrementColumn.isEmpty && desc.numBuckets <= 64) None
+        else Some(numbered.groupBy(col(Meta.Bucket)).count().collect()
+          .map(r => r.getInt(0) -> r.getLong(1)).toMap)
+      // A7 auto-increment (AutoIncrementManager / BoundedSegment-
+      // SequenceGenerator): ids assigned commit-side from per-bucket
+      // ranges carved out of the pinned manifest's counter — contiguous
+      // across the commit, derived from the assigned offset (a row's rank
+      // in its bucket is offset − base), so no second window and no extra
+      // shuffle. The publish advances the counter in the same manifest
+      // write as the offsets.
+      val withIds = (desc.autoIncrementColumn, counted) match {
+        case (Some(c), Some(counts)) =>
+          val sortedBuckets = counts.keys.toSeq.sorted
+          val cumBases = sortedBuckets.scanLeft(0L)(_ + counts(_)).init
+          val cumExpr = sortedBuckets.zip(cumBases).foldLeft(lit(0L)) {
+            case (acc, (b, base)) =>
+              when(col(Meta.Bucket) === b, lit(base)).otherwise(acc)
+          }
+          numbered.withColumn(c,
+            lit(pinned.nextAutoInc) + cumExpr + col(Meta.Offset) - baseExpr)
+        case _ => numbered
+      }
+      val obs = org.apache.spark.sql.Observation()
+      val countExprs = (0 until desc.numBuckets).map(b =>
+        count(when(col(Meta.Bucket) === b, 1)).as(s"__c$b"))
+      val out = withIds.drop("__ord")
+        .select(logSchema.fieldNames.map(col).toIndexedSeq: _*)
+      val observed =
+        if (counted.isDefined) out
+        else out.observe(obs, countExprs.head, countExprs.tail: _*)
+      // write-time column stats: ONE observe() on the write job
+      // (min/max/nulls/HLL per stats-bearing column — no extra pass); the
+      // publish merges the fetched entry into the manifest blob. Disabled
+      // (or failed) collection marks the blob incomplete — the footer
+      // sweep then remains the plan-time source, never a stale
       // under-approximation.
-      var fetchCommitStats: () => Option[Map[String, ManifestColStats.Entry]] =
-        () => None
-      def observeStats(out: DataFrame): DataFrame =
-        if (!columnStatsEnabled) out
+      val (instrumented, fetchCommitStats) =
+        if (columnStatsEnabled)
+          ManifestColStats.observe(observed, desc.schema, desc.partitionKeys)
+        else (observed, () => Option.empty[Map[String, ManifestColStats.Entry]])
+      val staging =
+        if (counted.exists(_.isEmpty)) None
         else {
-          val (instrumented, fetch) =
-            ManifestColStats.observe(out, desc.schema, desc.partitionKeys)
-          fetchCommitStats = fetch
-          instrumented
+          val dir = tableLog.stagingDir("staging")
+          instrumented.write.mode("overwrite").options(fileWriteOptions)
+            .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(dir)
+          Some(dir)
         }
-
-      // finalize: re-read the manifest, conflict-check, move the staged
-      // files into the readers’ view, publish. The manifest is re-read
-      // AT publish time so a concurrent sink’s commit tags are merged,
-      // never clobbered, and an empty batch can’t rewind offsets another
-      // writer advanced.
-      def publish(counts: Map[Int, Long], staging: Option[String]): Unit = withCommitLock(staging) {
-        val (currentBases, currentCommits, currentIds, hist) = parseManifest()
-        if (counts.nonEmpty) {
-          // optimistic concurrency: a concurrent commit would have
-          // advanced the manifest since we read it — our staged files
-          // carry offsets computed from the stale bases, so they are
-          // DISCARDED, not moved. Fail loudly (the reference serializes
-          // through a single tablet leader; we detect instead of lock).
-          if (currentBases != bases) {
-            staging.foreach(deleteTree)
-            GraftMetrics.inc(path, GraftMetrics.CommitConflicts)
+      val counts = counted.getOrElse {
+        val row = obs.get
+        (0 until desc.numBuckets)
+          .map(b => b -> row(s"__c$b").asInstanceOf[Long])
+          .filter(_._2 > 0).toMap
+      }
+      if (counts.isEmpty) {
+        // an empty batch still records its commit tag (streaming replay
+        // dedup) — merged into the CURRENT manifest
+        staging.foreach(deleteTree)
+        tableLog.commit(pinned, None) { m =>
+          if (commitTag.isEmpty) m
+          else m.copy(commitTags = m.commitTags ++ commitTag)
+        }
+      } else {
+        // authoritative epoch check UNDER the lock (rollback bumps its
+        // epoch holding this same lock): offsets-equal plus epoch-equal
+        // rules out the rewind-then-readvance ABA that an offsets compare
+        // alone cannot see
+        val epochCheck = () => expectedEpoch.foreach { e =>
+          if (rollbackEpoch != e)
             throw new java.util.ConcurrentModificationException(
-              s"concurrent commit detected on $path: offsets advanced from " +
-                s"$bases to $currentBases during this commit")
-          }
-          // authoritative epoch check UNDER the lock (rollback bumps its
-          // epoch holding this same lock): offsets-equal plus
-          // epoch-equal rules out the rewind-then-readvance ABA that an
-          // offsets compare alone cannot see
-          expectedEpoch.foreach { e =>
-            if (rollbackEpoch != e) {
-              staging.foreach(deleteTree)
-              throw new java.util.ConcurrentModificationException(
-                s"a rollback landed on $path during this commit; offset " +
-                  "ranges may have been reused — re-validate and retry")
-            }
-          }
-          // self-heal residue of commits that crashed mid-move (their ids
-          // were never published, so their files were never readable)
-          currentIds.foreach(cleanUnmanifestedResidue)
-          val commitId = java.util.UUID.randomUUID().toString
-          staging.foreach(moveStagedFiles(_, commitId))
+              s"a rollback landed on $path during this commit; offset " +
+                "ranges may have been reused — re-validate and retry")
+        }
+        tableLog.commit(pinned, staging, epochCheck) { m =>
           val advanced =
             bases ++ counts.map { case (b, n) => b -> (bases.getOrElse(b, 0L) + n) }
           // merge this commit's observed column stats into the blob —
@@ -1048,8 +734,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           // first commit on an EMPTY table starts a complete blob; any
           // commit that skipped stats degrades it (one-way) so the blob
           // can never under-approximate visible data.
-          val wasEmpty = currentBases.isEmpty && readSnapshotMeta().isEmpty
-          val mergedBlob = (readColStatsBlob(), fetchCommitStats()) match {
+          val wasEmpty = bases.isEmpty && readSnapshotMeta().isEmpty
+          val blob = (m.colStats, fetchCommitStats()) match {
             case (Some(p), Some(s)) => p.merge(s)
             case (Some(p), None) => p.copy(complete = false)
             case (None, Some(s)) =>
@@ -1058,84 +744,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           }
           // every offset-advancing commit is a new table version, appended
           // atomically with the offsets it pins (VERSION AS OF travel)
-          writeManifest(advanced,
-            currentCommits ++ commitTag,
-            currentIds.getOrElse(Set.empty) + commitId,
-            hist :+ VersionEntry(hist.lastOption.map(_.version + 1).getOrElse(1L),
-              commitTs.getTime, advanced),
-            PutColStats(mergedBlob))
-          GraftMetrics.inc(path, GraftMetrics.Commits)
-          GraftMetrics.inc(path, GraftMetrics.CommittedRows, counts.values.sum)
-        } else {
-          staging.foreach(deleteTree)
-          if (commitTag.isDefined)
-            // empty batch still records its commit tag (streaming replay
-            // dedup) — merged into the CURRENT manifest
-            writeManifest(currentBases, currentCommits ++ commitTag,
-              currentIds.getOrElse(Set.empty), hist)
+          m.copy(offsets = advanced, commitTags = m.commitTags ++ commitTag,
+            history = m.history :+
+              VersionEntry(m.nextVersion, commitTs.getTime, advanced),
+            colStats = Some(blob),
+            nextAutoInc = m.nextAutoInc +
+              (if (desc.autoIncrementColumn.isDefined) counts.values.sum else 0L))
         }
-      }
-
-      desc.autoIncrementColumn match {
-        case Some(c) =>
-          // A7 auto-increment (AutoIncrementManager / BoundedSegment-
-          // SequenceGenerator): ids assigned commit-side from per-bucket
-          // ranges carved out of one counter — contiguous across the
-          // commit, derived from the assigned offset (a row's rank in its
-          // bucket is offset − base), so no second window and no extra
-          // shuffle. Needs counts BEFORE the write, so this path keeps
-          // the separate counts job.
-          val counts = numbered.groupBy(col(Meta.Bucket)).count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          if (counts.nonEmpty) {
-            val aiBase = readAutoInc()
-            val sortedBuckets = counts.keys.toSeq.sorted
-            val cumBases = sortedBuckets.scanLeft(0L)(_ + counts(_)).init
-            val cumExpr = sortedBuckets.zip(cumBases).foldLeft(lit(0L)) {
-              case (acc, (b, base)) =>
-                when(col(Meta.Bucket) === b, lit(base)).otherwise(acc)
-            }
-            val out = observeStats(numbered
-              .withColumn(c, lit(aiBase) + cumExpr + col(Meta.Offset) - baseExpr)
-              .drop("__ord")
-              .select(logSchema.fieldNames.map(col).toIndexedSeq: _*))
-            val staging = newStagingDir()
-            out.write.mode("overwrite").options(fileWriteOptions)
-              .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(staging)
-            publish(counts, Some(staging))
-          } else publish(counts, None)
-          if (counts.nonEmpty) writeAutoInc(readAutoInc() + counts.values.sum)
-        case None if desc.numBuckets > 64 =>
-          // very wide bucketing: numBuckets observation aggregates would
-          // bloat every commit plan — one separate counts job is cheaper
-          val counts = numbered.groupBy(col(Meta.Bucket)).count().collect()
-            .map(r => r.getInt(0) -> r.getLong(1)).toMap
-          if (counts.nonEmpty) {
-            val out = observeStats(numbered.drop("__ord")
-              .select(logSchema.fieldNames.map(col).toIndexedSeq: _*))
-            val staging = newStagingDir()
-            out.write.mode("overwrite").options(fileWriteOptions)
-              .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(staging)
-            publish(counts, Some(staging))
-          } else publish(counts, None)
-        case None =>
-          // per-bucket counts ride the WRITE job as observed metrics —
-          // no separate counting pass over the batch (one pass saved per
-          // commit; for non-materialized appends it halves the compute)
-          val obs = org.apache.spark.sql.Observation()
-          val countExprs = (0 until desc.numBuckets).map(b =>
-            count(when(col(Meta.Bucket) === b, 1)).as(s"__c$b"))
-          val out = observeStats(numbered.drop("__ord")
-            .select(logSchema.fieldNames.map(col).toIndexedSeq: _*)
-            .observe(obs, countExprs.head, countExprs.tail: _*))
-          val staging = newStagingDir()
-          out.write.mode("overwrite").options(fileWriteOptions)
-            .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(staging)
-          val row = obs.get
-          val counts = (0 until desc.numBuckets)
-            .map(b => b -> row(s"__c$b").asInstanceOf[Long])
-            .filter(_._2 > 0).toMap
-          publish(counts, Some(staging))
+        GraftMetrics.inc(path, GraftMetrics.Commits)
+        GraftMetrics.inc(path, GraftMetrics.CommittedRows, counts.values.sum)
       }
     } finally if (materializeBatch) numbered.unpersist() // no-op for checkpointed plans; ContextCleaner frees the blocks
   }
@@ -1145,9 +762,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   // ---------------------------------------------------------------------
 
   private def readSnapshotMeta(): Option[Map[Int, Long]] =
-    WarehouseIO.readStringIfExists(snapshotMetaFile).map(snapJson =>
-      JsonMethods.parse(snapJson).asInstanceOf[JObject].obj
-        .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap)
+    WarehouseIO.readStringIfExists(snapshotMetaFile)
+      .map(j => Manifest.bucketMap(JsonMethods.parse(j)))
 
   // ---------------------------------------------------------------------
   // KV snapshot leases — a batch reader planning a snapshot∪log read pins
@@ -1172,8 +788,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       JsonMethods.parse(leaseJson).asInstanceOf[JObject].obj.map {
       case (id, entry) =>
         val fields = entry.asInstanceOf[JObject].obj.toMap[String, JValue]
-        val floors = fields("floorOffsets").asInstanceOf[JObject].obj
-          .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap
+        val floors = Manifest.bucketMap(fields("floorOffsets"))
         val exp = fields("expiresAtMillis").asInstanceOf[JInt].num.toLong
         id -> (floors, exp)
     }.toMap)
@@ -1184,8 +799,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         leases.toList.sortBy(_._1).map { case (id, (floors, exp)) =>
           id -> (JObject(List(
             "expiresAtMillis" -> (JInt(exp): JValue),
-            "floorOffsets" -> (JObject(floors.toList.sortBy(_._1)
-              .map { case (k, v) => k.toString -> (JInt(v): JValue) }): JValue)
+            "floorOffsets" -> Manifest.bucketJson(floors)
           )): JValue)
         }))))
 
@@ -1200,7 +814,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     require(leaseId.nonEmpty, "leaseId must be non-empty")
     require(durationMs > 0, s"lease duration $durationMs must be positive")
     val floors = retainedFloorOffsets.getOrElse(
-      readOffsets().map { case (b, _) => b -> 0L })
+      tableLog.read().offsets.map { case (b, _) => b -> 0L })
     // read-modify-write under the file lock (same discipline as Acls /
     // DynamicConfigs): two concurrent jobs acquiring leases must not lose
     // each other's pin — that is the exact guarantee a lease exists for
@@ -1247,7 +861,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // between the two reads slip past BOTH abort checks below (the new
     // timeline can re-advance offsets to exactly upTo — the ABA shape)
     val epochAtStart = rollbackEpoch
-    val upTo = readOffsets()
+    val upTo = tableLog.read().offsets
     // Partitioned EXACTLY like the log (partition keys, then bucket), so
     // partition pruning and point lookups prune the snapshot's dirs the
     // same way they prune the log's (the reference's KV snapshots are
@@ -1273,17 +887,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       else (liveRows, () => Option.empty[Map[String, ManifestColStats.Entry]])
     snapDf.write.mode("overwrite").options(fileWriteOptions)
       .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(tmpDir)
-    withCommitLock(Some(tmpDir)) {
-      val (now, commitsNow, idsNow, histNow) = parseManifest()
+    tableLog.withCommitLock(Some(tmpDir)) {
+      val now = tableLog.read()
       // offsets alone cannot catch a rollback followed by new commits
       // (offsets are REUSABLE after the physical truncation — the ABA
       // shape); the rollback epoch does
       if (rollbackEpoch != epochAtStart ||
-          upTo.exists { case (b, o) => now.getOrElse(b, 0L) < o }) {
-        deleteTree(tmpDir)
+          upTo.exists { case (b, o) => now.offsets.getOrElse(b, 0L) < o })
         throw new java.util.ConcurrentModificationException(
           s"rollback/restore landed on $path during compact(); retry")
-      }
       // old dir aside -> new dir in -> meta last (atomic rename). A
       // reader between the moves sees meta + missing dir: loud
       // transient, never silent; between dir and meta it replays the
@@ -1293,17 +905,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       if (WarehouseIO.exists(snapshotDir)) WarehouseIO.moveFile(snapshotDir, old)
       WarehouseIO.moveFile(tmpDir, snapshotDir)
       CatalogJson.atomicWrite(snapshotMetaFile,
-        JsonMethods.compact(JsonMethods.render(JObject(
-          upTo.toList.sortBy(_._1).map { case (k, v) => k.toString -> (JInt(v): JValue) }))))
+        JsonMethods.compact(JsonMethods.render(Manifest.bucketJson(upTo))))
       deleteTree(old)
       // quiet compaction (no commit landed since the scan's offsets):
       // the observed live-row stats replace the blob, EXACT and
       // complete. A raced-forward commit means its entry lives only in
       // the accumulated blob — keep it (sound, just over-approximate).
-      if (now == upTo) fetchSnapStats().foreach { entries =>
-        writeManifest(now, commitsNow, idsNow.getOrElse(Set.empty), histNow,
-          PutColStats(ManifestColStats.Blob(complete = true, Map.empty)
-            .merge(entries)))
+      if (now.offsets == upTo) fetchSnapStats().foreach { entries =>
+        tableLog.write(now.copy(colStats = Some(
+          ManifestColStats.Blob(complete = true, Map.empty).merge(entries))))
       }
     }
     GraftMetrics.inc(path, GraftMetrics.Compactions)
@@ -1371,7 +981,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     var attempt = 0
     var exported = false
     while (!exported) {
-      val pre = parseManifest()
+      val pre = tableLog.read()
       // bucket-aligned layout: files land under `__bucket=N/` dirs
       // mirroring the table's own storage buckets (PK state re-derives
       // the bucket from its keys — identical to compact()'s write;
@@ -1403,10 +1013,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       val writer = exportDF.write.mode("overwrite").options(fileWriteOptions)
       (if (tierKeys.nonEmpty) writer.partitionBy(tierKeys: _*)
        else writer).parquet(dir)
-      val post = parseManifest()
-      if (post._1 == pre._1) {
-        pinnedOffsets = pre._1
-        version = pre._4.lastOption.map(_.version)
+      if (tableLog.read().offsets == pre.offsets) {
+        pinnedOffsets = pre.offsets
+        version = pre.history.lastOption.map(_.version)
         exported = true
       } else {
         attempt += 1
@@ -1447,8 +1056,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         "source" -> (JString(path): JValue),
         "exportedAtMillis" -> (JInt(System.currentTimeMillis()): JValue),
         "version" -> version.map(v => JInt(v): JValue).getOrElse(JNull),
-        "offsets" -> (JObject(offsets.toList.sortBy(_._1)
-          .map { case (k, v) => k.toString -> (JInt(v): JValue) }): JValue),
+        "offsets" -> Manifest.bucketJson(offsets),
         "schema" -> JsonMethods.parse(desc.schema.json),
         "partitionKeys" -> (org.json4s.JArray(
           desc.partitionKeys.toList.map(JString(_))): JValue),
@@ -1476,9 +1084,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     */
   private def tierSummary(offsets: Map[Int, Long],
       version: Option[Long]): Map[String, String] =
-    Map(GraftTable.TierOffsetsKey -> JsonMethods.compact(JsonMethods.render(
-      JObject(offsets.toList.sortBy(_._1)
-        .map { case (k, v) => k.toString -> (JInt(v): JValue) })))) ++
+    Map(GraftTable.TierOffsetsKey ->
+      JsonMethods.compact(JsonMethods.render(Manifest.bucketJson(offsets)))) ++
       version.map(v => GraftTable.TierVersionKey -> v.toString)
 
   /** Under the lake lock, re-validate that the lake's committed tier
@@ -1552,8 +1159,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         "export_snapshot_paimon / export_snapshot_hudi)")
     val em = JsonMethods.parse(WarehouseIO.readString(emPath))
       .asInstanceOf[JObject].obj.toMap
-    val manifestPinned: Map[Int, Long] = em("offsets").asInstanceOf[JObject].obj
-      .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }.toMap
+    val manifestPinned = Manifest.bucketMap(em("offsets"))
     // crash roll-forward: the lake's commit bookkeeping (Iceberg snapshot
     // summary / Delta commitInfo tags) records the window each tier
     // committed. Tags ahead of the export manifest mean the previous tier
@@ -1591,11 +1197,11 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     }
     var attempt = 0
     while (true) {
-      val pre = parseManifest()
-      val current = pre._1
+      val pre = tableLog.read()
+      val current = pre.offsets
       if (current == pinned)
         return "already current: offsets unchanged since last export"
-      val version = pre._4.lastOption.map(_.version)
+      val version = pre.history.lastOption.map(_.version)
       // bounded window read: immutable under concurrent commits
       val tail = scanRange(pinned, current)
       val commitUuid = java.util.UUID.randomUUID().toString.take(8)
@@ -1716,8 +1322,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       // execution time): if offsets moved while we wrote, the staged
       // data may exceed the window we'll record — retry, same posture
       // as exportSnapshot
-      val post = parseManifest()
-      if (post._1 != current) {
+      if (tableLog.read().offsets != current) {
         deleteTree(staging)
         attempt += 1
         if (attempt >= 3) throw new java.util.ConcurrentModificationException(
@@ -1775,13 +1380,12 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     val pinned = leaseFloors(System.currentTimeMillis())
     val snapOffsets = covered.map { case (b, o) =>
       b -> math.min(o, pinned.getOrElse(b, Long.MaxValue)) }
-    val tmpDir = s"$path/log.vacuum-${java.util.UUID.randomUUID()}"
-    // Pin ONE manifest version for the rewrite; the lock body below
-    // conflict-checks against it (same optimistic protocol as publish) —
-    // otherwise a commit landing between this read and the lock would
-    // have its files deleted as "residue" while its offsets stay
-    // published: silent data loss.
-    val manifestAtStart = readManifest()
+    val tmpDir = tableLog.stagingDir("vacuum")
+    // Pin ONE manifest version for the rewrite; the publish
+    // conflict-checks against it — otherwise a commit landing between
+    // this read and the lock would have its files deleted as "residue"
+    // while its offsets stay published: silent data loss.
+    val manifestAtStart = tableLog.read()
     val retained = logDFFor(manifestAtStart)
       .filter(col(Meta.Offset) >= bucketMapExpr(snapOffsets, 0L))
     retained.write.mode("overwrite").options(fileWriteOptions)
@@ -1797,23 +1401,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // the marker also pins the VACUUM-TIME cutoff offsets: snapshot meta
     // keeps advancing with later compact() calls, but the log start only
     // moves on the next vacuum — the floor must not move with it
-    CatalogJson.atomicWrite(vacuumMarkerFile,
-      JsonMethods.compact(JsonMethods.render(JObject(List(
-        "boundMillis" -> (JInt(minTs): JValue),
-        "floorOffsets" -> (JObject(snapOffsets.toList.sortBy(_._1)
-          .map { case (k, v) => k.toString -> (JInt(v): JValue) }): JValue))))))
+    writeVacuumMarker(minTs, snapOffsets)
     // Same protocol as a commit, under the same lock: move the rewritten
     // files in alongside the old ones (invisible — their id is not yet
     // manifested), flip visibility with ONE atomic manifest write whose id
     // set is exactly {vacuumId}, then delete the now-invisible old files.
     // A crash before the flip leaves the old log intact (the rewrite is
     // inert residue a later commit cleans); a crash after it leaves
-    // invisible garbage only. The one non-atomic window is a LEGACY table
-    // whose un-prefixed files are visible unconditionally: those are
-    // deleted after the flip, so a crash in between briefly double-reads
-    // them — tables written entirely by the id-gated path are safe in
-    // every ordering.
-    swapRewrittenLog(tmpDir, manifestAtStart, "vacuumLog")
+    // invisible garbage only.
+    tableLog.rewrite(manifestAtStart, tmpDir, "vacuumLog")(identity)
     GraftMetrics.inc(path, GraftMetrics.Vacuums)
   }
 
@@ -1841,7 +1437,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       "expireLog is for log tables; PK tables: compact() then vacuumLog()")
     require(ttlMillis >= 0, s"ttl $ttlMillis must be non-negative")
     val cutoff = new java.sql.Timestamp(nowMillis - ttlMillis)
-    val manifestAtStart = readManifest()
+    val manifestAtStart = tableLog.read()
     val all = logDFFor(manifestAtStart)
     // keep = young enough OR pinned by an unexpired kv-snapshot lease.
     // Offsets and timestamps are both commit-ordered per bucket, so the
@@ -1856,7 +1452,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       .collect()
     val dropped = stats.map(_.getLong(1)).sum
     if (dropped == 0L) return 0L
-    val nextOffsets = manifestAtStart._1
+    val nextOffsets = manifestAtStart.offsets
     val newFloors = stats.map { r =>
       val b = r.getInt(0)
       b -> (if (r.isNullAt(2)) nextOffsets.getOrElse(b, 0L) else r.getLong(2))
@@ -1870,84 +1466,24 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     } match { case a if a.nonEmpty => a.min; case _ => nowMillis }
     val mergedBound = math.max(newBound,
       readMarkerMillis(vacuumMarkerFile, "boundMillis").getOrElse(Long.MinValue))
-    val tmpDir = s"$path/log.expire"
+    val tmpDir = tableLog.stagingDir("expire")
     all.filter(keep)
       .write.mode("overwrite").options(fileWriteOptions)
       .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(tmpDir)
-    CatalogJson.atomicWrite(vacuumMarkerFile,
-      JsonMethods.compact(JsonMethods.render(JObject(List(
-        "boundMillis" -> (JInt(mergedBound): JValue),
-        "floorOffsets" -> (JObject(mergedFloors.toList.sortBy(_._1)
-          .map { case (k, v) => k.toString -> (JInt(v): JValue) }): JValue))))))
-    swapRewrittenLog(tmpDir, manifestAtStart, "expireLog")
+    writeVacuumMarker(mergedBound, mergedFloors)
+    tableLog.rewrite(manifestAtStart, tmpDir, "expireLog")(identity)
     dropped
   }
 
-  /** Publish tail shared by [[vacuumLog]] and [[rewriteLogFiles]]: under
-    * the commit lock, conflict-check against the pinned manifest — BOTH
-    * offsets and the committed-id set, because a concurrent vacuum or
-    * rewrite leaves offsets unchanged but always replaces the id set
-    * (offsets alone would let this op resurrect files the other one
-    * dropped) — then move the rewritten files in, flip visibility with
-    * ONE atomic manifest write whose id set is exactly the new commit's,
-    * and delete the now-invisible originals.
+  /** The log-start marker of [[vacuumLog]] and [[expireLog]]: the
+    * time-travel floor and the per-bucket first retained offsets.
     */
-  private def swapRewrittenLog(tmpDir: String,
-      manifestAtStart: (Map[Int, Long], Map[String, Long], Option[Set[String]]),
-      op: String,
-      newOffsets: Option[Map[Int, Long]] = None,
-      newHistory: Option[List[VersionEntry]] = None,
-      inLock: () => Unit = () => (),
-      blobOverride: Option[ColStatsUpdate] = None): Unit =
-    withCommitLock(Some(tmpDir)) {
-    val (bases, commits, ids, hist) = parseManifest()
-    if (bases != manifestAtStart._1 || ids != manifestAtStart._3) {
-      deleteTree(tmpDir)
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent commit detected on $path during $op: manifest " +
-          s"advanced since the rewrite was planned; retry $op()")
-    }
-    // op-specific conflict checks / tier maintenance (rollback's
-    // snapshot handling) — a failure here must not strand the staging
-    try inLock() catch { case t: Throwable => deleteTree(tmpDir); throw t }
-    // the staging must still EXIST (an aggressive removeOrphanFiles may
-    // have reclaimed it while we waited): publishing with a vanished
-    // staging would flip the id set to a commit with zero files and the
-    // residue sweep would then destroy the whole log. Abort instead —
-    // both paths run under the commit lock, so this check is race-free.
-    if (!WarehouseIO.exists(tmpDir))
-      throw new IllegalStateException(
-        s"staging $tmpDir vanished before the $op swap (reclaimed by " +
-          s"removeOrphanFiles?); retry $op()")
-    val newId = java.util.UUID.randomUUID().toString
-    moveStagedFiles(tmpDir, newId)
-    // blob posture: row REMOVAL (vacuum/expire) and same-row rewrites
-    // keep the blob a sound over-approximation — preserve. A BACKWARD
-    // offset flip (rollback) RESTORES older rows, which a post-compact
-    // EXACT blob may not cover; it must degrade (one-way) so the
-    // planner never serves under-approximating bounds for the restored
-    // state.
-    val finalOffsets = newOffsets.getOrElse(bases)
-    val rewound = bases.exists { case (b, o) =>
-      finalOffsets.getOrElse(b, 0L) < o }
-    // blobOverride: rebucket re-keys offsets into a NEW bucket space, so
-    // the backward-flip heuristic below reads as a rewind even though
-    // the row multiset is identical (bounds still cover every row) —
-    // the caller asserts preservation explicitly
-    val blobUpdate: ColStatsUpdate = blobOverride.getOrElse {
-      if (!rewound) PreserveColStats
-      else readColStatsBlob().map(b => PutColStats(b.copy(complete = false)))
-        .getOrElse(PreserveColStats)
-    }
-    writeManifest(finalOffsets, commits, Set(newId),
-      newHistory.getOrElse(hist), blobUpdate)
-    cleanUnmanifestedResidue(Set(newId))
-    // legacy un-prefixed files are not "residue"; remove them explicitly
-    WarehouseIO.walkFiles(logDir)
-      .filter(e => !e.isDir && e.name.endsWith(".parquet") &&
-        cidOf(e.name).isEmpty)
-      .foreach(e => WarehouseIO.deleteIfExists(e.path))
-  }
+  private def writeVacuumMarker(boundMillis: Long,
+      floors: Map[Int, Long]): Unit =
+    CatalogJson.atomicWrite(vacuumMarkerFile,
+      JsonMethods.compact(JsonMethods.render(JObject(List(
+        "boundMillis" -> (JInt(boundMillis): JValue),
+        "floorOffsets" -> Manifest.bucketJson(floors))))))
 
   /** In-place restore to recorded commit `v` — the Delta `RESTORE` /
     * Iceberg `rollback_to_snapshot` analog (the reference has no
@@ -1971,8 +1507,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * fresh checkpoints after a rollback (the standard restore caveat).
     */
   def rollbackTo(v: Long): Unit = {
-    val (offsetsNow, commitsNow, idsNow, hist) = parseManifest()
-    val manifestAtStart = (offsetsNow, commitsNow, idsNow)
+    val manifestAtStart = tableLog.read()
+    val hist = manifestAtStart.history
     require(hist.nonEmpty, s"table at $path has no recorded version history")
     val entry = hist.find(_.version == v).getOrElse(
       throw new IllegalArgumentException(
@@ -2007,22 +1543,28 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       }
     }
     snapshotGuard(act = false)
-    val tmpDir = s"$path/log.rollback-${java.util.UUID.randomUUID()}"
+    val tmpDir = tableLog.stagingDir("rollback")
     val retained = logDFFor(manifestAtStart)
       .filter(col(Meta.Offset) < bucketMapExpr(bound, 0L))
     retained.write.mode("overwrite").options(fileWriteOptions)
       .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(tmpDir)
-    swapRewrittenLog(tmpDir, manifestAtStart, s"rollbackTo($v)",
-      newOffsets = Some(bound),
-      newHistory = Some(hist.filter(_.version <= v)),
-      inLock = () => {
-        snapshotGuard(act = true)
-        // epoch bump BEFORE the manifest flip: a crash in between makes
-        // derived state (secondary indexes) rebuild unnecessarily — the
-        // fail-safe direction; the reverse order could leave an index
-        // silently serving undone rows after version numbers are reused
-        bumpRollbackEpoch()
-      })
+    tableLog.rewrite(manifestAtStart, tmpDir, s"rollbackTo($v)", () => {
+      snapshotGuard(act = true)
+      // epoch bump BEFORE the manifest flip: a crash in between makes
+      // derived state (secondary indexes) rebuild unnecessarily — the
+      // fail-safe direction; the reverse order could leave an index
+      // silently serving undone rows after version numbers are reused
+      bumpRollbackEpoch()
+    }) { m =>
+      // a BACKWARD offset flip RESTORES older rows, which a post-compact
+      // EXACT column-stats blob may not cover: it degrades (one-way) so
+      // the planner never serves under-approximating bounds. Row removal
+      // and same-row rewrites keep the blob a sound over-approximation.
+      val rewound = m.offsets.exists { case (b, o) => bound.getOrElse(b, 0L) < o }
+      m.copy(offsets = bound, history = m.history.filter(_.version <= v),
+        colStats =
+          if (rewound) m.colStats.map(_.copy(complete = false)) else m.colStats)
+    }
     GraftMetrics.inc(path, GraftMetrics.Rollbacks)
   }
 
@@ -2045,7 +1587,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * one rename, so an intent marker bridges them):
     *  1. under the commit lock, `_rebucket.json` publishes the intent,
     *     pinning the manifest id set; from here EVERY other mutator
-    *     refuses (the [[withCommitLock]] fence) until the marker clears;
+    *     refuses (the [[TableLog.withCommitLock]] fence) until the marker clears;
     *  2. the rewrite job + atomic swap: conflict check, rollback-epoch
     *     bump (derived secondary/vector indexes pin the epoch and now
     *     refuse-then-rebuild), snapshot tier dropped (its dirs are laid
@@ -2098,16 +1640,16 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // lock guarantees no commit is in flight, and from the marker's
     // rename on every other mutator refuses — so the id set can only be
     // changed by OUR swap, which is what recovery relies on
-    val (manifestAtStart, hist) = withCommitLock(None) {
-      val (o, c, ids, h) = parseManifest()
-      CatalogJson.atomicWrite(rebucketMarkerFile,
+    val manifestAtStart = tableLog.withCommitLock(None) {
+      val m = tableLog.read()
+      CatalogJson.atomicWrite(tableLog.rebucketMarker,
         JsonMethods.compact(JsonMethods.render(JObject(List(
           "to" -> (JInt(newBuckets): JValue),
-          "ids" -> ids.map(s => JArray(s.toList.sorted.map(JString(_)): List[JValue]))
+          "ids" -> m.ids.map(s => JArray(s.toList.sorted.map(JString(_)): List[JValue]))
             .getOrElse(JNull: JValue))))))
-      ((o, c, ids), h)
+      m
     }
-    GraftTable.inRebucket.set(java.lang.Boolean.TRUE)
+    TableLog.inRebucket.set(java.lang.Boolean.TRUE)
     var published = false
     try {
       // 2. the rewrite: re-hash, renumber, one hive-partitioned write.
@@ -2120,7 +1662,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       // renumbered table so write and counts shared one plan — a
       // transient second full copy of the table in executor storage,
       // intolerable at 100 TB.)
-      val tmpDir = s"$path/log.rebucket-${java.util.UUID.randomUUID()}"
+      val tmpDir = tableLog.stagingDir("rebucket")
       val keys = desc.effectiveBucketKeys
       val renumbered =
         if (stateSeeded) {
@@ -2160,12 +1702,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         .option("basePath", tmpDir).parquet(tmpDir)
         .groupBy(col(Meta.Bucket)).agg(count(lit(1)).as("n"))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      swapRewrittenLog(tmpDir, manifestAtStart, s"rebucketTo($newBuckets)",
-        newOffsets = Some(newOffsets),
-        newHistory = Some(List(VersionEntry(
-          hist.lastOption.map(_.version + 1).getOrElse(1L),
-          System.currentTimeMillis(), newOffsets))),
-        inLock = () => {
+      tableLog.rewrite(manifestAtStart, tmpDir, s"rebucketTo($newBuckets)",
+        () => {
           // meta FIRST, dir second — a crash between leaves an inert
           // orphan dir, never a meta pointing at a missing one (the
           // rollback snapshotGuard pattern)
@@ -2181,8 +1719,12 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           // rollback — indexes rebuild unnecessarily on a crash here,
           // never serve rows keyed to a vanished bucketing
           bumpRollbackEpoch()
-        },
-        blobOverride = Some(PreserveColStats))
+        }) { m =>
+        // the row multiset is identical, so the column-stats blob's
+        // bounds still cover every row and carry over unchanged
+        m.copy(offsets = newOffsets, history = List(VersionEntry(
+          m.nextVersion, System.currentTimeMillis(), newOffsets)))
+      }
       published = true
       // 3. descriptor flip + marker clear (replayed by recovery)
       finishRebucketMeta(newBuckets)
@@ -2190,9 +1732,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
       case t: Throwable =>
         // the swap is atomic: if it never published, the attempt left no
         // trace but the marker — drop it so the table unfences
-        if (!published) WarehouseIO.deleteIfExists(rebucketMarkerFile)
+        if (!published) WarehouseIO.deleteIfExists(tableLog.rebucketMarker)
         throw t
-    } finally GraftTable.inRebucket.set(java.lang.Boolean.FALSE)
+    } finally TableLog.inRebucket.set(java.lang.Boolean.FALSE)
   }
 
   /** Per-bucket live load — (files, bytes) across the committed-visible
@@ -2205,16 +1747,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * (≤ numBuckets entries).
     */
   def bucketLoadStats(): Map[Int, (Long, Long)] = {
-    val (latest, _, ids) = readManifest()
-    def tier(dir: String, gated: Boolean): Seq[(Int, Long)] =
-      WarehouseIO.walkFiles(dir)
-        .filter(e => !e.isDir && e.name.endsWith(".parquet"))
-        .filter(e => !gated ||
-          ids.forall(idSet => cidOf(e.name).forall(idSet.contains)))
-        .flatMap(e => "__bucket=(\\d+)".r.findFirstMatchIn(e.path)
-          .map(m => m.group(1).toInt -> e.len))
-    val logTier = tier(logDir, gated = true)
-    val snapTier = if (hasSnapshotTier) tier(snapshotDir, gated = false) else Nil
+    val m = tableLog.read()
+    def tier(files: Seq[(String, Long)]): Seq[(Int, Long)] =
+      files.flatMap { case (f, len) => "__bucket=(\\d+)".r.findFirstMatchIn(f)
+        .map(b => b.group(1).toInt -> len) }
+    val logTier = tier(tableLog.visible(m).files.map(f => f.path -> f.len))
+    val snapTier =
+      if (!hasSnapshotTier) Nil
+      else tier(WarehouseIO.walkFiles(snapshotDir)
+        .filter(e => !e.isDir && e.name.endsWith(".parquet")).map(e => e.path -> e.len))
     // LIVE load, not scannable bytes: a compacted, frequently-updated PK
     // table holds its live data twice (snapshot tier + the changelog
     // history below the cutoff), and summing both would have
@@ -2230,7 +1771,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         val floor = retainedFloorOffsets.getOrElse(Map.empty)
         b => {
           val lo = floor.getOrElse(b, 0L)
-          val hi = latest.getOrElse(b, 0L)
+          val hi = m.offsets.getOrElse(b, 0L)
           val retained = math.max(0L, hi - lo)
           val tail = math.max(0L, hi - math.max(lo, cut.getOrElse(b, 0L)))
           if (retained == 0L) 1.0 else tail.toDouble / retained
@@ -2294,7 +1835,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         CatalogJson.atomicWrite(metaFile,
           CatalogJson.write(d.copy(numBuckets = n)))
     }
-    WarehouseIO.deleteIfExists(rebucketMarkerFile)
+    WarehouseIO.deleteIfExists(tableLog.rebucketMarker)
   }
 
   /** Finish or abort a crashed [[rebucketTo]] (its marker fences all
@@ -2306,24 +1847,23 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * caller must re-open the table).
     */
   private[core] def completeCrashedRebucket(): Boolean = {
-    val mk = WarehouseIO.readStringIfExists(rebucketMarkerFile)
+    val mk = WarehouseIO.readStringIfExists(tableLog.rebucketMarker)
     if (mk.isEmpty) return false
     val obj = JsonMethods.parse(mk.get).asInstanceOf[JObject].obj.toMap
     val to = obj("to").asInstanceOf[JInt].num.toInt
     val markerIds: Option[Set[String]] = obj.get("ids").collect {
       case a: JArray => a.arr.map(_.asInstanceOf[JString].s).toSet
     }
-    GraftTable.inRebucket.set(java.lang.Boolean.TRUE)
-    try withCommitLock(None) {
-      val (_, _, ids) = readManifest()
-      if (ids == markerIds) {
-        WarehouseIO.deleteIfExists(rebucketMarkerFile)
+    TableLog.inRebucket.set(java.lang.Boolean.TRUE)
+    try tableLog.withCommitLock(None) {
+      if (tableLog.read().ids == markerIds) {
+        WarehouseIO.deleteIfExists(tableLog.rebucketMarker)
         false
       } else {
         finishRebucketMeta(to)
         true
       }
-    } finally GraftTable.inRebucket.set(java.lang.Boolean.FALSE)
+    } finally TableLog.inRebucket.set(java.lang.Boolean.FALSE)
   }
 
   /** Drop ALL rows and log/snapshot state back to an empty table (the
@@ -2332,12 +1872,14 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * upsert alone cannot remove entries whose index values vanished
     * with the undone commits.
     */
-  private[core] def truncate(): Unit = withCommitLock(None) {
+  private[core] def truncate(): Unit = tableLog.withCommitLock(None) {
+    val counter = tableLog.read().nextAutoInc
     deleteTree(logDir)
     WarehouseIO.mkdirs(logDir)
     deleteTree(snapshotDir)
-    Seq(offsetsFile, snapshotMetaFile, vacuumMarkerFile,
-      retentionMarkerFile).foreach(WarehouseIO.deleteIfExists)
+    tableLog.write(Manifest.Empty.copy(nextAutoInc = counter))
+    Seq(snapshotMetaFile, vacuumMarkerFile, retentionMarkerFile)
+      .foreach(WarehouseIO.deleteIfExists)
   }
 
   /** Monotonic count of in-place restores — derived state (secondary
@@ -2374,8 +1916,8 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     */
   def rewriteLogFiles(maxRecordsPerFile: Long = 0L,
       zorderBy: Seq[String] = Nil, zorderBits: Int = 16): Unit = {
-    val tmpDir = s"$path/log.rewrite-${java.util.UUID.randomUUID()}"
-    val manifestAtStart = readManifest()
+    val tmpDir = tableLog.stagingDir("rewrite")
+    val manifestAtStart = tableLog.read()
     val retained = logDFFor(manifestAtStart)
     // one shuffle keyed by the dir layout: each (partition, bucket) lands
     // in one task -> one output file per dir (plus maxRecordsPerFile splits)
@@ -2395,7 +1937,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     laid.write.mode("overwrite").options(fileWriteOptions)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy((desc.partitionKeys :+ Meta.Bucket): _*).parquet(tmpDir)
-    swapRewrittenLog(tmpDir, manifestAtStart, "rewriteLogFiles")
+    tableLog.rewrite(manifestAtStart, tmpDir, "rewriteLogFiles")(identity)
     GraftMetrics.inc(path, GraftMetrics.Rewrites)
   }
 
@@ -2854,7 +2396,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   private def touchedBuckets(keyRows: DataFrame): Option[Seq[Int]] = {
     val keys = desc.effectiveBucketKeys
     if (keys.isEmpty || !keys.forall(keyRows.columns.contains) ||
-        bucketPruneUnsafe || (readOffsets().isEmpty && readSnapshotMeta().isEmpty))
+        bucketPruneUnsafe || (tableLog.read().offsets.isEmpty && readSnapshotMeta().isEmpty))
       return None
     val bucket = Buckets.column(
       keys.map(k => col(k).cast(desc.schema(k).dataType)), desc.numBuckets)
@@ -2894,7 +2436,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   def offsetsAtVersion(v: Long): Map[Int, Long] =
     if (v == 0L) Map.empty
     else {
-      val hist = readVersionHistory()
+      val hist = tableLog.read().history
       require(hist.nonEmpty, s"table at $path has no recorded version history")
       hist.find(_.version == v).map(_.offsets)
         .getOrElse(throw new IllegalArgumentException(
@@ -2963,7 +2505,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
           s"${gaps.keys.toSeq.sorted.mkString(",")}; " +
           "that window is no longer replayable")
     }
-    val cur = readOffsets()
+    val cur = tableLog.read().offsets
     if (!cur.exists { case (b, o) => o > offsets.getOrElse(b, 0L) }) return 0L
     // +U is skipped BEFORE the first-change aggregate (UndoComputer.java:83):
     // its paired -U carries the pre-image the undo must restore and
@@ -3197,7 +2739,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * scan's file index does; no Spark job). Feeds the `detail`
     * metadata table.
     */
-  def logFileCount: Long = visibleLogFiles()._1.size.toLong
+  def logFileCount: Long = tableLog.visible().files.size.toLong
 
   /** A8 table stats (TabletService.getTableStats / TableStats.java:32). */
   def stats(): DataFrame = scan().agg(count(lit(1)).as("n_rows"))
@@ -3212,13 +2754,9 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * does anyway.
     */
   def plannerStats(): (Long, Option[Long]) = {
-    def dirBytes(dir: String): Long =
-      WarehouseIO.walkFiles(dir)
+    val bytes = tableLog.visible().files.map(_.len).sum +
+      WarehouseIO.walkFiles(snapshotDir)
         .filter(e => !e.isDir && e.name.endsWith(".parquet")).map(_.len).sum
-    val (files, _) = visibleLogFiles()
-    val bytes = files.map(f =>
-      try WarehouseIO.size(f) catch { case _: Exception => 0L }).sum +
-      dirBytes(snapshotDir)
     val rows =
       if (!desc.isPrimaryKeyTable && desc.partitionKeys.isEmpty) Some(fastCount)
       else None
@@ -3235,13 +2773,13 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * cache keyed on this can never serve a plan built over stale state.
     */
   private[graft] def planningStateKey: ((Long, Long), (Long, Long)) =
-    (WarehouseIO.statIdentity(offsetsFile),
+    (WarehouseIO.statIdentity(tableLog.manifestFile),
       WarehouseIO.statIdentity(snapshotMetaFile))
 
   private[graft] def plannerBytesCached: Long = {
     if (GraftTable.bytesCache.size > 512) GraftTable.bytesCache.clear()
     GraftTable.bytesCache.computeIfAbsent(
-      (path, WarehouseIO.statIdentity(offsetsFile),
+      (path, WarehouseIO.statIdentity(tableLog.manifestFile),
         WarehouseIO.statIdentity(snapshotMetaFile)),
       _ => plannerStats()._1)
   }
@@ -3270,14 +2808,15 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
   def columnPlannerStats(): Map[String, FooterStats.ColStats] = {
     val cols = FooterStats.statableColumns(StructType(
       desc.schema.fields.filterNot(f => desc.partitionKeys.contains(f.name))))
-    FooterStats.cached((path, WarehouseIO.statIdentity(offsetsFile),
+    FooterStats.cached((path, WarehouseIO.statIdentity(tableLog.manifestFile),
         WarehouseIO.statIdentity(snapshotMetaFile))) {
-      val fromBlob = readColStatsBlob()
+      val m = tableLog.read()
+      val fromBlob = m.colStats
         .filter(_.complete)
         .map(b => ManifestColStats.toColStats(b, StructType(desc.schema
           .fields.filterNot(f => desc.partitionKeys.contains(f.name)))))
       val base = fromBlob.getOrElse {
-        val files = visibleLogFiles()._1 ++
+        val files = tableLog.visible(m).files.map(_.path) ++
           WarehouseIO.walkFiles(snapshotDir)
             .filter(e => !e.isDir && e.name.endsWith(".parquet")).map(_.path)
         if (cols.isEmpty || files.isEmpty ||
@@ -3311,14 +2850,12 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     instrumented.write.format("noop").mode("overwrite").save()
     val entries = fetch().getOrElse(throw new IllegalStateException(
       s"analyzeColumnStats on $path: stats observation failed"))
-    withCommitLock(None) {
+    tableLog.withCommitLock(None) {
       if (planningStateKey != stateBefore)
         throw new java.util.ConcurrentModificationException(
           s"a commit landed on $path during analyzeColumnStats(); retry")
-      val (m, commits, ids, hist) = parseManifest()
-      writeManifest(m, commits, ids.getOrElse(Set.empty), hist,
-        PutColStats(ManifestColStats.Blob(complete = true, Map.empty)
-          .merge(entries)))
+      tableLog.write(tableLog.read().copy(colStats = Some(
+        ManifestColStats.Blob(complete = true, Map.empty).merge(entries))))
     }
   }
 
@@ -3374,7 +2911,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     // advances the floor, so the metadata count stays exact after
     // retention — offsets alone would keep counting purged rows
     val floors = retainedFloorOffsets.getOrElse(Map.empty)
-    readOffsets().map { case (b, next) =>
+    tableLog.read().offsets.map { case (b, next) =>
       next - floors.getOrElse(b, 0L) }.sum
   }
 
@@ -3398,7 +2935,7 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
         "would need the merge; use scan().agg(...))")
     require(desc.schema.fieldNames.contains(column),
       s"no such data column $column")
-    val (files, _) = visibleLogFiles()
+    val files = tableLog.visible().files.map(_.path)
     if (files.isEmpty) return None
     // tasks NEVER throw for a stats-less chunk — an executor exception
     // would reach the driver wrapped in SparkException and callers could
@@ -3693,19 +3230,10 @@ final class GraftTable(val path: String, val desc: TableDescriptor,
     * meta.json read beside it.
     */
   private[graft] def bucketPruneUnsafe: Boolean =
-    WarehouseIO.exists(rebucketMarkerFile)
+    WarehouseIO.exists(tableLog.rebucketMarker)
 }
 
 object GraftTable {
-
-  /** Exemption flag for the rebucket fences in `withCommitLock`: the
-    * rebucket flow itself must commit THROUGH its own marker (and
-    * through the temporarily stale meta.json) — everyone else refuses.
-    * Thread-local because the fence must hold across tables and
-    * sessions sharing a JVM.
-    */
-  private[core] val inRebucket: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** (path, manifest (mtime,len), snapshot (mtime,len)) → visible bytes;
     * see [[GraftTable.plannerBytesCached]]. Bounded like FooterStats'
@@ -3734,9 +3262,7 @@ object GraftTable {
     * map — ONE parser for every reader of the tier bookkeeping tag.
     */
   private[graft] def parseTierOffsets(s: String): Map[Int, Long] =
-    JsonMethods.parse(s).asInstanceOf[JObject].obj
-      .map { case (k, v) => k.toInt -> v.asInstanceOf[JInt].num.toLong }
-      .toMap
+    Manifest.bucketMap(JsonMethods.parse(s))
 
   /** Iceberg snapshot-summary key holding the pinned source version. */
   val TierVersionKey = "graft-source-version"

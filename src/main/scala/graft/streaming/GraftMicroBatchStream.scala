@@ -9,7 +9,7 @@ import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{GraftTable, Meta, WarehouseIO}
+import graft.core.{GraftTable, LogFile, Meta, WarehouseIO}
 
 /** Native DSv2 micro-batch stream over a graft table's log — what
   * `spark.readStream.table("cat.db.t")` rides (the reference's
@@ -131,7 +131,7 @@ final class GraftMicroBatchStream(table: GraftTable,
       .map(planSeedPartitions(_, from)).getOrElse(Nil)
     val logDir = table.logDirPath
     val spark = table.sparkSession
-    val windows = table.visibleLogFileEntries().flatMap { case (path, len) =>
+    val windows = table.tableLog.visible().files.flatMap { case LogFile(path, len, _) =>
       val kvs = graft.core.HiveDirValues.kvsOf(
         WarehouseIO.relativize(logDir, path))
       val bucket = kvs.getOrElse(Meta.Bucket,

@@ -159,7 +159,7 @@ class CboStatsSpec extends SparkTestBase {
     val t = new graft.core.Catalog(
       spark.conf.get("spark.sql.catalog.cbo.warehouse"), spark)
       .getTable("db", "bigdim")
-    val blob = t.readColStatsBlob()
+    val blob = t.tableLog.read().colStats
     assert(blob.exists(_.complete), "9 empty-start commits must keep a " +
       s"complete blob: $blob")
     val opensBefore = graft.core.FooterStats.filesOpened.get()
@@ -223,7 +223,7 @@ class CboStatsSpec extends SparkTestBase {
     t.append(df, orderBy = Seq(df("k")))
     // disabled at write time -> no complete blob; footer sweep serves
     // int/long bounds (2 files, under the cap), no string entry
-    assert(!t.readColStatsBlob().exists(_.complete))
+    assert(!t.tableLog.read().colStats.exists(_.complete))
     val before = t.columnPlannerStats()
     assert(before("k").min == 0L && before("k").ndv.isEmpty, before("k"))
     assert(!before.contains("s"))
@@ -232,7 +232,7 @@ class CboStatsSpec extends SparkTestBase {
     val msg = spark.sql(
       "CALL cbo.system.analyze_column_stats('db.legacy')").collect()
     assert(msg.head.getString(0).contains("rebuilt"), msg.head)
-    assert(t.readColStatsBlob().exists(_.complete))
+    assert(t.tableLog.read().colStats.exists(_.complete))
     val after = t.columnPlannerStats()
     assert(after("k").min == 0L && after("k").max == 999L)
     assert(after("k").ndv.exists(n => n > 950 && n < 1050), after("k"))
@@ -265,7 +265,7 @@ class CboStatsSpec extends SparkTestBase {
     assert(fresh.ndv.exists(n => n > 95 && n < 105),
       s"post-compact NDV must be the LIVE count: ${fresh.ndv}")
     assert(fresh.min == 5000 && fresh.max == 5099, fresh)
-    assert(t.readColStatsBlob().exists(_.complete))
+    assert(t.tableLog.read().colStats.exists(_.complete))
     // and the table still reads exactly
     assert(t.scan().count() == 100L)
   }
@@ -290,7 +290,7 @@ class CboStatsSpec extends SparkTestBase {
     t.compact() // EXACT blob of the live state: v bounds [5000, 5099]
     assert(t.columnPlannerStats()("v").min == 5000)
     t.rollbackTo(1) // restores v in [0, 99] — outside the exact blob
-    assert(!t.readColStatsBlob().exists(_.complete),
+    assert(!t.tableLog.read().colStats.exists(_.complete),
       "a backward offset flip must degrade the exact blob (one-way)")
     // the footer fallback serves the TRUE restored bounds
     val v = t.columnPlannerStats()("v")
@@ -323,7 +323,7 @@ class CboStatsSpec extends SparkTestBase {
     // live values; NDV may overcount) — estimates stay sound, results
     // exact
     val s2 = t.columnPlannerStats()("k")
-    assert(s2.max == 299L && t.readColStatsBlob().exists(_.complete))
+    assert(s2.max == 299L && t.tableLog.read().colStats.exists(_.complete))
     assert(t.scan().count() == 290L)
   }
 

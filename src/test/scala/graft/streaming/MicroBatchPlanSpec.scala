@@ -49,7 +49,7 @@ class MicroBatchPlanSpec extends SparkTestBase {
   test("same-bucket files group into single-bucket partitions, " +
       "all files covered exactly once") {
     val t = logTable(buckets = 4)
-    val visible = t.visibleLogFileEntries().map(_._1).toSet
+    val visible = t.tableLog.visible().files.map(_.path).toSet
     assert(visible.size >= 12, s"expected many small files: $visible")
     val parts = plan(t)
     // every partition holds files of ONE bucket
